@@ -40,8 +40,7 @@ HEADLINE = [
     "events_sliding",
     "events_session",
     # round-10 addition: the composed flagship — measured per-round so
-    # the composition's cost curve is tracked, not just its members';
-    # common_vs_prev keeps the growing set comparable round-over-round
+    # the composition's cost curve is tracked, not just its members'
     "training_pipeline_e2e",
     # round-11 addition: the composed serving lifecycle (chunk store →
     # cache-aside embed → index → ranked kNN serve). The streaming
@@ -202,9 +201,6 @@ def main():
         round(sum(pt.values()), 3) for pt in per_pass
     ]
     full["action_floor"] = floor_per_pass
-    prev = _common_vs_prev(timings, timings_min, full["sf"])
-    if prev is not None:
-        full["common_vs_prev"] = prev
 
     root = os.path.dirname(os.path.abspath(__file__))
     full_path = os.path.join(root, "BENCH_FULL_LATEST.json")
@@ -219,12 +215,10 @@ def main():
 
 
 def _compact_line(full: dict) -> str:
-    """Compact stdout summary: headline value, per-query medians, noise
-    ceiling, and the like-for-like prev comparison WITHOUT its query
-    name list (the list is reconstructable as the intersection and was
-    ~450 chars of the r11 overflow). Budget-guarded: if future headline
-    growth pushes past the capture window, drop fields in documented
-    order rather than truncate mid-JSON. Hard budget 1800 chars — the
+    """Compact stdout summary: headline value, per-query medians and the
+    noise ceiling. Budget-guarded: if future headline growth pushes
+    past the capture window, drop fields in documented order rather
+    than truncate mid-JSON. Hard budget 1800 chars — the
     driver's tail capture is 2000 and the line must survive even with
     a stray warning prefix in the same window."""
     out = {
@@ -247,119 +241,13 @@ def _compact_line(full: dict) -> str:
         out["action_floor"] = full["action_floor"]
     if "cold_value" in full:
         out["cold_value"] = full["cold_value"]
-    if "common_vs_prev" in full:
-        cvp = dict(full["common_vs_prev"])
-        cvp["n_common"] = len(cvp.pop("queries", []))
-        out["common_vs_prev"] = cvp
     line = json.dumps(out)
-    for drop in ("queries", "common_vs_prev", "noise"):
+    for drop in ("queries", "noise"):
         if len(line) <= 1800:
             break
         out.pop(drop, None)
         line = json.dumps(out)
     return line
-
-
-def _common_vs_prev(
-    timings: dict[str, float], timings_min: dict[str, float], sf
-) -> dict | None:
-    """Like-for-like comparison against the newest BENCH_r*.json
-    (VERDICT r9 item 3): headline sets grow round over round, so the
-    raw totals stop being comparable the moment a query joins the set.
-    This restricts both rounds to the INTERSECTION of query names and
-    publishes subtotal/ratio/worst_regression so regressions
-    adjudicate themselves instead of living in BENCH_NOTES prose.
-    Returns None when no prior same-SF warm timings exist.
-
-    Basis (VERDICT r10 item 1): r1-r10 files published min-of-3 as
-    `queries`; from r11 `queries` is the median and `queries_min` the
-    floor. To stay like-for-like, the ratio compares medians when the
-    baseline carries them (new format) and min-vs-min against an old
-    file — the `basis` field says which.
-
-    Baseline = the newest recorded round. Caveat: a LOCAL re-run after
-    the current round's BENCH file lands would compare the round
-    against itself (ratio ~1.0) — `prev_file` in the output makes that
-    visible, and SPARK_GRAFT_BENCH_BASELINE=<file> pins an explicit
-    baseline for mid-round iteration."""
-    import glob
-    import re
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    pinned = os.environ.get("SPARK_GRAFT_BENCH_BASELINE")
-    if pinned:
-        # ADVICE r10: use the pinned path verbatim — basename-joining
-        # silently swapped in a same-named file under the repo root.
-        pinned_abs = os.path.abspath(pinned)
-        if not os.path.exists(pinned_abs):
-            raise FileNotFoundError(
-                f"SPARK_GRAFT_BENCH_BASELINE={pinned} does not exist"
-            )
-        cands = [(0, 0, pinned_abs)]
-    else:
-        # Driver artifacts (BENCH_r<N>.json) and builder-recorded
-        # baselines (BENCH_LOCAL_r<N>.json — e.g. the judge's complete
-        # r11 medians after the driver's r11 tail truncated). Within a
-        # round the driver file wins; an unparseable one (r11's
-        # `parsed: null`) falls through to the local file, then to the
-        # previous round.
-        cands = []
-        for f in glob.glob(os.path.join(root, "BENCH_r*.json")):
-            m = re.search(r"BENCH_r(\d+)\.json$", f)
-            if m:
-                cands.append((int(m.group(1)), 1, f))
-        for f in glob.glob(os.path.join(root, "BENCH_LOCAL_r*.json")):
-            m = re.search(r"BENCH_LOCAL_r(\d+)\.json$", f)
-            if m:
-                cands.append((int(m.group(1)), 0, f))
-    for _, _, f in sorted(cands, reverse=True):
-        try:
-            with open(f) as fh:
-                data = json.load(fh)
-        except Exception:
-            continue
-        if not isinstance(data, dict):
-            continue
-        # VERDICT r11 finding 1b: `parsed` may EXIST and be null (the
-        # driver records the truncated-tail failure that way) — treat
-        # any non-dict as "no usable record here" and keep walking,
-        # never AttributeError on the newest file.
-        parsed = data.get("parsed", data)
-        if not isinstance(parsed, dict):
-            continue
-        prev_q = parsed.get("queries")
-        if not isinstance(prev_q, dict) or parsed.get("sf") != sf:
-            continue
-        # New-format baseline publishes medians in `queries` — flagged
-        # by `noise.stat == "median"` (present in the compact stdout
-        # line, so a DRIVER-captured r12+ file self-identifies) or by
-        # a `queries_min` dict (the full/side-file form). Old r1-r10
-        # files carry neither and hold min-of-N.
-        noise = parsed.get("noise")
-        is_median = (
-            isinstance(noise, dict) and noise.get("stat") == "median"
-        ) or isinstance(parsed.get("queries_min"), dict)
-        if is_median:
-            cur_q, basis = timings, "median"
-        else:
-            cur_q, basis = timings_min, "min"
-        common = sorted(set(prev_q) & set(cur_q))
-        if not common:
-            continue
-        cur_sub = round(sum(cur_q[q] for q in common), 3)
-        prev_sub = round(sum(prev_q[q] for q in common), 3)
-        deltas = {q: round(cur_q[q] - prev_q[q], 3) for q in common}
-        worst = max(common, key=lambda q: deltas[q])
-        return {
-            "prev_file": os.path.basename(f),
-            "basis": basis,
-            "queries": common,
-            "subtotal": cur_sub,
-            "prev_subtotal": prev_sub,
-            "ratio": round(cur_sub / prev_sub, 3) if prev_sub else None,
-            "worst_regression": {"query": worst, "delta_sec": deltas[worst]},
-        }
-    return None
 
 
 if __name__ == "__main__":

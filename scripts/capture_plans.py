@@ -1,12 +1,12 @@
 #!/usr/bin/env python3
-"""Capture .explain("formatted") for ARBITRARY registry keys (r13).
+"""Capture .explain("formatted") for any registry keys.
 
-Usage: python scripts/r13_capture_plans.py <suffix> [query ...]
-Writes plans/r13/<query>_<suffix>.txt (suffix = before|after).
-With no query list, captures every headline bench query (the r12
-behavior). Non-headline keys are accepted by registry name — the r13
-round touches long-tail keys (TF/DF chains, winnow paths) that never
-appear in bench.HEADLINE.
+Usage: python scripts/capture_plans.py <suffix> [query ...]
+Writes plans/<query>_<suffix>.txt (suffix = before|after).
+With no query list, captures every headline bench query
+(bench.HEADLINE); any other key is accepted by registry name.
+Compositions execute their eager stage checkpoints during build; the
+captured plan is the final (census) frame's.
 """
 
 from __future__ import annotations
@@ -30,12 +30,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_TABLE_CACHE", "1")
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r13",
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans"
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("r13-plan-capture")
+    spark = get_spark("plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
     qmap = registry.queries()
     for name in names:

@@ -1,17 +1,16 @@
 #!/usr/bin/env python3
-"""Cross-session determinism audit for the driver verification window.
+"""Cross-session determinism audit over every registered key.
 
-The correctness driver builds its OWN SparkSession (unknown master /
+A caller may build its OWN SparkSession (unknown master /
 shuffle-partition count), so any key whose values depend on partition
 layout — double summation order, unstable top-k ties, Arrow batch
 boundaries leaking into results — would pass single-session oracle
-parity locally and still go red driver-side. This script runs every
-unverified (window) key under two deliberately different session shapes
+parity locally and still go red in that session. This script runs every
+registered key under two deliberately different session shapes
 (local[4] x 7 shuffle partitions vs local[8] x 13) and compares the
 full sorted value sets.
 
 Run: python scripts/determinism_audit.py   (exit 0 = all deterministic)
-Round-4 result: ALL 38 window keys deterministic.
 """
 
 from __future__ import annotations
@@ -60,15 +59,13 @@ def _run(master: str, shuffle: int, keys: list[str]) -> dict:
 def main() -> int:
     from data_pipeline2_spark import registry
 
-    qs = list(registry.queries())
-    parked = registry._driver_verified_keys() - registry._RECHECK
-    window = [k for k in qs if k not in parked]
-    print(f"# auditing {len(window)} unverified window keys", file=sys.stderr)
+    keys = list(registry.queries())
+    print(f"# auditing {len(keys)} registered keys", file=sys.stderr)
 
-    a = _run("local[4]", 7, window)
-    b = _run("local[8]", 13, window)
+    a = _run("local[4]", 7, keys)
+    b = _run("local[8]", 13, keys)
     bad = []
-    for k in window:
+    for k in keys:
         va, vb = a[k], b[k]
         if isinstance(va, str) or isinstance(vb, str):
             # a key failing under either session is broken, not
@@ -84,7 +81,7 @@ def main() -> int:
         for label, k, x, y in bad:
             print(f"{label}: {k} | {x} | {y}")
         return 1
-    print(f"ALL {len(window)} WINDOW KEYS DETERMINISTIC ACROSS SESSION SHAPES")
+    print(f"ALL {len(keys)} KEYS DETERMINISTIC ACROSS SESSION SHAPES")
     return 0
 
 

@@ -2,10 +2,11 @@
 """Time + plan-audit EVERY registry key (the optimization-round
 checklist): per-key wall seconds at a small SF and plan smells
 (CartesianProduct, row-at-a-time BatchEvalPython, exchange count,
-join strategies). Emits one JSON file sorted by cost so the round's
-effort lands on the operators that actually pay.
+join strategies) plus the Spark job count per key. Emits one JSON file
+sorted by cost so optimization effort lands on the operators that
+actually pay.
 
-Usage: python scripts/r12_registry_sweep.py [sf_dir] [out.json]
+Usage: python scripts/registry_sweep.py [sf_dir] [out.json]
 """
 
 from __future__ import annotations
@@ -26,22 +27,25 @@ from data_pipeline2_spark.session import get_spark  # noqa: E402
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/r12_sweep.json"
+    out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/registry_sweep.json"
     os.environ.setdefault("SPARK_GRAFT_TABLE_CACHE", "1")
-    spark = get_spark("r12-registry-sweep")
+    spark = get_spark("registry-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     qmap = registry.queries()
+    st = spark.sparkContext.statusTracker()
     results: dict[str, dict] = {}
     for i, name in enumerate(sorted(qmap)):
         spark.sparkContext.setJobDescription(f"sweep: {name}")
         rec: dict = {}
         try:
+            jb = max(st.getJobIdsForGroup() or [0])
             t0 = time.perf_counter()
             df = qmap[name](spark, sf_dir)
             rec["build_s"] = round(time.perf_counter() - t0, 3)
             t0 = time.perf_counter()
             rec["rows"] = df.count()
             rec["exec_s"] = round(time.perf_counter() - t0, 3)
+            rec["jobs"] = max(st.getJobIdsForGroup() or [0]) - jb
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")

@@ -5,7 +5,7 @@ Times each stage frame of training_pipeline_e2e / semantic_search_e2e
 in isolation (noop-sink execution per guide §1.4) so optimization
 targets the member that actually costs, not the composition label.
 
-Usage: python scripts/r12_stage_profile.py [training|serving] [reps]
+Usage: python scripts/stage_profile.py [training|serving] [reps]
 """
 
 from __future__ import annotations
@@ -65,7 +65,7 @@ def main() -> None:
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_TABLE_CACHE", "1")
-    spark = get_spark("r12-stage-profile")
+    spark = get_spark("stage-profile")
     spark.sparkContext.setLogLevel("ERROR")
     docs = load_table(spark, sf_dir, "documents")
     docs.count()  # warm table cache

@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
-"""Time specific registry keys (warm, N reps, median) — the r13 A/B
-harness. Run alternately from the baseline worktree and the working
+"""Time specific registry keys (warm, N reps, median) — the A/B
+harness. Run alternately from a baseline checkout and the working
 tree in the same machine window for a same-window A/B pair.
 
-Usage: python scripts/r13_time_keys.py <sf_dir> <reps> key [key ...]
+Usage: python scripts/time_keys.py <sf_dir> <reps> key [key ...]
 Prints one line per key: median + all rep times.
 """
 
@@ -24,7 +24,7 @@ def main() -> None:
     reps = int(sys.argv[2])
     keys = sys.argv[3:]
     os.environ.setdefault("SPARK_GRAFT_TABLE_CACHE", "1")
-    spark = get_spark("r13-ab")
+    spark = get_spark("time-keys")
     spark.sparkContext.setLogLevel("ERROR")
     qmap = registry.queries()
     # warm-up pass (JIT/codegen + table cache)

@@ -8,8 +8,9 @@ import os
 
 from data_pipeline2_spark import registry
 
-COVERAGE = os.path.join(registry._REPO_ROOT, "COVERAGE.md")
-README = os.path.join(registry._REPO_ROOT, "README.md")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+COVERAGE = os.path.join(_ROOT, "COVERAGE.md")
+README = os.path.join(_ROOT, "README.md")
 
 
 def test_every_registry_key_documented():

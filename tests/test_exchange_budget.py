@@ -39,8 +39,91 @@ BUDGET = {
     "quality_score": 0,          # pure projection
     "text_stats": 2,             # agg + ordering
     "events_tumbling": 1,
-    "events_sliding": 1,
+    "events_sliding": 2,         # slot pre-aggregation exchange (7e2003b)
+                                 # + the per-window sum over slots
     "events_session": 1,
+    # round-5 operators: budgets measured at introduction (see
+    # BENCH_NOTES round-5 notes for the market_basket/source_overlap
+    # rewrites that set these numbers)
+    "gopher_quality": 0,        # map-only
+    "c4_quality": 0,
+    "url_stats": 0,
+    "curation_report": 1,       # fused scan + one tiny aggregation
+    "dup_line_stats": 2,        # line-fingerprint agg + per-doc rollup
+    "token_rarity": 2,          # unigram agg + per-doc join-agg
+    "vocab_stats": 1,
+    "source_overlap": 3,        # groupBy(sh64) + sizes + pair counts
+    "merge_upsert": 2,          # changeset window + full-outer apply
+    "events_ewma": 1,           # one user window, 8 lags share it
+    "events_top_paths": 2,      # user window + path counts
+    "market_basket": 7,         # baskets + pairs + per-part + 2 joins + sort
+    "heavy_hitters_sketch": 2,  # candidate semi-join + exact count
+    "embedding_dim_stats": 1,
+    "vector_quantize_int8": 2,  # range agg + per-vec rollup
+    # late round-5 keys (eager localCheckpoints truncate some plans: the
+    # measured count covers the final, post-checkpoint stage)
+    "bm25_batch": 8,            # shared postings + per-query window
+    "hybrid_search_batch": 12,  # both legs + fusion + final window
+    "dedup_lsh_eval": 12,       # exact + LSH pipelines + overlap joins
+    "knn_batch_sq8": 7,         # candidate window + rerank joins
+    "lsh_tuning_curve": 0,      # pure expression table
+    "multimodal_audio_resample": 0,  # map-only codec roundtrip
+    "pca_project": 0,           # driver fit + map-side projection
+    "semantic_dedup_clusters": 0,  # CC runs eagerly behind checkpoints
+    "mix_token_allocation": 2,  # token-count agg + full-outer join
+                                # (FULL OUTER cannot broadcast)
+    # round 6 (VERDICT r5 items 1+4): every remaining top-10 key from
+    # the x10 wall table plus the re-sharded packing exports. The IVF
+    # plans count the FINAL assignment/probe stages (the fixed-iteration
+    # fit runs eagerly, its per-round exchanges are O(k*dim) metadata,
+    # not corpus).
+    "knn_batch_ivf_exact": 5,   # assign window + probe window + rescore joins
+    "knn_batch_ivf": 5,         # same plan at n_probe=3
+    "knn_batch_lsh": 1,         # sig hash join (broadcast q) + top-k window
+    "knn_batch_ivfpq": 7,       # coarse IVF + ADC rank + exact rerank
+    "dup_graph_triangles": 4,   # minhash bands + verify + 2 pair joins
+    "pretrain_pack": 1,         # ONE per-source window (was a global
+                                # single-task window before r6)
+    "dataset_interleave": 2,    # per-(shard,source) pos + per-shard seq
+    # round-6 NEW operators: budgets measured at introduction. The
+    # CC-based and IVM keys count their full self-check plans
+    # (leakage_safe_split includes the pair verify + split joins behind
+    # eager checkpoints; ivm_agg_delta includes the recompute arm that
+    # production drops).
+    "strip_boilerplate": 3,     # line agg + boiler distinct + join-back
+    "unigram_logprob": 3,       # unigram agg + per-doc join-agg
+    "url_canonicalize": 1,      # ONE groupBy on the canonical key
+    "dedup_containment": 3,     # sig agg + band join + containment verify
+    "leakage_safe_split": 13,   # minhash verify + CC labels + split joins
+    "ivm_agg_delta": 8,         # delta algebra + IVM merge + recompute arm
+    "zorder_layout": 1,         # one groupBy on the z-range (key is map-side)
+    "image_ahash": 0,           # map-only decode + hash
+    "image_ahash_pairs": 2,     # r7: banded LSH equi-join + pair distinct
+                                # (replaced the r6 all-pairs crossJoin —
+                                # sub-quadratic beats exchange-free here)
+    # round-10 keys: budgets measured at introduction. The composed
+    # pipeline's census plan is post-checkpoint lineage (stage-survivor
+    # manifests truncate upstream operator trees), so its budget covers
+    # the semi-join counts + chunk/pack aggregates, not the member
+    # operators — those carry their own budgets above.
+    # ivf_index_stream's returned plan is the layout read-back dedup;
+    # the stream side is foreachBatch (measured in SCALE.md: sub-MB
+    # shuffle at x1 and x10).
+    "training_pipeline_e2e": 4,
+    "ivf_index_stream": 1,
+    "dedup_bbit_minhash": 4,  # bit-match join (post-checkpoint sigs,
+    # 2) + exact-verify array pack + pair join against it
+    # round-11 keys: the serving composition's census is post-checkpoint
+    # lineage (chunk store / embedding cache / vector index materialize
+    # once); what remains is the cache probe/miss id joins (broadcast at
+    # this scale), the one-row census aggregates, and the <= k ranking
+    # window — one hash exchange measured at introduction.
+    "semantic_search_e2e": 1,
+    # the continuous-ingest composition: stream side is foreachBatch
+    # (map-only chunk/embed/assign + partitioned append, measured in
+    # SCALE.md); the returned serve plan is the pruned cell scan +
+    # dedup + the <= k ranking window — one hash exchange
+    "streaming_search_e2e": 1,
 }
 
 
@@ -58,112 +141,6 @@ def test_exchange_budget(name, spark):
     assert n <= BUDGET[name], (
         f"{name}: plan has {n} hash/range exchanges, budget is "
         f"{BUDGET[name]} — a new shuffle entered this query's plan"
-    )
-
-
-# round-5 operators: budgets measured at introduction (see BENCH_NOTES
-# round-5 notes for the market_basket/source_overlap rewrites that set
-# these numbers)
-BUDGET_R5 = {
-    "gopher_quality": 0,        # map-only
-    "c4_quality": 0,
-    "url_stats": 0,
-    "curation_report": 1,       # fused scan + one tiny aggregation
-    "dup_line_stats": 2,        # line-fingerprint agg + per-doc rollup
-    "token_rarity": 2,          # unigram agg + per-doc join-agg
-    "vocab_stats": 1,
-    "source_overlap": 3,        # groupBy(sh64) + sizes + pair counts
-    "merge_upsert": 2,          # changeset window + full-outer apply
-    "events_ewma": 1,           # one user window, 8 lags share it
-    "events_top_paths": 2,      # user window + path counts
-    "market_basket": 7,         # baskets + pairs + per-part + 2 joins + sort
-    "heavy_hitters_sketch": 2,  # candidate semi-join + exact count
-    "embedding_dim_stats": 1,
-    "vector_quantize_int8": 2,  # range agg + per-vec rollup
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R5))
-def test_exchange_budget_r5(name, spark):
-    df = registry.queries()[name](spark, SF)
-    n = _exchanges(df)
-    assert n <= BUDGET_R5[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R5[name]} — a new shuffle entered this query's plan"
-    )
-
-
-# late round-5 keys (eager localCheckpoints truncate some plans: the
-# measured count covers the final, post-checkpoint stage)
-BUDGET_R5B = {
-    "bm25_batch": 8,            # shared postings + per-query window
-    "hybrid_search_batch": 12,  # both legs + fusion + final window
-    "dedup_lsh_eval": 12,       # exact + LSH pipelines + overlap joins
-    "knn_batch_sq8": 7,         # candidate window + rerank joins
-    "lsh_tuning_curve": 0,      # pure expression table
-    "multimodal_audio_resample": 0,  # map-only codec roundtrip
-    "pca_project": 0,           # driver fit + map-side projection
-    "semantic_dedup_clusters": 0,  # CC runs eagerly behind checkpoints
-    "mix_token_allocation": 2,  # token-count agg + full-outer join
-                                # (FULL OUTER cannot broadcast)
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R5B))
-def test_exchange_budget_r5b(name, spark):
-    df = registry.queries()[name](spark, SF)
-    n = _exchanges(df)
-    assert n <= BUDGET_R5B[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R5B[name]} — a new shuffle entered this query's plan"
-    )
-
-
-# round 6 (VERDICT r5 items 1+4): every remaining top-10 key from the
-# x10 wall table plus the re-sharded packing exports. The IVF plans
-# count the FINAL assignment/probe stages (the fixed-iteration fit runs
-# eagerly, its per-round exchanges are O(k*dim) metadata, not corpus).
-BUDGET_R6 = {
-    "knn_batch_ivf_exact": 5,   # assign window + probe window + rescore joins
-    "knn_batch_ivf": 5,         # same plan at n_probe=3
-    "knn_batch_lsh": 1,         # sig hash join (broadcast q) + top-k window
-    "knn_batch_ivfpq": 7,       # coarse IVF + ADC rank + exact rerank
-    "dup_graph_triangles": 4,   # minhash bands + verify + 2 pair joins
-    "pretrain_pack": 1,         # ONE per-source window (was a global
-                                # single-task window before r6)
-    "dataset_interleave": 2,    # per-(shard,source) pos + per-shard seq
-}
-
-
-# round-6 NEW operators: budgets measured at introduction. The CC-based
-# and IVM keys count their full self-check plans (leakage_safe_split
-# includes the pair verify + split joins behind eager checkpoints;
-# ivm_agg_delta includes the recompute arm that production drops).
-BUDGET_R6_NEW = {
-    "strip_boilerplate": 3,     # line agg + boiler distinct + join-back
-    "unigram_logprob": 3,       # unigram agg + per-doc join-agg
-    "url_canonicalize": 1,      # ONE groupBy on the canonical key
-    "dedup_containment": 3,     # sig agg + band join + containment verify
-    "leakage_safe_split": 13,   # minhash verify + CC labels + split joins
-    "ivm_agg_delta": 8,         # delta algebra + IVM merge + recompute arm
-    "zorder_layout": 1,         # one groupBy on the z-range (key is map-side)
-    "image_ahash": 0,           # map-only decode + hash
-    "image_ahash_pairs": 2,     # r7: banded LSH equi-join + pair distinct
-                                # (replaced the r6 all-pairs crossJoin —
-                                # sub-quadratic beats exchange-free here)
-}
-
-
-BUDGET_R6 = {**BUDGET_R6, **BUDGET_R6_NEW}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R6))
-def test_exchange_budget_r6(name, spark):
-    df = registry.queries()[name](spark, SF)
-    n = _exchanges(df)
-    assert n <= BUDGET_R6[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R6[name]} — a new shuffle entered this query's plan"
     )
 
 
@@ -185,56 +162,6 @@ def test_packing_exports_shard(spark):
             key,
             win_lines,
         )
-
-
-# round-10 keys: budgets measured at introduction. The composed
-# pipeline's census plan is post-checkpoint lineage (stage-survivor
-# manifests truncate upstream operator trees), so its budget covers the
-# semi-join counts + chunk/pack aggregates, not the member operators —
-# those carry their own budgets above. ivf_index_stream's returned plan
-# is the layout read-back dedup; the stream side is foreachBatch
-# (measured in SCALE.md: sub-MB shuffle at x1 and x10).
-BUDGET_R10 = {
-    "training_pipeline_e2e": 4,
-    "ivf_index_stream": 1,
-    "dedup_bbit_minhash": 4,  # bit-match join (post-checkpoint sigs,
-    # 2) + exact-verify array pack + pair join against it
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R10))
-def test_exchange_budget_r10(name, spark):
-    df = registry.queries()[name](spark, SF)
-    n = _exchanges(df)
-    assert n <= BUDGET_R10[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R10[name]} — a new shuffle entered this query's plan"
-    )
-
-
-# round-11 keys: the serving composition's census is post-checkpoint
-# lineage (chunk store / embedding cache / vector index materialize
-# once); what remains is the cache probe/miss id joins (broadcast at
-# this scale), the one-row census aggregates, and the <= k ranking
-# window — one hash exchange measured at introduction.
-BUDGET_R11 = {
-    "semantic_search_e2e": 1,
-    # the continuous-ingest composition: stream side is foreachBatch
-    # (map-only chunk/embed/assign + partitioned append, measured in
-    # SCALE.md); the returned serve plan is the pruned cell scan +
-    # dedup + the <= k ranking window — one hash exchange
-    "streaming_search_e2e": 1,
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R11))
-def test_exchange_budget_r11(name, spark):
-    df = registry.queries()[name](spark, SF)
-    n = _exchanges(df)
-    assert n <= BUDGET_R11[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R11[name]} — a new shuffle entered this query's plan"
-    )
 
 
 def test_document_index_sink_frame_budget(spark):

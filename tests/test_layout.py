@@ -158,68 +158,12 @@ def test_ivf_cell_partitioned_layout_prunes(spark, outdir):
         F.col("cell").isin(probe_cells)).count()
 
 
-def _export_invariant(registry):
-    """The actual ordering invariant, valid for any verified-set size:
-    every unverified key precedes every parked key, the
-    driver window qs[:min(50, n_unparked)] therefore contains no parked
-    key, and every unverified key occupying a verification slot carries
-    an oracle. Parked keys backfilling window slots once n_unparked < 50
-    is CORRECT (they just re-verify green)."""
-    qs = list(registry.queries())
-    verified = registry._driver_verified_keys()
-    parked = verified & set(qs)
-    assert len(qs) == len(set(qs))  # no duplicates
-    n_unparked = len(qs) - len(parked)
-    window = qs[:min(50, n_unparked)]
-    assert not (set(window) & parked), "parked key inside the window"
-    assert all(k in parked for k in qs[n_unparked:]), (
-        "unverified key trails a parked key"
-    )
-    # every key leading the window must be oracle-checkable — a no-oracle
-    # key in the window is a guaranteed red row (VERDICT r2 item 1)
-    oracles = registry.oracle_sql()
-    assert all(k in oracles for k in window), (
-        "no-oracle key occupies a driver verification slot"
-    )
-    return qs, n_unparked
-
-
-def test_registry_export_order_self_maintains(tmp_path, monkeypatch):
-    """The driver verifies the FIRST ~50 queries() keys: unverified keys
-    must lead, keys green in any CORRECTNESS_r*.json must trail, and a
-    new round file must reorder automatically (no code change)."""
-    import json
-
+def test_registry_exports_in_registration_order():
+    """queries() exports every registered key in registration order, and
+    oracle_sql() exactly the keys that carry an oracle."""
     from data_pipeline2_spark import registry
 
-    qs, n_unparked = _export_invariant(registry)
-
-    # simulate the next round's file: promoted keys fall behind every
-    # remaining unverified key, and the invariant still holds
-    promoted = qs[: min(3, n_unparked)]
-    extra = {
-        k: {"rows_match": True, "schema_match": True,
-            "hash_match": True, "err": None}
-        for k in promoted
+    assert list(registry.queries()) == [q.name for q in registry._QUERIES]
+    assert set(registry.oracle_sql()) == {
+        q.name for q in registry._QUERIES if q.sql is not None
     }
-    marker = os.path.join(registry._REPO_ROOT, "CORRECTNESS_r97.json")
-    try:
-        with open(marker, "w") as fh:
-            json.dump(extra, fh)
-        qs2, n_unparked2 = _export_invariant(registry)
-        assert n_unparked2 == n_unparked - len(promoted)
-        assert not (set(promoted) & set(qs2[:n_unparked2]))
-        assert set(qs2) == set(qs)
-    finally:
-        os.remove(marker)
-    assert list(registry.queries()) == qs  # cleanup restores the order
-
-
-def test_recheck_names_exist_in_registry():
-    """A stale _RECHECK entry (key renamed or removed) would silently
-    no-op — the semantic change it was meant to re-verify would never
-    re-queue. Every name must resolve to a registered key."""
-    from data_pipeline2_spark import registry
-
-    unknown = registry._RECHECK - set(registry.queries())
-    assert not unknown, f"_RECHECK names not in the registry: {unknown}"
