@@ -26,11 +26,14 @@ from __future__ import annotations
 
 import base64 as _b64
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 
 class EngineAPI:
@@ -108,13 +111,13 @@ class EngineAPI:
         with self._lock:
             if doc_id in self.uploads:
                 return self.uploads[doc_id]["chunks"]
+        # chunk_sentence_exact emits at least one row per document (empty
+        # text packs to [""]), so no rows means no such document
         doc = self.documents.filter(F.col("doc_id") == doc_id)
-        if not doc.take(1):
-            return None
         out = chunking.chunk_metadata_enrich(
             chunking.chunk_sentence_exact(doc, 500), "sentence"
         )
-        return [r.asDict() for r in out.collect()]
+        return [r.asDict() for r in out.collect()] or None
 
     def search(self, query: str, k: int = 10) -> list:
         from data_pipeline2_spark.operators.embedding import hash_embed_one
@@ -136,7 +139,9 @@ def make_handler(api: EngineAPI):
             try:
                 super().handle_one_request()
             except Exception:
-                pass
+                _log.exception(
+                    "request failed: %s", getattr(self, "requestline", "")
+                )
 
         def _send(self, code: int, obj):
             body = json.dumps(obj).encode()

@@ -9,11 +9,17 @@ whole-stage-codegen'd, columnar, no Python in the loop.
 Determinism: every element is cast to double before multiply/accumulate,
 and accumulation is a left fold in array order (`aggregate`), so results
 are bit-stable across runs and partitionings (per-row computation only).
+
+Driver-known vectors (a search query, LSH hyperplanes, IVF probes) enter
+the plan as ONE parsed array literal (`query_vector_lit`): building it
+from per-element `F.lit` columns costs two py4j round trips per element.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import math
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -46,6 +52,23 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), dot(a, b) / (na * nb))
 
 
+def _double_sql(x) -> str:
+    """One double as Spark SQL text that parses back to the same bits:
+    `repr` is the shortest round-tripping decimal, and the parser reads a
+    `D`-suffixed literal with Java's correctly rounded parseDouble."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('-Infinity' AS DOUBLE)" if x < 0 else "CAST('Infinity' AS DOUBLE)"
+    return repr(x) + "D"
+
+
+def _vector_sql(vec) -> str:
+    # the cast types the empty vector; on doubles it simplifies away
+    return "CAST(array(%s) AS ARRAY<DOUBLE>)" % ", ".join(map(_double_sql, vec))
+
+
 def query_vector_lit(vec) -> Column:
     """A python list of floats → array<double> literal column.
 
@@ -53,4 +76,62 @@ def query_vector_lit(vec) -> Column:
     ES `params.query_vector`). For batches of query vectors use a
     broadcast join instead (operators/similarity.py:knn_batch).
     """
-    return F.array(*[F.lit(float(x)).cast("double") for x in vec])
+    return F.expr(_vector_sql(vec))
+
+
+def query_norm(vec) -> float:
+    """‖vec‖ on the driver, bit-identical to `l2_norm` of the literal:
+    the same left fold of double squares from 0.0, then a correctly
+    rounded sqrt."""
+    acc = 0.0
+    for x in vec:
+        x = float(x)
+        acc = acc + x * x
+    return math.sqrt(acc)
+
+
+# ‖v‖ and v·q as folds over internal aliases; CAST is a no-op on doubles
+_NORM_SQL = (
+    "sqrt(aggregate({v}, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+)
+_SCORE_SQL = (
+    "CASE WHEN __kn > 0 AND {qn} > 0 THEN aggregate(zip_with(__kv, {q}, "
+    "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, p) -> acc + p)"
+    " / (__kn * {qn}) END"
+)
+
+
+def cosine_to_query(
+    df: DataFrame, vec_col: str, query, keep, scale: int | None = None
+) -> DataFrame:
+    """`keep` columns + `score` = cosine_similarity(df[vec_col], query),
+    rounded to `scale` digits when given — bit-identical to
+    `cosine_similarity(F.col(vec_col), query_vector_lit(query))`, at two
+    folds per row instead of five.
+
+    `query` is a Python list, or a one-row DataFrame whose first column
+    is the vector (broadcast through a 1-row cross join; an empty one
+    yields no rows). A list's norm is computed on the driver
+    (`query_norm`); a DataFrame's once, on its single row. The row norm
+    is projected once, and the score reads it twice. The `> 0` tests
+    stay in the Spark expression so NaN and zero-norm queries keep
+    Spark's semantics (NaN > 0 is true there, NULL for a zero norm).
+    """
+    cols = [F.col(c) for c in keep]
+    if isinstance(query, DataFrame):
+        qdf = query.select(F.col(query.columns[0]).alias("__qv")).limit(1)
+        qdf = qdf.select("__qv", F.expr(_NORM_SQL.format(v="__qv")).alias("__qn"))
+        df = df.crossJoin(F.broadcast(qdf))
+        q_sql, qn_sql = "__qv", "__qn"
+        cols += [F.col("__qv"), F.col("__qn")]
+    else:
+        q_sql, qn_sql = _vector_sql(query), _double_sql(query_norm(query))
+    normed = df.select(
+        *cols,
+        F.col(vec_col).alias("__kv"),
+        F.expr(_NORM_SQL.format(v="__kv")).alias("__kn"),
+    )
+    score = _SCORE_SQL.format(q=q_sql, qn=qn_sql)
+    if scale is not None:
+        score = f"round({score}, {int(scale)})"
+    return normed.select(*keep, F.expr(score).alias("score"))

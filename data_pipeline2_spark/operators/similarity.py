@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from data_pipeline2_spark.functions.vectors import (
     cosine_similarity,
+    cosine_to_query,
     dot,
     query_vector_lit,
 )
@@ -59,22 +60,16 @@ def knn_cosine(
     themselves (checking here would cost the extra job this path
     exists to avoid).
 
+    Scoring is `functions.vectors.cosine_to_query`: the query norm is a
+    constant, so each row folds twice (its own norm and the dot).
+
     → (vec_id, score) ordered by score desc, id asc.
     """
     df = embeddings
     if filter_col is not None:
         df = df.filter(F.col(filter_col) == F.lit(filter_value))
-    if isinstance(query_vec, DataFrame):
-        qdf = query_vec.select(
-            F.col(query_vec.columns[0]).alias("__qv")
-        ).limit(1)
-        df = df.crossJoin(F.broadcast(qdf))
-        qcol = F.col("__qv")
-    else:
-        qcol = query_vector_lit(query_vec)
-    score = F.round(cosine_similarity(F.col(vec_col), qcol), SCORE_ROUND)
     return (
-        df.select(F.col(id_col), score.alias("score"))
+        cosine_to_query(df, vec_col, query_vec, [id_col], SCORE_ROUND)
         .orderBy(F.desc("score"), F.col(id_col))
         .limit(k)
     )

@@ -286,10 +286,7 @@ def q_streaming_search_e2e(spark, sf_dir):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from data_pipeline2_spark.functions.vectors import (
-        cosine_similarity,
-        query_vector_lit,
-    )
+    from data_pipeline2_spark.functions.vectors import cosine_to_query
     from data_pipeline2_spark.operators import chunking, embedding, similarity
     from data_pipeline2_spark.registry._core import _run_dir
     from data_pipeline2_spark.streaming import stateful
@@ -329,13 +326,7 @@ def q_streaming_search_e2e(spark, sf_dir):
     )
     probes = _probe_cells(spark, cents, qv, 2)
     hits = stateful.load_ivf_vectors(spark, layout, cells=probes)
-    scored = hits.select(
-        "vec_id",
-        "cell",
-        F.round(
-            cosine_similarity(F.col("embedding"), query_vector_lit(qv)), 6
-        ).alias("score"),
-    )
+    scored = cosine_to_query(hits, "embedding", qv, ["vec_id", "cell"], 6)
     w = Window.orderBy(F.desc("score"), F.col("vec_id"))
     return scored.select(
         F.row_number().over(w).alias("rank"), "vec_id", "cell", "score"

@@ -113,3 +113,47 @@ def test_uniform_document_shape(base_url):
     code3, up_doc = _get(f"{base_url}/api/v1/documents/{up['doc_id']}")
     assert set(corpus_doc) == set(up_doc)  # identical key set
     assert corpus_doc["origin"] == "corpus" and up_doc["origin"] == "upload"
+
+
+def test_chunks_corpus_doc_and_absent_id(base_url):
+    code, resp = _get(f"{base_url}/api/v1/documents/7/chunks")
+    assert code == 200 and resp["chunks"]
+    assert {c["doc_id"] for c in resp["chunks"]} == {7}
+    code, resp = _get(f"{base_url}/api/v1/documents/99999999/chunks")
+    assert (code, resp) == (404, {"error": "not found"})
+
+
+def test_get_chunks_empty_text_is_found(spark):
+    # get_chunks reads "no chunk rows" as "no such document", which
+    # holds because empty or NULL text still packs to one "" chunk
+    from data_pipeline2_spark.api import EngineAPI
+
+    api = EngineAPI(spark, SF)
+    api.documents = spark.createDataFrame(
+        [(1, ""), (2, None)], "doc_id long, text string"
+    )
+    for doc_id in (1, 2):
+        chunks = api.get_chunks(doc_id)
+        assert [c["content"] for c in chunks] == [""], doc_id
+    assert api.get_chunks(3) is None
+
+
+def test_handler_logs_swallowed_errors(monkeypatch, caplog):
+    # an exception escaping the route handlers is logged, not dropped
+    # silently; the connection still just closes
+    from http.server import BaseHTTPRequestHandler
+
+    from data_pipeline2_spark.api import make_handler
+
+    def boom(self):
+        raise RuntimeError("socket went away")
+
+    monkeypatch.setattr(BaseHTTPRequestHandler, "handle_one_request", boom)
+    cls = make_handler(None)
+    handler = cls.__new__(cls)  # no socket: only the wrapper runs
+    with caplog.at_level("ERROR", logger="data_pipeline2_spark.api"):
+        handler.handle_one_request()
+    assert any(
+        r.exc_info and "socket went away" in str(r.exc_info[1])
+        for r in caplog.records
+    )

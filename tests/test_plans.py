@@ -79,6 +79,19 @@ def test_knn_batch_broadcasts_queries(spark):
     assert plan.count("Exchange hashpartitioning") <= 1
 
 
+def test_knn_cosine_list_query_folds_twice_per_row(spark):
+    # a driver-known query: its norm is a literal, the row norm is
+    # projected once, so each row folds ‖a‖ and a·q and nothing else
+    from data_pipeline2_spark.operators.similarity import knn_cosine
+    from data_pipeline2_spark.sources.parquet import load_table
+
+    emb = load_table(spark, SF, "embeddings")
+    q = [((i * 7) % 11 - 5) / 3.0 for i in range(64)]
+    plan = knn_cosine(emb, q, 5)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("aggregate(") == 2
+    assert "zip_with(transform(" not in plan
+
+
 def test_semi_join_for_exists(spark):
     plan = plan_of(QUERIES["q4_order_priority"](spark, SF))
     assert "LeftSemi" in plan
