@@ -13,6 +13,12 @@ are bit-stable across runs and partitionings (per-row computation only).
 Driver-known vectors (a search query, LSH hyperplanes, IVF probes) enter
 the plan as ONE parsed array literal (`query_vector_lit`): building it
 from per-element `F.lit` columns costs two py4j round trips per element.
+
+Operators score cosine through one kernel: `with_norm` projects each
+side's norm once per row, `cosine` folds once per pair, and
+`cosine_to_query` is the same formula against a driver-known query.
+`cosine_similarity` (five folds per pair) is the reference tests
+compare them with.
 """
 
 from __future__ import annotations
@@ -90,15 +96,39 @@ def query_norm(vec) -> float:
     return math.sqrt(acc)
 
 
-# ‖v‖ and v·q as folds over internal aliases; CAST is a no-op on doubles
+# ‖v‖ and cosine(a, b) from projected norms, as folds; CAST is a no-op
+# on doubles. Same left fold of double products and the same division
+# as `cosine_similarity`, so the same bits.
 _NORM_SQL = (
     "sqrt(aggregate({v}, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
 )
-_SCORE_SQL = (
-    "CASE WHEN __kn > 0 AND {qn} > 0 THEN aggregate(zip_with(__kv, {q}, "
+_COSINE_SQL = (
+    "CASE WHEN {an} > 0 AND {bn} > 0 THEN aggregate(zip_with({a}, {b}, "
     "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, p) -> acc + p)"
-    " / (__kn * {qn}) END"
+    " / ({an} * {bn}) END"
 )
+
+
+def with_norm(df: DataFrame, vec_col: str, norm_col: str) -> DataFrame:
+    """`df` plus `norm_col` = ‖df[vec_col]‖ (bit-identical to `l2_norm`),
+    one fold per row. Project it on each side BEFORE a join, so that
+    `cosine` over the joined pairs folds once per pair instead of five
+    times."""
+    return df.withColumn(norm_col, F.expr(_NORM_SQL.format(v=vec_col)))
+
+
+def cosine(
+    a: str, a_norm: str, b: str, b_norm: str, scale: int | None = None
+) -> Column:
+    """cosine_similarity(a, b) reading the norms `with_norm` projected:
+    one fold (the dot) per pair, the same bits, rounded to `scale`
+    digits when given. Arguments are column names (or SQL expressions).
+    The `> 0` tests stay in the Spark expression, so zero norms give
+    NULL and NaN norms NaN, as in `cosine_similarity`."""
+    score = _COSINE_SQL.format(a=a, an=a_norm, b=b, bn=b_norm)
+    if scale is not None:
+        score = f"round({score}, {int(scale)})"
+    return F.expr(score)
 
 
 def cosine_to_query(
@@ -113,15 +143,13 @@ def cosine_to_query(
     is the vector (broadcast through a 1-row cross join; an empty one
     yields no rows). A list's norm is computed on the driver
     (`query_norm`); a DataFrame's once, on its single row. The row norm
-    is projected once, and the score reads it twice. The `> 0` tests
-    stay in the Spark expression so NaN and zero-norm queries keep
-    Spark's semantics (NaN > 0 is true there, NULL for a zero norm).
+    is projected once, and the score reads it twice. This is `cosine`
+    with the query side inlined as literals.
     """
     cols = [F.col(c) for c in keep]
     if isinstance(query, DataFrame):
         qdf = query.select(F.col(query.columns[0]).alias("__qv")).limit(1)
-        qdf = qdf.select("__qv", F.expr(_NORM_SQL.format(v="__qv")).alias("__qn"))
-        df = df.crossJoin(F.broadcast(qdf))
+        df = df.crossJoin(F.broadcast(with_norm(qdf, "__qv", "__qn")))
         q_sql, qn_sql = "__qv", "__qn"
         cols += [F.col("__qv"), F.col("__qn")]
     else:
@@ -131,7 +159,5 @@ def cosine_to_query(
         F.col(vec_col).alias("__kv"),
         F.expr(_NORM_SQL.format(v="__kv")).alias("__kn"),
     )
-    score = _SCORE_SQL.format(q=q_sql, qn=qn_sql)
-    if scale is not None:
-        score = f"round({score}, {int(scale)})"
-    return normed.select(*keep, F.expr(score).alias("score"))
+    score = cosine("__kv", "__kn", q_sql, qn_sql, scale)
+    return normed.select(*keep, score.alias("score"))

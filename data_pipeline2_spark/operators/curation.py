@@ -88,19 +88,20 @@ def decontaminate_semantic(
     row per corpus doc. Ties break toward the smaller eval id for
     engine-portable determinism.
     """
-    from data_pipeline2_spark.functions.vectors import cosine_similarity
+    from data_pipeline2_spark.functions.vectors import cosine, with_norm
 
     ev = eval_emb.select(
         F.col(eval_id_col).alias("__eid"), F.col(eval_vec_col).alias("__evec")
     )
-    scored = corpus_emb.select(
+    vecs = corpus_emb.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
-    ).crossJoin(F.broadcast(ev)).select(
+    )
+    scored = with_norm(vecs, "__v", "__vn").crossJoin(
+        F.broadcast(with_norm(ev, "__evec", "__en"))
+    ).select(
         "vec_id",
         "__eid",
-        F.round(cosine_similarity(F.col("__v"), F.col("__evec")), 6).alias(
-            "__sim"
-        ),
+        cosine("__v", "__vn", "__evec", "__en", 6).alias("__sim"),
     )
     agg = scored.groupBy("vec_id").agg(
         F.max("__sim").alias("max_sim"),

@@ -1609,25 +1609,25 @@ def semdedup(
     cost model (SemDeDup picks k so clusters stay small; for corpora
     where a cluster outgrows that, `dedup_near_embedding`'s
     hyperplane-LSH arm is the sub-cluster-bucketed alternative). The
-    assignment output is checkpointed once (id + vec + cluster + dist
-    per row) because it feeds both join sides and the final report —
+    assignment output is checkpointed once (id + vec + norm + cluster +
+    dist per row) because it feeds both join sides and the final report —
     the iterative-fit working-set pattern _kmeans_trajectory itself
-    uses.
+    uses. With the norm stored, a candidate pair folds once (the dot).
     """
-    from data_pipeline2_spark.functions.vectors import cosine_similarity
+    from data_pipeline2_spark.functions.vectors import cosine, with_norm
     from data_pipeline2_spark.operators.similarity import _kmeans_trajectory
 
     cents, assign = _kmeans_trajectory(embeddings, k, n_iter, id_col, vec_col)
-    final = assign(cents).transform(materialize)
+    final = with_norm(assign(cents), "_v", "_n").transform(materialize)
     a = final.select(
         F.col("_id").alias("xa"), F.col("_v").alias("va"),
-        "cluster", F.col("dist").alias("da"),
+        F.col("_n").alias("na"), "cluster", F.col("dist").alias("da"),
     )
     b = final.select(
         F.col("_id").alias("xb"), F.col("_v").alias("vb"),
-        "cluster", F.col("dist").alias("db"),
+        F.col("_n").alias("nb"), "cluster", F.col("dist").alias("db"),
     )
-    sim = F.round(cosine_similarity(F.col("va"), F.col("vb")), 6)
+    sim = cosine("va", "na", "vb", "nb", 6)
     dropped = (
         a.join(b, "cluster")
         .filter(F.col("xa") != F.col("xb"))

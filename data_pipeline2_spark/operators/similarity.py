@@ -28,13 +28,71 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from data_pipeline2_spark.functions.vectors import (
-    cosine_similarity,
+    cosine,
     cosine_to_query,
     dot,
     query_vector_lit,
+    with_norm,
 )
 
 SCORE_ROUND = 6  # rounding makes double cosine hash-stable across engines
+
+
+def _score(vec_col: str, qvec_col: str) -> Column:
+    """The rounded pairwise cosine of a corpus row and a query row whose
+    norms `with_norm` projected as `__vn` and `__qn` before the join."""
+    return cosine(vec_col, "__vn", qvec_col, "__qn", SCORE_ROUND).alias("score")
+
+
+def _knn_scored(
+    pairs: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    qid_col: str,
+    qvec_col: str,
+) -> DataFrame:
+    """(corpus, query) pairs, both sides normed by `with_norm` → the
+    per-query exact top-k (qid, rank, vec_id, score)."""
+    scored = pairs.select(F.col(qid_col), F.col(id_col), _score(vec_col, qvec_col))
+    return _top_k(scored, qid_col, id_col, k).select(
+        qid_col, "rank", id_col, "score"
+    )
+
+
+def _top_k(
+    scored: DataFrame,
+    group: str,
+    id_col: str,
+    k: int,
+    score: str = "score",
+    rank: str = "rank",
+) -> DataFrame:
+    """The per-group ranking every batched scorer ends in: `rank` =
+    row_number over (group; score desc, id asc), kept while <= k. The id
+    breaks score ties, so the kept set is a total order that the oracles'
+    `row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id)`
+    reproduces."""
+    w = Window.partitionBy(group).orderBy(F.desc(score), F.col(id_col))
+    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _label_queries(
+    embeddings: DataFrame, id_col: str, vec_col: str, label_col: str
+) -> DataFrame:
+    """One query per label, the label's lowest-id vector (seed-free and
+    reproducible) → (qid, qvec, qlabel, __qn)."""
+    wq = Window.partitionBy(label_col).orderBy(F.col(id_col))
+    queries = (
+        embeddings.withColumn("__rn", F.row_number().over(wq))
+        .filter(F.col("__rn") == 1)
+        .select(
+            F.col(id_col).alias("qid"),
+            F.col(vec_col).alias("qvec"),
+            F.col(label_col).alias("qlabel"),
+        )
+    )
+    return with_norm(queries, "qvec", "__qn")
 
 
 def knn_cosine(
@@ -88,23 +146,16 @@ def knn_batch(
 
     Broadcast the query set (small side) → crossJoin scores every
     (corpus, query) pair map-side with zero shuffle of the corpus; the
-    only shuffle is the per-qid top-k window. This is the bulk
-    similarity-search primitive of the north-star scope.
+    only shuffle is the per-qid top-k window. Each side's norm is
+    projected once per row, so a pair costs one fold (the dot). This is
+    the bulk similarity-search primitive of the north-star scope.
 
     → (qid, rank, vec_id, score)
     """
-    scored = embeddings.crossJoin(F.broadcast(queries)).select(
-        F.col(qid_col),
-        F.col(id_col),
-        F.round(
-            cosine_similarity(F.col(vec_col), F.col(qvec_col)), SCORE_ROUND
-        ).alias("score"),
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", id_col, "score")
+    e = with_norm(embeddings, vec_col, "__vn")
+    q = with_norm(queries, qvec_col, "__qn")
+    return _knn_scored(
+        e.crossJoin(F.broadcast(q)), k, id_col, vec_col, qid_col, qvec_col
     )
 
 
@@ -261,25 +312,16 @@ def knn_batch_ivf(
     # the same), not a shortcut.
     nearest_cells = _nearest_cells_udf(centroids)
 
-    e = embeddings.withColumn(
+    # a corpus row has exactly one cell and a query probes distinct
+    # cells, so the cell join emits each (qid, vec_id) pair once
+    e = with_norm(embeddings, vec_col, "__vn").withColumn(
         "__cell", F.element_at(nearest_cells(F.col(vec_col), F.lit(1)), 1)
     )
-    q = queries.withColumn(
+    q = with_norm(queries, qvec_col, "__qn").withColumn(
         "__cell", F.explode(nearest_cells(F.col(qvec_col), F.lit(n_probe)))
     )
-    scored = e.join(F.broadcast(q), "__cell").select(
-        F.col(qid_col),
-        F.col(id_col),
-        F.round(
-            cosine_similarity(F.col(vec_col), F.col(qvec_col)), SCORE_ROUND
-        ).alias("score"),
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.col(id_col))
-    return (
-        scored.dropDuplicates([qid_col, id_col])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", id_col, "score")
+    return _knn_scored(
+        e.join(F.broadcast(q), "__cell"), k, id_col, vec_col, qid_col, qvec_col
     )
 
 
@@ -304,20 +346,14 @@ def knn_batch_lsh(
     IVF/LSH scale path mandated by the north star.
     """
     planes = _hyperplanes(dim, n_planes, seed)
-    e = embeddings.withColumn("__sig", signature_col(F.col(vec_col), planes))
-    q = queries.withColumn("__sig", signature_col(F.col(qvec_col), planes))
-    scored = e.join(F.broadcast(q), "__sig").select(
-        F.col(qid_col),
-        F.col(id_col),
-        F.round(
-            cosine_similarity(F.col(vec_col), F.col(qvec_col)), SCORE_ROUND
-        ).alias("score"),
+    e = with_norm(embeddings, vec_col, "__vn").withColumn(
+        "__sig", signature_col(F.col(vec_col), planes)
     )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", id_col, "score")
+    q = with_norm(queries, qvec_col, "__qn").withColumn(
+        "__sig", signature_col(F.col(qvec_col), planes)
+    )
+    return _knn_scored(
+        e.join(F.broadcast(q), "__sig"), k, id_col, vec_col, qid_col, qvec_col
     )
 
 
@@ -454,20 +490,15 @@ def centroid_assign(
             lambda s: s.centroid_v,
         ).alias("cvec")
     )
-    scored = embeddings.select(
+    vecs = embeddings.select(
         F.col(id_col).alias("vec_id"),
         F.col(label_col).alias("label"),
         F.col(vec_col).alias("_v"),
-    ).crossJoin(F.broadcast(carr)).select(
-        "vec_id",
-        "label",
-        "pred_label",
-        F.round(cosine_similarity(F.col("_v"), F.col("cvec")), SCORE_ROUND).alias(
-            "score"
-        ),
     )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("score"), F.col("pred_label"))
-    best = scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+    scored = with_norm(vecs, "_v", "__vn").crossJoin(
+        F.broadcast(with_norm(carr, "cvec", "__qn"))
+    ).select("vec_id", "label", "pred_label", _score("_v", "cvec"))
+    best = _top_k(scored, "vec_id", "pred_label", 1)
     return (
         best.groupBy("label", "pred_label")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -615,21 +646,18 @@ def hard_negatives(
     scored at all.
     """
     scored = (
-        embeddings.crossJoin(F.broadcast(queries))
+        with_norm(embeddings, vec_col, "__vn")
+        .crossJoin(F.broadcast(with_norm(queries, qvec_col, "__qn")))
         .filter(F.col(label_col) != F.col(qlabel_col))
         .select(
             F.col(qid_col),
             F.col(id_col),
             F.col(label_col).alias("neg_label"),
-            F.round(
-                cosine_similarity(F.col(vec_col), F.col(qvec_col)), SCORE_ROUND
-            ).alias("score"),
+            _score(vec_col, qvec_col),
         )
     )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.col(id_col))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        _top_k(scored, qid_col, id_col, k)
         .select(
             F.col(qid_col).alias("qid"),
             F.col("rank").cast("int").alias("rank"),
@@ -904,29 +932,14 @@ def knn_batch_ivf_exact(
     probes = nearest(queries, qid_col, qvec_col, n_probe).withColumnRenamed(
         "__key", qid_col
     )
-    scored = (
-        embeddings.join(cells, id_col)
+    q = with_norm(queries.select(qid_col, qvec_col), qvec_col, "__qn")
+    pairs = (
+        with_norm(embeddings, vec_col, "__vn")
+        .join(cells, id_col)
         .join(probes, "__cell")
-        .join(
-            F.broadcast(
-                queries.select(F.col(qid_col), F.col(qvec_col))
-            ),
-            qid_col,
-        )
-        .select(
-            F.col(qid_col),
-            F.col(id_col),
-            F.round(
-                cosine_similarity(F.col(vec_col), F.col(qvec_col)), SCORE_ROUND
-            ).alias("score"),
-        )
+        .join(F.broadcast(q), qid_col)
     )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", id_col, "score")
-    )
+    return _knn_scored(pairs, k, id_col, vec_col, qid_col, qvec_col)
 
 
 # ------------------------------------------------------------ product
@@ -1115,52 +1128,24 @@ def _exact_rerank(
     vec_col: str,
     qid_col: str,
     qvec_col: str,
-    dedup: bool = False,
 ) -> DataFrame:
     """Shared tail of every quantized ANN path (PQ / IVF-PQ / SQ8):
     keep the top-`rerank` approximate candidates per query, join the
     shortlist's float vectors back, score EXACT cosine, emit the final
-    top-k → (qid, rank, vec_id, score). `dedup` drops duplicate
-    (qid, vec_id) candidates first (IVF cell probing can emit one per
-    cell). Shuffle = candidate rows only; the corpus never re-scans."""
-    w_adc = Window.partitionBy("qid").orderBy(F.desc("adc"), F.col("vec_id"))
-    base = cand.dropDuplicates(["qid", "vec_id"]) if dedup else cand
-    shortlist = (
-        base.withColumn("__rn", F.row_number().over(w_adc))
-        .filter(F.col("__rn") <= rerank)
-        .select("qid", "vec_id")
-    )
+    top-k → (qid, rank, vec_id, score). `cand` holds each (qid, vec_id)
+    at most once. Shuffle = candidate rows only; the corpus never
+    re-scans. The vector norm is projected on the shortlisted rows, so
+    only candidates pay for it."""
+    shortlist = _top_k(cand, "qid", "vec_id", rerank, "adc", "__rn")
     corpus = embeddings.select(
-        F.col(id_col).alias("__vid"), F.col(vec_col).alias("__vec")
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__vec")
     )
-    rescored = (
-        shortlist.join(corpus, F.col("vec_id") == F.col("__vid"))
-        .join(
-            F.broadcast(
-                queries.select(
-                    F.col(qid_col).alias("qid"), F.col(qvec_col).alias("__qv")
-                )
-            ),
-            "qid",
-        )
-        .select(
-            "qid",
-            "vec_id",
-            F.round(
-                cosine_similarity(F.col("__vec"), F.col("__qv")), SCORE_ROUND
-            ).alias("score"),
-        )
+    q = queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("__qv"))
+    pairs = with_norm(shortlist.join(corpus, "vec_id"), "__vec", "__vn").join(
+        F.broadcast(with_norm(q, "__qv", "__qn")), "qid"
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.col("vec_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias(qid_col),
-            "rank",
-            F.col("vec_id").alias(id_col),
-            "score",
-        )
+    return _knn_scored(pairs, k, "vec_id", "__vec", "qid", "__qv").select(
+        F.col("qid").alias(qid_col), "rank", F.col("vec_id").alias(id_col), "score"
     )
 
 
@@ -1350,7 +1335,7 @@ def knn_batch_ivfpq(
     cand = cell_rows.mapInPandas(score, "qid long, vec_id long, adc double")
     return _exact_rerank(
         cand, embeddings, queries, k, rerank,
-        id_col, vec_col, qid_col, qvec_col, dedup=True,
+        id_col, vec_col, qid_col, qvec_col,
     )
 
 
@@ -1860,10 +1845,8 @@ def hybrid_search_rrf_batch(
         F.col("rank").alias("vec_rank"),
     )
     fused = _rrf_fuse(bm_r, vec_r, ["qid", "doc_id"], rrf_k)
-    w = Window.partitionBy("qid").orderBy(F.desc("rrf_score"), F.col("doc_id"))
     return (
-        fused.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
+        _top_k(fused, "qid", "doc_id", k, "rrf_score", "__rn")
         .drop("__rn")
         .orderBy("qid", F.desc("rrf_score"), "doc_id")
     )
@@ -1906,33 +1889,20 @@ def retrieval_eval(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    wq = Window.partitionBy(label_col).orderBy(F.col(id_col))
-    queries = (
-        embeddings.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") == 1)
-        .select(
-            F.col(id_col).alias("qid"),
-            F.col(vec_col).alias("qvec"),
-            F.col(label_col).alias("qlabel"),
-        )
-    )
+    queries = _label_queries(embeddings, id_col, vec_col, label_col)
     scored = (
-        embeddings.crossJoin(F.broadcast(queries))
+        with_norm(embeddings, vec_col, "__vn")
+        .crossJoin(F.broadcast(queries))
         .filter(F.col(id_col) != F.col("qid"))
         .select(
             "qid",
             "qlabel",
             F.col(id_col),
             (F.col(label_col) == F.col("qlabel")).cast("int").alias("rel"),
-            F.round(
-                cosine_similarity(F.col(vec_col), F.col("qvec")), SCORE_ROUND
-            ).alias("score"),
+            _score(vec_col, "qvec"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.col(id_col))
-    topk = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    topk = _top_k(scored, "qid", id_col, k)
     per_q = topk.groupBy("qid", "qlabel").agg(
         F.sum("rel").cast("long").alias("hits_at_k"),
         F.min(F.when(F.col("rel") == 1, F.col("rank"))).alias("__frr"),
@@ -2160,13 +2130,8 @@ def sparse_cosine_topk(
             ).alias("score"),
         )
     )
-    w_rank = Window.partitionBy("doc_a").orderBy(
-        F.desc("score"), F.col("doc_b")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .select("doc_a", F.col("rank").cast("int"), "doc_b", "score")
+    return _top_k(scored, "doc_a", "doc_b", k).select(
+        "doc_a", F.col("rank").cast("int"), "doc_b", "score"
     )
 
 
@@ -2267,16 +2232,7 @@ def retrieval_ndcg(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     disc, cum = _ndcg_discounts(k)
-    wq = Window.partitionBy(label_col).orderBy(F.col(id_col))
-    queries = (
-        embeddings.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") == 1)
-        .select(
-            F.col(id_col).alias("qid"),
-            F.col(vec_col).alias("qvec"),
-            F.col(label_col).alias("qlabel"),
-        )
-    )
+    queries = _label_queries(embeddings, id_col, vec_col, label_col)
     rel = (
         F.when(F.col(label_col) == F.col("qlabel"), F.lit(2))
         .when(
@@ -2285,19 +2241,17 @@ def retrieval_ndcg(
         .otherwise(F.lit(0))
     )
     scored = (
-        embeddings.crossJoin(F.broadcast(queries))
+        with_norm(embeddings, vec_col, "__vn")
+        .crossJoin(F.broadcast(queries))
         .filter(F.col(id_col) != F.col("qid"))
         .select(
             "qid",
             "qlabel",
             F.col(id_col),
             rel.alias("rel"),
-            F.round(
-                cosine_similarity(F.col(vec_col), F.col("qvec")), SCORE_ROUND
-            ).alias("score"),
+            _score(vec_col, "qvec"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.col(id_col))
     disc_arr = F.array(*[F.lit(d) for d in disc])
     gain = (
         F.when(F.col("rel") == 2, F.lit(3))
@@ -2305,8 +2259,7 @@ def retrieval_ndcg(
         .otherwise(F.lit(0))
     )
     topk = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        _top_k(scored, "qid", id_col, k)
         .select(
             "qid",
             "qlabel",

@@ -244,8 +244,9 @@ def q_knn_batch_ivf(spark, sf_dir):
     value-check it (VERDICT r5 item 2: the previous numpy sampled-fit
     export could never go green — `err: no_oracle` forever). The
     sampled-fit `similarity.knn_batch_ivf` remains the production
-    scale path (FAISS pattern, bounded driver-side fit) with recall
-    gates in tests/test_dedup_similarity.py."""
+    scale path (FAISS pattern, bounded driver-side fit) with its
+    recall gate in
+    tests/test_scale_helpers.py::test_ivf_recall_against_exact."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")

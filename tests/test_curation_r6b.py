@@ -4,7 +4,7 @@ normalization, retrieval metrics, OHLC resampling, higher moments.
 Oracle parity for all six registry keys runs in test_oracle_parity.py
 automatically; this file covers the operator semantics the oracle can't
 see (per-event flags, error taxonomy, the live-socket transport) plus
-plan shape and exchange budgets for the new keys.
+plan shape for the new keys (exchange budgets: test_exchange_budget.py).
 """
 
 from __future__ import annotations
@@ -311,48 +311,7 @@ def test_higher_moments_exact_small_case(spark):
     assert r.exkurtosis == pytest.approx(m4 / m2 ** 2 - 3, abs=1e-6)
 
 
-# ---------------------------------------------------------------- plan
-# shape + exchange budgets (measured at introduction)
-
-BUDGET_R6B = {
-    "events_rate_limit": 3,     # (user,win) window + distinct 2-phase agg
-    "retrieval_metrics": 3,     # top-k window + per-qid agg + label counts
-    "text_normalize": 0,        # map-only pandas_udf pass
-    "agg_higher_moments": 1,    # one hash agg (percentile rides it)
-    "ntile_segments": 1,        # segment window; groupBy reuses partitioning
-    "events_resample_ohlc": 1,  # one map-side-combined hash agg
-    "fuzzy_join_ed1": 2,        # vocab distincts; variant join + dedup
-    "events_seasonal_baseline": 2,  # two aggs; profile join broadcasts
-    "topic_cluster_terms": 8,   # assign window + doc join + 3 token
-                                # aggs + lift joins + top-n window
-    "retrieval_metrics_mrl16": 3,  # same plan as retrieval_metrics
-    "winsorized_stats": 2,      # percentile agg + clipped-moment agg
-    "ngram_novelty": 4,         # shingle window + first-seen agg + join
-    "bigram_logprob": 6,        # doc window + uni/bigram aggs + 2 joins
-    "events_variant_agg": 2,    # distinct-agg two-phase over variant field
-    "events_type_entropy": 3,   # (user,type) agg + totals + final rollup
-    "sparse_cosine_topk": 11,   # posting self-join + dots + half-matrix
-                                # mirror + norm joins + per-doc top-k
-                                # window; the tokenize→tf→df_cap-prune
-                                # prefix runs once behind an eager
-                                # localCheckpoint (r7: prune engaged,
-                                # VERDICT r6 item 2)
-    "ngram_novelty_incremental": 4,  # two shingle windows + store
-                                     # distinct + per-doc rollup
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R6B))
-def test_exchange_budget_r6b(name, spark):
-    df = registry.queries()[name](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert n <= BUDGET_R6B[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R6B[name]} — a new shuffle entered this query's plan"
-    )
+# ---------------------------------------------------------- plan shape
 
 
 def test_retrieval_metrics_broadcasts_queries(spark):

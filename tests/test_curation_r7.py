@@ -1,7 +1,8 @@
 """Round-7 operator tests: governance (delete cascade, k-anonymity),
 char entropy, CUSUM drift, cohort LTV, interval-overlap join, RM3
 expansion, video scene cuts — semantics on closed-form fixtures plus
-the plan-shape/exchange-budget gates every new operator carries.
+the plan-shape gates every new operator carries (exchange budgets:
+test_exchange_budget.py).
 """
 
 from __future__ import annotations
@@ -274,40 +275,6 @@ def test_video_scene_cuts_spans_and_boundaries(spark):
         assert n_frames == max(dur // 1000, 1)
 
 
-# --------------------------------------------------- exchange budgets
-
-BUDGET_R7 = {
-    "image_ahash_band_eval": 4,   # truth agg + banded join + distinct +
-                                  # recall join (ground-truth arm is the
-                                  # documented fixture-scale crossJoin)
-    "k_anonymity": 1,             # one hash agg on the quasi tuple
-    "gdpr_delete_cascade": 4,     # per-entity count aggs; deletes are
-                                  # broadcast anti-joins (no shuffle)
-    "char_entropy": 3,            # (doc,ch) agg + totals + join-back
-    "events_cusum_drift": 4,      # bucket agg + totals + 2 windows share
-                                  # the per-key sort
-    "cohort_ltv": 3,              # first-order agg + join-back + matrix
-    "join_interval_overlap": 3,   # interval agg + bucket join + dedup
-    "rm3_expansion": 7,           # bm25 postings (checkpointed fb) +
-                                  # feedback tf agg + weight agg + rank
-    "video_scene_cuts": 1,        # per-asset window + scene agg share
-                                  # one asset-keyed exchange
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R7))
-def test_exchange_budget_r7(name, spark):
-    df = QUERIES[name](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert n <= BUDGET_R7[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R7[name]} — a new shuffle entered this query's plan"
-    )
-
-
 # ------------------------------------------------------------ k-core
 
 
@@ -385,29 +352,6 @@ def test_psi_drift_fires_on_shifted_distribution(spark):
         psi_drift(df, F.col("base"), bucket_width=0)
 
 
-BUDGET_R7_B2 = {
-    "dedup_kcore": 1,            # final degree agg (peel rounds run
-                                 # behind per-round checkpoints)
-    "dedup_token_savings": 2,    # keeper agg + source rollup (join-back
-                                 # rides the hash partitioning)
-    "events_psi_drift": 3,       # (type,bucket,side) agg + totals +
-                                 # final rollup
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R7_B2))
-def test_exchange_budget_r7_b2(name, spark):
-    df = QUERIES[name](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert n <= BUDGET_R7_B2[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R7_B2[name]} — a new shuffle entered this query's plan"
-    )
-
-
 # ----------------------------------------------------------- KMV sketch
 
 
@@ -441,36 +385,6 @@ def test_zone_map_zorder_prunes_both_dimensions(spark):
     assert lin.prune_y == 0.0 and lin.prune_x > 0.5
     # z-order prunes BOTH dimensions
     assert zo.prune_x > 0.5 and zo.prune_y > 0.5
-
-
-BUDGET_R7_B3 = {
-    "kmv_distinct_sketch": 5,   # RAISED 2->5 in r8 for the honest
-                                # merge shape (ADVICE r7: ALL now built
-                                # from the per-group sketches, not the
-                                # full set): two WindowGroupLimit-
-                                # capped sketch windows + the G*k-row
-                                # merged-sketch distinct are all
-                                # sketch-volume exchanges; the per-
-                                # scope count partial-combines; the
-                                # ONLY corpus-volume exchange is the
-                                # ALL n_exact count-distinct, which is
-                                # the grading column a sketch-only
-                                # production plan drops
-    "zone_map_prune_eval": 4,   # two zone-map aggs + two 1-row rollups
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R7_B3))
-def test_exchange_budget_r7_b3(name, spark):
-    df = QUERIES[name](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert n <= BUDGET_R7_B3[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R7_B3[name]} — a new shuffle entered this query's plan"
-    )
 
 
 # ------------------------------------------------------------ TextRank
@@ -522,30 +436,6 @@ def test_theil_sen_is_robust_to_one_burst(spark):
     assert out[1].rising and out[1].slope_median == 1.0
     assert not out[2].rising and out[2].slope_median == 0.0
     assert out[1].n_buckets == 7 and out[1].n_pairs == 21
-
-
-BUDGET_R7_B4 = {
-    "textrank_terms": 14,       # cooc tokens window + pair agg + the
-                                # 3 unrolled pagerank rounds' joins/aggs
-                                # — every one over the ~100-row
-                                # checkpointed edge list, vocabulary-
-                                # bounded at any corpus size
-    "events_theil_sen": 4,      # pair join + median agg + bucket-count
-                                # join (daily series checkpointed once)
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R7_B4))
-def test_exchange_budget_r7_b4(name, spark):
-    df = QUERIES[name](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert n <= BUDGET_R7_B4[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R7_B4[name]} — a new shuffle entered this query's plan"
-    )
 
 
 # ----------------------------------------------------------- audio VAD
@@ -614,25 +504,6 @@ def test_ab_chi2_excludes_null_variant_rows_entirely(spark):
     assert out.chi2 == 0.0 and not out.significant
     # dof = (n_variants-1)*(k-1) with NULL-v rows gone: (2-1)*(2-1)
     assert out.dof == 1
-
-
-BUDGET_R7_B5 = {
-    "audio_vad_segments": 0,    # map-only decode + run detection
-    "events_ab_chi2": 4,        # cell agg + two margin rollups + final
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R7_B5))
-def test_exchange_budget_r7_b5(name, spark):
-    df = QUERIES[name](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert n <= BUDGET_R7_B5[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R7_B5[name]} — a new shuffle entered this query's plan"
-    )
 
 
 # --------------------------------------------------------- Kaplan–Meier
@@ -718,29 +589,6 @@ def test_pareto_concentration_shares(spark):
     assert sum(r.n_customers for r in out) == 10
     with pytest.raises(ValueError):
         pareto_concentration(orders, n_tiles=1)
-
-
-BUDGET_R7_B6 = {
-    "events_kaplan_meier": 4,   # lifetime agg + duration agg + the two
-                                # duration-table windows
-    "orders_pareto": 6,         # distributed rank (range repartition +
-                                # pid windows + offsets) + tile agg +
-                                # cum window — NO single-task global
-                                # ntile window anywhere
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R7_B6))
-def test_exchange_budget_r7_b6(name, spark):
-    df = QUERIES[name](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert n <= BUDGET_R7_B6[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R7_B6[name]} — a new shuffle entered this query's plan"
-    )
 
 
 def test_distributed_rank_equals_global_window(spark):
@@ -857,24 +705,3 @@ def test_conversion_latency_first_pairs_only(spark):
     assert out.n_users == 3 and out.n_converted == 1
     assert out.conv_rate == round(1 / 3, 6)
     assert out.median_latency_sec == 1800.0 == out.p90_latency_sec
-
-
-BUDGET_R7_B7 = {
-    "embedding_zscore_outliers": 3,  # dim-stats agg + per-vector score
-                                     # agg (stats broadcast back)
-    "events_burstiness": 2,          # bucket agg + per-key moment agg
-    "events_conversion_latency": 4,  # two firsts + key join + rollup
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R7_B7))
-def test_exchange_budget_r7_b7(name, spark):
-    df = QUERIES[name](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert n <= BUDGET_R7_B7[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R7_B7[name]} — a new shuffle entered this query's plan"
-    )

@@ -157,42 +157,6 @@ def test_bloom_probe_runs_before_any_exchange(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-# ------------------------------------------------------ shuffle budget
-
-# measured at introduction (local[*], sf0.001) — exact upper bounds;
-# lowering one is an improvement, raising one needs a justification
-BUDGET_R8B = {
-    "simhash_pairs": 2,         # fingerprint groupBy + band equi-join
-                                # (b-side exchange reused) incl. distinct
-    "simhash_dedup_drop": 2,    # final keeper join over the
-                                # checkpointed CC labels (the CC loop's
-                                # own exchanges run per-round inside
-                                # dedup_clusters, not in this plan)
-    "join_bloom_prefilter": 1,  # result groupBy only: the probe is
-                                # map-side and the fixture-scale dim
-                                # auto-broadcasts (at dim sizes past the
-                                # broadcast threshold the join adds its
-                                # two exchanges — that regime is the
-                                # operator's raison d'être, not a
-                                # regression)
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R8B))
-def test_exchange_budget_r8b(name, spark):
-    from data_pipeline2_spark import registry
-
-    df = registry.queries()[name](spark, SF)
-    plan = _plan(df)
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert n <= BUDGET_R8B[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R8B[name]} — a new shuffle entered this query's plan"
-    )
-
-
 def test_bloom_prefilter_join_type_mismatch_raises(spark):
     """xxhash64 is type-sensitive: an int fact key probing bigint-built
     bloom bits would false-negative EVERY row. The guard refuses the

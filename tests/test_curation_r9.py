@@ -168,38 +168,6 @@ def test_semdedup_plan_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-# measured at introduction (local[*], sf0.001) — exact upper bounds;
-# lowering one is an improvement, raising one needs a justification
-BUDGET_R9 = {
-    "simhash_pairs_capped": 6,  # fingerprint groupBy + bucket-count agg
-                                # + two band-join sides + distinct (the
-                                # broadcast cool-list join adds none;
-                                # exchange reuse does not fire across
-                                # the cap filter at fixture scale)
-    "semdedup": 4,              # cluster-join sides + dropped distinct
-                                # + final keeper join; Lloyd's rounds
-                                # run pre-plan (driver-coordinated)
-    "text_expectations": 1,     # the whole suite is ONE aggregation
-    # cdc_upsert_stream excluded: it executes a streaming pipeline at
-    # call time; the returned frame is a plain parquet read-back
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R9))
-def test_exchange_budget_r9(name, spark):
-    from data_pipeline2_spark import registry
-
-    df = registry.queries()[name](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert n <= BUDGET_R9[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R9[name]} — a new shuffle entered this query's plan"
-    )
-
-
 def test_levenshtein_is_codepoint_faithful(spark):
     """The ENGINE's edit distance counts codepoints, not bytes ('é' is
     one edit, not two) — the registry key projects to ASCII only

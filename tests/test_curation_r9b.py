@@ -4,8 +4,8 @@ Backoff held-out LM scoring, CCNet perplexity bucketing, wordlist gate.
 Value parity vs DuckDB is covered for every key by test_oracle_parity
 (and the dirty/empty-lake gates pick the keys up automatically); these
 tests pin the SEMANTICS on constructed micro-corpora — which occurrence
-survives, which backoff level fires, which bucket a tie lands in —
-plus the exchange budgets measured at introduction.
+survives, which backoff level fires, which bucket a tie lands in.
+Their exchange budgets are in test_exchange_budget.py.
 """
 
 from __future__ import annotations
@@ -15,10 +15,7 @@ import math
 
 import pytest
 
-from data_pipeline2_spark import registry
 from data_pipeline2_spark.operators import quality
-
-SF = "/root/testdata/sf0.001"
 
 
 def _docs(spark, rows):
@@ -146,33 +143,6 @@ def test_blocklist_filter_threshold_semantics(spark):
     assert out[1]["blocked"] and out[1]["n_blocked"] == 3
     assert not out[2]["blocked"] and out[2]["n_blocked"] == 0
     assert out[3]["n_tokens"] == 0 and not out[3]["blocked"]
-
-
-# ------------------------------------------------------- exchange budgets
-
-BUDGET_R9B = {
-    "block_dedup_keep_first": 2,   # fingerprint min-agg + per-doc rollup
-                                   # (join-back rides the agg partitioning)
-    "stupid_backoff_logprob": 3,   # held window + per-doc agg; counts
-                                   # tables aggregate behind checkpoints
-    "perplexity_buckets": 2,       # unigram agg + per-doc join-agg; the
-                                   # bucket map derives from checkpointed
-                                   # scores and broadcasts back
-    "blocklist_filter": 0,         # pure map-only Catalyst projection
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R9B))
-def test_exchange_budget_r9b(name, spark):
-    df = registry.queries()[name](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert n <= BUDGET_R9B[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R9B[name]} — a new shuffle entered this query's plan"
-    )
 
 
 # ------------------------------------------------------------- unimax

@@ -5,8 +5,8 @@ Value parity vs DuckDB is covered for every key by test_oracle_parity
 (and the dirty/empty-lake gates pick the keys up automatically); these
 tests pin the SEMANTICS on constructed micro-corpora — the one-sided
 CMS error, sketch linearity (mergeability), which line occurrence
-survives, which pair PMI ranks first — plus the exchange budgets
-measured at introduction.
+survives, which pair PMI ranks first. Their exchange budgets are in
+test_exchange_budget.py.
 """
 
 from __future__ import annotations
@@ -16,10 +16,7 @@ import math
 
 import pytest
 
-from data_pipeline2_spark import registry
 from data_pipeline2_spark.operators import quality, textanalysis
-
-SF = "/root/testdata/sf0.001"
 
 
 def _docs(spark, rows):
@@ -172,28 +169,3 @@ def test_pmi_validates_params(spark):
         textanalysis.pmi_collocations(df, window=0)
     with pytest.raises(ValueError, match="min_pairs"):
         textanalysis.pmi_collocations(df, min_pairs=0)
-
-
-# ------------------------------------------------------- exchange budgets
-
-BUDGET_R9C = {
-    "cms_frequency_eval": 2,    # sketch cell agg + probe-estimate agg
-                                # (the corpus word-count agg runs once
-                                # at the vocab checkpoint)
-    "strip_repeated_lines": 0,  # ONE Catalyst projection, zero shuffles
-    "pmi_collocations": 3,      # doc window + pair agg + unigram agg;
-                                # unigram joins broadcast back
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R9C))
-def test_exchange_budget_r9c(name, spark):
-    df = registry.queries()[name](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert n <= BUDGET_R9C[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R9C[name]} — a new shuffle entered this query's plan"
-    )

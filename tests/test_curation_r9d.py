@@ -4,8 +4,8 @@ and graded-relevance nDCG@k.
 Value parity vs DuckDB is covered by test_oracle_parity (and the
 dirty/empty-lake gates); these pin the SEMANTICS on constructed
 micro-corpora — longest-match-first preference, the UNK contract,
-train/held-out split residues, ideal-vs-achieved DCG orderings — plus
-the exchange budgets measured at introduction.
+train/held-out split residues, ideal-vs-achieved DCG orderings. Their
+exchange budgets are in test_exchange_budget.py.
 """
 
 from __future__ import annotations
@@ -14,10 +14,7 @@ import hashlib
 
 import pytest
 
-from data_pipeline2_spark import registry
 from data_pipeline2_spark.operators import similarity, tokenizer
-
-SF = "/root/testdata/sf0.001"
 
 
 def _docs(spark, rows):
@@ -155,28 +152,3 @@ def test_ndcg_penalizes_rel1_above_rel2(spark):
 def test_ndcg_validates_k(spark):
     with pytest.raises(ValueError, match="k must be"):
         similarity.retrieval_ndcg(_emb(spark, [(1, [1.0], 1)]), k=0)
-
-
-# ------------------------------------------------------- exchange budgets
-
-BUDGET_R9D = {
-    "wordpiece_tokenize": 4,  # distinct scored words + per-doc rollup +
-                              # the left-join pair back onto scored ids
-                              # (vocab fit runs at its own collect)
-    "retrieval_ndcg": 4,      # query window + top-k window + grade agg
-                              # (+1 AQE-shaped residual); corpus never
-                              # shuffles — the knn_batch broadcast shape
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R9D))
-def test_exchange_budget_r9d(name, spark):
-    df = registry.queries()[name](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert n <= BUDGET_R9D[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R9D[name]} — a new shuffle entered this query's plan"
-    )

@@ -1,7 +1,8 @@
 """Round-9e operator tests: t-closeness EMD audit and lag-1
 autocorrelation. Value parity vs DuckDB is covered by
 test_oracle_parity + the lake gates; these pin semantics on
-constructed fixtures plus the exchange budgets at introduction.
+constructed fixtures. Their exchange budgets are in
+test_exchange_budget.py.
 """
 
 from __future__ import annotations
@@ -10,10 +11,7 @@ from datetime import datetime
 
 import pytest
 
-from data_pipeline2_spark import registry
 from data_pipeline2_spark.operators import aggregates, governance
-
-SF = "/root/testdata/sf0.001"
 
 
 # ------------------------------------------------------------ t-closeness
@@ -120,54 +118,6 @@ def test_lag_autocorr_gaps_break_pairs(spark):
 def test_lag_autocorr_validates_min_pairs(spark):
     with pytest.raises(ValueError, match="min_pairs"):
         aggregates.lag_autocorr(_events(spark, [(1, 0)]), min_pairs=1)
-
-
-# ------------------------------------------------------- exchange budgets
-
-BUDGET_R9E = {
-    "corpus_datasheet": 4,     # four independent single-row aggs (doc
-                               # stats incl. percentile sort, vocab,
-                               # sha dups, lang mix), crossJoined
-    "phonetic_vocab_groups": 3,  # vocab agg + per-code sample window
-                               # + code rollup (soundex chain map-side)
-    "heaps_fit": 2,            # word->min-doc agg + per-doc token agg;
-                               # checkpoint cells and the fit are
-                               # single-row combinations
-    "texttiling_boundaries": 4,  # sent-term agg + (doc,gap,term)
-                               # side-pivot agg + (doc,gap) cosine agg
-                               # + per-doc windows (rollup reuses doc
-                               # partitioning)
-    "zipf_fit": 3,             # (source, word) agg + per-source rank
-                               # window + the per-source regression agg
-    "kneser_ney_logprob": 6,   # train bigram window+agg run at the
-                               # checkpoint; held window + 3 LEFT joins
-                               # (bigram/ctx/nbw keyed) + per-doc rollup
-    "stream_tumbling_upsert": 0,  # batch READBACK plan of the merged
-                               # table (the streaming job's shuffles
-                               # happen inside the drained query)
-    "curriculum_order": 2,     # distinct-difficulty agg + the
-                               # (stage, shard) seq window (the scored
-                               # projection checkpoints once)
-    "t_closeness": 4,          # class-value agg + class rollup + the
-                               # per-class cumulative window + final
-                               # rollup (global value table checkpoints
-                               # and broadcasts)
-    "events_lag_autocorr": 3,  # (key,hour) agg + per-key window + the
-                               # per-key rollup
-}
-
-
-@pytest.mark.parametrize("name", sorted(BUDGET_R9E))
-def test_exchange_budget_r9e(name, spark):
-    df = registry.queries()[name](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    assert n <= BUDGET_R9E[name], (
-        f"{name}: plan has {n} hash/range exchanges, budget is "
-        f"{BUDGET_R9E[name]} — a new shuffle entered this query's plan"
-    )
 
 
 # --------------------------------------------------------- curriculum

@@ -799,9 +799,11 @@ def test_ann_recall_stats_gates_correctly(spark):
     # adversarial ANN: bottom-5 by score — zero overlap with the top-5
     from pyspark.sql.window import Window
 
+    from data_pipeline2_spark.functions.vectors import cosine_similarity
+
     scored = emb.crossJoin(F.broadcast(q)).select(
         "qid", "vec_id",
-        similarity.cosine_similarity(F.col("embedding"), F.col("qvec")).alias("s"),
+        cosine_similarity(F.col("embedding"), F.col("qvec")).alias("s"),
     )
     w = Window.partitionBy("qid").orderBy(F.asc("s"), F.col("vec_id"))
     worst = (

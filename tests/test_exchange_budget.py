@@ -80,7 +80,9 @@ BUDGET = {
     "knn_batch_ivf_exact": 5,   # assign window + probe window + rescore joins
     "knn_batch_ivf": 5,         # same plan at n_probe=3
     "knn_batch_lsh": 1,         # sig hash join (broadcast q) + top-k window
-    "knn_batch_ivfpq": 7,       # coarse IVF + ADC rank + exact rerank
+    "knn_batch_ivfpq": 6,       # coarse IVF + ADC rank + exact rerank
+                                # (7 -> 6: the cell join emits each
+                                # (qid, vec_id) once, no dedup exchange)
     "dup_graph_triangles": 4,   # minhash bands + verify + 2 pair joins
     "pretrain_pack": 1,         # ONE per-source window (was a global
                                 # single-task window before r6)
@@ -124,6 +126,164 @@ BUDGET = {
     # SCALE.md); the returned serve plan is the pruned cell scan +
     # dedup + the <= k ranking window — one hash exchange
     "streaming_search_e2e": 1,
+    # registry/curation_r6b.py keys (measured at introduction)
+    "events_rate_limit": 3,     # (user,win) window + distinct 2-phase agg
+    "retrieval_metrics": 3,     # top-k window + per-qid agg + label counts
+    "text_normalize": 0,        # map-only pandas_udf pass
+    "agg_higher_moments": 1,    # one hash agg (percentile rides it)
+    "ntile_segments": 1,        # segment window; groupBy reuses partitioning
+    "events_resample_ohlc": 1,  # one map-side-combined hash agg
+    "fuzzy_join_ed1": 2,        # vocab distincts; variant join + dedup
+    "events_seasonal_baseline": 2,  # two aggs; profile join broadcasts
+    "topic_cluster_terms": 8,   # assign window + doc join + 3 token
+                                # aggs + lift joins + top-n window
+    "retrieval_metrics_mrl16": 3,  # same plan as retrieval_metrics
+    "winsorized_stats": 2,      # percentile agg + clipped-moment agg
+    "ngram_novelty": 4,         # shingle window + first-seen agg + join
+    "bigram_logprob": 6,        # doc window + uni/bigram aggs + 2 joins
+    "events_variant_agg": 2,    # distinct-agg two-phase over variant field
+    "events_type_entropy": 3,   # (user,type) agg + totals + final rollup
+    "sparse_cosine_topk": 11,   # posting self-join + dots + half-matrix
+                                # mirror + norm joins + per-doc top-k
+                                # window; the tokenize→tf→df_cap-prune
+                                # prefix runs once behind an eager
+                                # localCheckpoint (r7: prune engaged,
+                                # VERDICT r6 item 2)
+    "ngram_novelty_incremental": 4,  # two shingle windows + store
+                                     # distinct + per-doc rollup
+    # registry/curation_r7.py keys (measured at introduction)
+    "image_ahash_band_eval": 4,   # truth agg + banded join + distinct +
+                                  # recall join (ground-truth arm is the
+                                  # documented fixture-scale crossJoin)
+    "k_anonymity": 1,             # one hash agg on the quasi tuple
+    "gdpr_delete_cascade": 4,     # per-entity count aggs; deletes are
+                                  # broadcast anti-joins (no shuffle)
+    "char_entropy": 3,            # (doc,ch) agg + totals + join-back
+    "events_cusum_drift": 4,      # bucket agg + totals + 2 windows share
+                                  # the per-key sort
+    "cohort_ltv": 3,              # first-order agg + join-back + matrix
+    "join_interval_overlap": 3,   # interval agg + bucket join + dedup
+    "rm3_expansion": 7,           # bm25 postings (checkpointed fb) +
+                                  # feedback tf agg + weight agg + rank
+    "video_scene_cuts": 1,        # per-asset window + scene agg share
+                                  # one asset-keyed exchange
+    "dedup_kcore": 1,            # final degree agg (peel rounds run
+                                 # behind per-round checkpoints)
+    "dedup_token_savings": 2,    # keeper agg + source rollup (join-back
+                                 # rides the hash partitioning)
+    "events_psi_drift": 3,       # (type,bucket,side) agg + totals +
+                                 # final rollup
+    "kmv_distinct_sketch": 5,   # RAISED 2->5 in r8 for the honest
+                                # merge shape (ADVICE r7: ALL now built
+                                # from the per-group sketches, not the
+                                # full set): two WindowGroupLimit-
+                                # capped sketch windows + the G*k-row
+                                # merged-sketch distinct are all
+                                # sketch-volume exchanges; the per-
+                                # scope count partial-combines; the
+                                # ONLY corpus-volume exchange is the
+                                # ALL n_exact count-distinct, which is
+                                # the grading column a sketch-only
+                                # production plan drops
+    "zone_map_prune_eval": 4,   # two zone-map aggs + two 1-row rollups
+    "textrank_terms": 14,       # cooc tokens window + pair agg + the
+                                # 3 unrolled pagerank rounds' joins/aggs
+                                # — every one over the ~100-row
+                                # checkpointed edge list, vocabulary-
+                                # bounded at any corpus size
+    "events_theil_sen": 4,      # pair join + median agg + bucket-count
+                                # join (daily series checkpointed once)
+    "audio_vad_segments": 0,    # map-only decode + run detection
+    "events_ab_chi2": 4,        # cell agg + two margin rollups + final
+    "events_kaplan_meier": 4,   # lifetime agg + duration agg + the two
+                                # duration-table windows
+    "orders_pareto": 6,         # distributed rank (range repartition +
+                                # pid windows + offsets) + tile agg +
+                                # cum window — NO single-task global
+                                # ntile window anywhere
+    "embedding_zscore_outliers": 3,  # dim-stats agg + per-vector score
+                                     # agg (stats broadcast back)
+    "events_burstiness": 2,          # bucket agg + per-key moment agg
+    "events_conversion_latency": 4,  # two firsts + key join + rollup
+    # registry/curation_r8b.py keys (measured at introduction)
+    "simhash_pairs": 2,         # fingerprint groupBy + band equi-join
+                                # (b-side exchange reused) incl. distinct
+    "simhash_dedup_drop": 2,    # final keeper join over the
+                                # checkpointed CC labels (the CC loop's
+                                # own exchanges run per-round inside
+                                # dedup_clusters, not in this plan)
+    "join_bloom_prefilter": 1,  # result groupBy only: the probe is
+                                # map-side and the fixture-scale dim
+                                # auto-broadcasts (at dim sizes past the
+                                # broadcast threshold the join adds its
+                                # two exchanges — that regime is the
+                                # operator's raison d'être, not a
+                                # regression)
+    # registry/curation_r9.py keys (measured at introduction)
+    "simhash_pairs_capped": 6,  # fingerprint groupBy + bucket-count agg
+                                # + two band-join sides + distinct (the
+                                # broadcast cool-list join adds none;
+                                # exchange reuse does not fire across
+                                # the cap filter at fixture scale)
+    "semdedup": 4,              # cluster-join sides + dropped distinct
+                                # + final keeper join; Lloyd's rounds
+                                # run pre-plan (driver-coordinated)
+    "text_expectations": 1,     # the whole suite is ONE aggregation
+    # cdc_upsert_stream excluded: it executes a streaming pipeline at
+    # call time; the returned frame is a plain parquet read-back
+    # registry/curation_r9b.py keys (measured at introduction)
+    "block_dedup_keep_first": 2,   # fingerprint min-agg + per-doc rollup
+                                   # (join-back rides the agg partitioning)
+    "stupid_backoff_logprob": 3,   # held window + per-doc agg; counts
+                                   # tables aggregate behind checkpoints
+    "perplexity_buckets": 2,       # unigram agg + per-doc join-agg; the
+                                   # bucket map derives from checkpointed
+                                   # scores and broadcasts back
+    "blocklist_filter": 0,         # pure map-only Catalyst projection
+    # registry/curation_r9c.py keys (measured at introduction)
+    "cms_frequency_eval": 2,    # sketch cell agg + probe-estimate agg
+                                # (the corpus word-count agg runs once
+                                # at the vocab checkpoint)
+    "strip_repeated_lines": 0,  # ONE Catalyst projection, zero shuffles
+    "pmi_collocations": 3,      # doc window + pair agg + unigram agg;
+                                # unigram joins broadcast back
+    # registry/curation_r9d.py keys (measured at introduction)
+    "wordpiece_tokenize": 4,  # distinct scored words + per-doc rollup +
+                              # the left-join pair back onto scored ids
+                              # (vocab fit runs at its own collect)
+    "retrieval_ndcg": 4,      # query window + top-k window + grade agg
+                              # (+1 AQE-shaped residual); corpus never
+                              # shuffles — the knn_batch broadcast shape
+    # registry/curation_r9e.py keys (measured at introduction)
+    "corpus_datasheet": 4,     # four independent single-row aggs (doc
+                               # stats incl. percentile sort, vocab,
+                               # sha dups, lang mix), crossJoined
+    "phonetic_vocab_groups": 3,  # vocab agg + per-code sample window
+                               # + code rollup (soundex chain map-side)
+    "heaps_fit": 2,            # word->min-doc agg + per-doc token agg;
+                               # checkpoint cells and the fit are
+                               # single-row combinations
+    "texttiling_boundaries": 4,  # sent-term agg + (doc,gap,term)
+                               # side-pivot agg + (doc,gap) cosine agg
+                               # + per-doc windows (rollup reuses doc
+                               # partitioning)
+    "zipf_fit": 3,             # (source, word) agg + per-source rank
+                               # window + the per-source regression agg
+    "kneser_ney_logprob": 6,   # train bigram window+agg run at the
+                               # checkpoint; held window + 3 LEFT joins
+                               # (bigram/ctx/nbw keyed) + per-doc rollup
+    "stream_tumbling_upsert": 0,  # batch READBACK plan of the merged
+                               # table (the streaming job's shuffles
+                               # happen inside the drained query)
+    "curriculum_order": 2,     # distinct-difficulty agg + the
+                               # (stage, shard) seq window (the scored
+                               # projection checkpoints once)
+    "t_closeness": 4,          # class-value agg + class rollup + the
+                               # per-class cumulative window + final
+                               # rollup (global value table checkpoints
+                               # and broadcasts)
+    "events_lag_autocorr": 3,  # (key,hour) agg + per-key window + the
+                               # per-key rollup
 }
 
 

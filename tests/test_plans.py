@@ -92,6 +92,15 @@ def test_knn_cosine_list_query_folds_twice_per_row(spark):
     assert "zip_with(transform(" not in plan
 
 
+def test_knn_batch_folds_once_per_pair(spark):
+    # each side's norm is projected once per row before the cross join,
+    # so a (corpus, query) pair folds only its dot
+    df = QUERIES["knn_batch"](spark, SF)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("aggregate(") == 3
+    assert "zip_with(transform(" not in plan
+
+
 def test_semi_join_for_exists(spark):
     plan = plan_of(QUERIES["q4_order_priority"](spark, SF))
     assert "LeftSemi" in plan

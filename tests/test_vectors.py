@@ -1,6 +1,7 @@
-"""functions/vectors.py: the one-call vector literal and the cosine
-kernel against a driver-known query must reproduce the general
-column-vs-column expressions bit for bit, edge values included."""
+"""functions/vectors.py: the one-call vector literal, the cosine kernel
+against a driver-known query and the norm-projected pairwise kernel
+must reproduce the general `cosine_similarity` expression bit for bit,
+edge values included."""
 
 from __future__ import annotations
 
@@ -14,11 +15,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline2_spark.functions.vectors import (
+    cosine,
     cosine_similarity,
     cosine_to_query,
     l2_norm,
     query_norm,
     query_vector_lit,
+    with_norm,
 )
 
 DIM = 8
@@ -109,6 +112,29 @@ def test_cosine_to_query_bit_identical(spark, corpus, elem):
         got = {(r["name"], r["id"]): _bits(r["score"]) for r in got_df.collect()}
         assert got == want, form
     qall.unpersist()
+
+
+@pytest.mark.parametrize("a_elem,b_elem", [
+    ("double", "double"), ("float", "float"), ("float", "double"),
+])
+@pytest.mark.parametrize("scale", [None, 6])
+def test_pairwise_cosine_bit_identical(corpus, a_elem, b_elem, scale):
+    # every corpus row (zero, NaN, -0.0, 5e-324, 1e308, short and NULL
+    # rows included) against every other, norms projected per side
+    a = with_norm(corpus[a_elem].select(F.col("id").alias("ia"),
+                                        F.col("v").alias("a")), "a", "an")
+    b = with_norm(corpus[b_elem].select(F.col("id").alias("ib"),
+                                        F.col("v").alias("b")), "b", "bn")
+    ref = cosine_similarity(F.col("a"), F.col("b"))
+    pairs = a.crossJoin(b).select(
+        "ia", "ib",
+        (ref if scale is None else F.round(ref, scale)).alias("want"),
+        cosine("a", "an", "b", "bn", scale).alias("got"),
+    ).collect()
+    assert len(pairs) == len(_rows()) ** 2
+    bad = [(r["ia"], r["ib"]) for r in pairs
+           if _bits(r["got"]) != _bits(r["want"])]
+    assert not bad, bad[:5]
 
 
 def test_cosine_to_query_rounds_like_f_round(corpus):
