@@ -170,24 +170,6 @@ def minhash_signatures(
     return wide.selectExpr("doc_id", f"inline(array({structs}))")
 
 
-def lsh_band_keys(signatures: DataFrame, band_size: int = BAND_SIZE) -> DataFrame:
-    """Fold signature rows into per-band bucket keys → (doc_id, band, band_key)."""
-    banded = signatures.withColumn(
-        "band", (F.col("perm") / F.lit(band_size)).cast("int")
-    )
-    return banded.groupBy("doc_id", "band").agg(
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("perm", "mh"))),
-                    lambda s: s["mh"].cast("string"),
-                ),
-                ",",
-            )
-        ).alias("band_key")
-    )
-
-
 def lsh_candidate_pairs(band_keys: DataFrame) -> DataFrame:
     """Distinct doc pairs sharing >= 1 band bucket → (doc_a, doc_b), a < b.
 
@@ -313,10 +295,10 @@ def lsh_band_keys_wide(
 ) -> DataFrame:
     """Band bucket keys from wide signatures → (doc_id, band, band_key).
 
-    band_key = md5 of the band's signature values joined in perm order —
-    byte-identical to lsh_band_keys on the long format. Built as one
-    SQL string (r11 py4j rule — the nested Column loop cost
-    ~n_bands x band_size JVM calls per build).
+    band_key = md5 of the band's signature values, cast to strings and
+    comma-joined in perm order. Built as one SQL string (r11 py4j rule
+    — the nested Column loop cost ~n_bands x band_size JVM calls per
+    build).
     """
     n_bands = n_perm // band_size
     bands = ", ".join(

@@ -45,10 +45,6 @@ def join_anti_incremental(
     return pending.join(done, on=keys, how="left_anti")
 
 
-def join_semi(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
-    return left.join(right, on=keys, how="left_semi")
-
-
 def revenue_by_nation(
     customer: DataFrame,
     orders: DataFrame,
@@ -436,21 +432,6 @@ def dormant_high_balance(
             exact_sum(F.col("c_acctbal")).alias("totacctbal"),
         )
         .orderBy("c_nationkey")
-    )
-
-
-def range_join_events(
-    events: DataFrame, windows: DataFrame, ts_col: str = "ts"
-) -> DataFrame:
-    """Non-equi (interval containment) join: event ts ∈ [w_start, w_end).
-
-    Broadcast the window table (small); Spark plans BroadcastNestedLoop —
-    at scale, bin both sides to an hour key first to make it an equi-join
-    plus residual predicate (that scale path is `join_range`).
-    """
-    return events.join(
-        F.broadcast(windows),
-        (F.col(ts_col) >= F.col("w_start")) & (F.col(ts_col) < F.col("w_end")),
     )
 
 

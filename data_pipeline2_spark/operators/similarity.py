@@ -199,6 +199,30 @@ def signature_col(vec_col: Column, planes) -> Column:
     return F.concat(*bits)
 
 
+def _f64_rows(vs) -> np.ndarray:
+    """Equal-length vectors (a pandas column of arrays) → an (n, dim)
+    float64 matrix."""
+    return np.array([np.asarray(v, dtype=np.float64) for v in vs])
+
+
+def _hash_sample(
+    embeddings: DataFrame, id_col: str, vec_col: str, seed: int, sample_cap: int
+) -> np.ndarray:
+    """The bounded deterministic sample every driver-side fit trains on
+    (FAISS trains on a sample too): the first `sample_cap` vectors in
+    xxhash64(id, seed) order, as an (n, dim) float64 matrix."""
+    sample = (
+        embeddings.select(
+            F.col(vec_col).alias("v"),
+            F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)).alias("__h"),
+        )
+        .orderBy("__h")
+        .limit(sample_cap)
+        .toPandas()
+    )
+    return _f64_rows(sample["v"])
+
+
 def _kmeans_fit_sample(
     embeddings: DataFrame,
     id_col: str,
@@ -211,16 +235,7 @@ def _kmeans_fit_sample(
     """Spherical k-means centroids from a deterministic hash-ordered
     sample. Driver-side on purpose: the sample is capped, so this is
     O(cap·d·iter) numpy — not a distributed loop over the corpus."""
-    sample = (
-        embeddings.select(
-            F.col(vec_col).alias("v"),
-            F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)).alias("__h"),
-        )
-        .orderBy("__h")
-        .limit(sample_cap)
-        .toPandas()
-    )
-    x = np.array([np.asarray(v, dtype=np.float64) for v in sample["v"]])
+    x = _hash_sample(embeddings, id_col, vec_col, seed, sample_cap)
     if len(x) == 0:
         raise ValueError("kmeans_fit: empty embeddings corpus")
     # L2-normalize: on the unit sphere argmin euclidean == argmax cosine,
@@ -264,65 +279,11 @@ def _nearest_cells_udf(centroids: list[list[float]]):
         if len(v) == 0:
             return pd.Series([], dtype=object)
         top = int(n.iloc[0])
-        X = np.stack([np.asarray(row, dtype=np.float64) for row in v])
-        sims = X @ C.T
+        sims = _f64_rows(v) @ C.T
         order = np.argsort(-sims, kind="stable", axis=1)[:, :top]
         return pd.Series(list(order.astype("int32")))
 
     return cells
-
-
-def knn_batch_ivf(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_clusters: int = 8,
-    n_probe: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
-) -> DataFrame:
-    """IVF-style approximate batched kNN: KMeans-partition the corpus,
-    probe only the n_probe nearest centroids per query, exact re-score
-    inside probed cells.
-
-    The inverted-file structure is the corpus clustered (and, in a real
-    lake, physically partitioned) by centroid id — a query touches
-    n_probe/n_clusters of the data. Centroids are trained once
-    (deterministic seed) and broadcast; recall grows with n_probe.
-
-    Training is driver-side numpy Lloyd's on a BOUNDED deterministic
-    sample (hash-ordered, `sample_cap` rows) — the FAISS pattern:
-    centroid quality needs a sample, not the corpus, so training cost
-    is O(cap·d·iters) regardless of corpus size, while assignment (the
-    O(N) part) stays a distributed Catalyst expression. This replaced
-    an MLlib KMeans fit that spent ~8s of JVM job overhead on a
-    2000-row input.
-    """
-    centroids = _kmeans_fit_sample(
-        embeddings, id_col, vec_col, n_clusters, seed
-    )
-    # cell ranking is a dense matmul against the (tiny, broadcast-in-
-    # closure) centroid matrix — one vectorized Arrow batch per task.
-    # The Catalyst-expression alternative (array_sort over n_clusters
-    # nested aggregate-folds) is interpreted, not codegen'd, and
-    # measured ~10x slower; numpy here IS the scale path (FAISS does
-    # the same), not a shortcut.
-    nearest_cells = _nearest_cells_udf(centroids)
-
-    # a corpus row has exactly one cell and a query probes distinct
-    # cells, so the cell join emits each (qid, vec_id) pair once
-    e = with_norm(embeddings, vec_col, "__vn").withColumn(
-        "__cell", F.element_at(nearest_cells(F.col(vec_col), F.lit(1)), 1)
-    )
-    q = with_norm(queries, qvec_col, "__qn").withColumn(
-        "__cell", F.explode(nearest_cells(F.col(qvec_col), F.lit(n_probe)))
-    )
-    return _knn_scored(
-        e.join(F.broadcast(q), "__cell"), k, id_col, vec_col, qid_col, qvec_col
-    )
 
 
 def knn_batch_lsh(
@@ -587,7 +548,7 @@ def quantize_embeddings(
     (doc_pipeline/services/vector_storage.py:42-59 stores float vectors
     verbatim; quantization is the scale-path refinement).
     """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = _as_double(vec_col)
     absmax = F.array_max(F.transform(v, F.abs))
     scale = (absmax / F.lit(127.0)).alias("_scale")
     df = embeddings.select(F.col(id_col).alias("vec_id"), v.alias("_v"), scale)
@@ -668,6 +629,11 @@ def hard_negatives(
     )
 
 
+def _as_double(vec_col: str) -> Column:
+    """The vector column with every element cast to double."""
+    return F.transform(F.col(vec_col), lambda x: x.cast("double"))
+
+
 def _sq_dist(a: Column, b: Column) -> Column:
     """Squared euclidean distance, left-to-right index-order fold so
     the double arithmetic bit-matches the DuckDB oracle's fold."""
@@ -745,7 +711,7 @@ def _kmeans_trajectory(
     # set). Lazy: the init collect triggers it, so no dedicated job.
     proj = embeddings.select(
         F.col(id_col).alias("_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+        _as_double(vec_col).alias("_v"),
     ).transform(materialize_lazy)
 
     init = (
@@ -799,13 +765,13 @@ def _kmeans_trajectory(
 
 
 def _frozen_argmin_assign(df: DataFrame, cent_rows, vec_col: str) -> DataFrame:
-    """THE cell-assignment rule, existing exactly once: rounded
-    squared-L2 argmin with the lowest-cid tie — appends (__cell,
+    """THE cell assignment, existing exactly once: the `_cell_order`
+    argmin (rounded squared-L2, lowest-cid tie) — appends (__cell,
     __dist) to `df` whose `vec_col` holds array<double>. Shared by the
-    k-means fit loop and the frozen-codebook incremental add
-    (ivf_cell_assign), so a retune of the precision or tie rule can
-    never desynchronize the two — the contract ivf_index_stream's
-    oracle checks.
+    k-means fit loop, knn_batch_ivf's corpus side and the
+    frozen-codebook incremental add (ivf_cell_assign), so a retune of
+    the precision or tie rule can never desynchronize them — the
+    contract ivf_index_stream's oracle checks.
 
     Centroids ride in as ONE broadcast row holding an
     array<struct<cid,cvec>> column, and the argmin is an array_min
@@ -825,26 +791,44 @@ def _frozen_argmin_assign(df: DataFrame, cent_rows, vec_col: str) -> DataFrame:
     The zip_with/aggregate fold is interpreted per element but linear
     and plan-stable.
     """
-    cents_df = df.sparkSession.createDataFrame(
-        [([(int(cid), [float(x) for x in cvec]) for cid, cvec in cent_rows],)],
-        "cents array<struct<cid:int,cvec:array<double>>>",
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                F.round(_sq_dist(F.col(vec_col), c["cvec"]), 6).alias(
-                    "dist"
-                ),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
+    best = F.array_min(_cell_order(F.col(vec_col)))
+    cents_df = _cents_frame(df.sparkSession, cent_rows)
     return df.crossJoin(F.broadcast(cents_df)).select(
         *df.columns,
         best["cid"].alias("__cell"),
         best["dist"].alias("__dist"),
     )
+
+
+def _cents_frame(spark, cent_rows) -> DataFrame:
+    """The frozen codebook as ONE row holding `cents`
+    array<struct<cid:int, cvec:array<double>>> — the data the cell
+    order reads (see `_frozen_argmin_assign` for why not literals)."""
+    return spark.createDataFrame(
+        [([(int(cid), [float(x) for x in cvec]) for cid, cvec in cent_rows],)],
+        "cents array<struct<cid:int,cvec:array<double>>>",
+    )
+
+
+def _cell_order(v: Column) -> Column:
+    """Every centroid of the `cents` column as a (dist, cid) struct for
+    vector `v`, dist = squared-L2 rounded to 6 places. Struct ordering
+    IS the IVF cell rule — rounded distance first, lowest cid on ties —
+    so `array_min` of this is a row's cell and `_probe_order` its
+    nearest cells, one rule for assignment and probing."""
+    return F.transform(
+        F.col("cents"),
+        lambda c: F.struct(
+            F.round(_sq_dist(v, c["cvec"]), 6).alias("dist"),
+            c["cid"].alias("cid"),
+        ),
+    )
+
+
+def _probe_order(v: Column, n_probe: int) -> Column:
+    """The `n_probe` nearest cells to `v` as array<int> cids, nearest
+    first (the oracles' `ORDER BY round(sqdist, 6), cid LIMIT n`)."""
+    return F.slice(F.array_sort(_cell_order(v)), 1, n_probe)["cid"]
 
 
 def ivf_cell_assign(
@@ -871,7 +855,7 @@ def ivf_cell_assign(
     proj = df.select(
         F.col(id_col),
         *[F.col(c) for c in keep_cols],
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
+        _as_double(vec_col).alias("__v"),
     )
     return _frozen_argmin_assign(proj, cents, "__v").select(
         F.col(id_col),
@@ -880,7 +864,7 @@ def ivf_cell_assign(
     )
 
 
-def knn_batch_ivf_exact(
+def knn_batch_ivf(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
@@ -892,54 +876,40 @@ def knn_batch_ivf_exact(
     qid_col: str = "qid",
     qvec_col: str = "qvec",
 ) -> DataFrame:
-    """IVF kNN with the FULLY DETERMINISTIC distributed k-means fit
-    (rounded-decimal Lloyd's, _kmeans_trajectory) instead of the
-    numpy sampled fit — every step is engine-portable, so this ANN
-    variant is value-checkable against a SQL oracle end-to-end.
+    """IVF batched kNN: partition the corpus into k-means cells, probe
+    only each query's n_probe nearest cells, exact-rescore inside them
+    → (qid, rank, vec_id, score).
 
-    Same probe semantics as knn_batch_ivf: each corpus vector lives in
-    its rounded-L2-argmin cell; each query probes its n_probe nearest
-    cells and exact-rescoring runs only inside them. A vector belongs
-    to exactly one cell, so no (qid, vec_id) pair can duplicate.
+    The centroids come from the deterministic distributed fit
+    (rounded-decimal Lloyd's, `_kmeans_trajectory`), so every step is
+    engine-portable and the whole loop is value-checkable against a
+    SQL oracle (registry.vector_partsupp._ivf_exact_sql). A query
+    touches n_probe/n_clusters of the data; recall grows with n_probe.
+
+    Plan shape: corpus rows take their cell map-only through
+    `_frozen_argmin_assign` (the rule the fit used), queries take their
+    probes as an array expression of the same cell order against the
+    broadcast codebook, and the probed cells join the broadcast query
+    side — the only shuffle is the per-query top-k window. A vector
+    belongs to exactly one cell and a query probes distinct cells, so
+    no (qid, vec_id) pair can duplicate.
     """
-    cents, assign = _kmeans_trajectory(
-        embeddings, n_clusters, n_iter, id_col, vec_col
-    )
-    cdf = embeddings.sparkSession.createDataFrame(
-        cents, "cid int, cvec array<double>"
-    )
-    # corpus cells come from the SAME assign closure the fit used —
-    # one rounded-argmin implementation on the Spark side, mirrored once
-    # in SQL (registry.vector_partsupp._kmeans_cte_parts)
-    cells = assign(cents).select(
-        F.col("_id").alias(id_col), F.col("cluster").alias("__cell")
-    )
-
-    def nearest(df, key, vcol, top):
-        scored = df.select(
-            F.col(key).alias("__key"),
-            F.transform(F.col(vcol), lambda x: x.cast("double")).alias("__v"),
-        ).crossJoin(F.broadcast(cdf)).withColumn(
-            "__d", F.round(_sq_dist(F.col("__v"), F.col("cvec")), 6)
-        )
-        w = Window.partitionBy("__key").orderBy("__d", "cid")
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= top)
-            .select("__key", F.col("cid").alias("__cell"))
-        )
-
-    probes = nearest(queries, qid_col, qvec_col, n_probe).withColumnRenamed(
-        "__key", qid_col
+    cents, _ = _kmeans_trajectory(embeddings, n_clusters, n_iter, id_col, vec_col)
+    e = _frozen_argmin_assign(
+        with_norm(embeddings, vec_col, "__vn").withColumn("__v", _as_double(vec_col)),
+        cents,
+        "__v",
     )
     q = with_norm(queries.select(qid_col, qvec_col), qvec_col, "__qn")
-    pairs = (
-        with_norm(embeddings, vec_col, "__vn")
-        .join(cells, id_col)
-        .join(probes, "__cell")
-        .join(F.broadcast(q), qid_col)
+    probes = q.crossJoin(
+        F.broadcast(_cents_frame(queries.sparkSession, cents))
+    ).select(
+        *q.columns,
+        F.explode(_probe_order(_as_double(qvec_col), n_probe)).alias("__cell"),
     )
-    return _knn_scored(pairs, k, id_col, vec_col, qid_col, qvec_col)
+    return _knn_scored(
+        e.join(F.broadcast(probes), "__cell"), k, id_col, vec_col, qid_col, qvec_col
+    )
 
 
 # ------------------------------------------------------------ product
@@ -969,16 +939,7 @@ def pq_fit(
     the mean-only (k=1) baseline — the invariant the driver oracle
     checks without having to replay k-means in SQL.
     """
-    sample = (
-        embeddings.select(
-            F.col(vec_col).alias("v"),
-            F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)).alias("__h"),
-        )
-        .orderBy("__h")
-        .limit(sample_cap)
-        .toPandas()
-    )
-    x = np.array([np.asarray(v, dtype=np.float64) for v in sample["v"]])
+    x = _hash_sample(embeddings, id_col, vec_col, seed, sample_cap)
     if x.ndim != 2 or x.shape[0] == 0:
         raise ValueError("pq_fit: empty or ragged embedding sample")
     if normalize:
@@ -1046,9 +1007,7 @@ def pq_encode(
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            x = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
+            x = _f64_rows(pdf[vec_col])
             if len(x) == 0:
                 continue
             codes, _, _ = _pq_batch(x, codebooks)
@@ -1085,9 +1044,7 @@ def pq_reconstruct_stats(
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            x = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
+            x = _f64_rows(pdf[vec_col])
             if len(x) == 0:
                 continue
             codes, pq_err, mean_err = _pq_batch(x, books)
@@ -1116,6 +1073,61 @@ def _l2_normalize_rows(x):
     norms = np.linalg.norm(x, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return x / norms
+
+
+def _unit_queries(
+    queries: DataFrame, qid_col: str, qvec_col: str, op: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """The query batch on the driver → (qids, L2-normalized (nq, dim)
+    matrix); an empty batch is a named error, not an empty result."""
+    q_pdf = queries.select(qid_col, qvec_col).toPandas()
+    if len(q_pdf) == 0:
+        raise ValueError(f"{op}: empty query batch")
+    return q_pdf[qid_col].to_numpy(), _l2_normalize_rows(_f64_rows(q_pdf[qvec_col]))
+
+
+def _adc_lut(qx: np.ndarray, books: list) -> np.ndarray:
+    """ADC lookup table LUT[q, j, c] = <q_sub_j, codebook_j[c]>."""
+    m = len(books)
+    d_sub = qx.shape[1] // m
+    return np.stack(
+        [qx[:, j * d_sub : (j + 1) * d_sub] @ np.asarray(books[j]).T for j in range(m)],
+        axis=1,
+    )
+
+
+def _batch_candidates(
+    embeddings: DataFrame, qids: np.ndarray, rerank: int, approx, id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Map-only candidate emitter of the quantized scans: per Arrow
+    batch, `approx(x)` scores the batch's float64 vectors against every
+    query ((nq, b) matrix) and the batch emits only its own top-`rerank`
+    per query → (qid, vec_id, adc), so the shuffle carries
+    O(partitions · queries · rerank) rows, never the corpus."""
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            x = _f64_rows(pdf["__vec"])
+            if len(x) == 0:
+                continue
+            adc = approx(x)
+            n_keep = min(rerank, len(x))
+            ids = pdf["__vid"].to_numpy()
+            out_qid, out_vid, out_adc = [], [], []
+            for qi in range(len(qids)):
+                part = np.argpartition(-adc[qi], n_keep - 1)[:n_keep]
+                out_qid.extend([qids[qi]] * n_keep)
+                out_vid.extend(ids[part])
+                out_adc.extend(adc[qi, part])
+            yield pd.DataFrame(
+                {"qid": out_qid, "vec_id": out_vid, "adc": out_adc}
+            )
+
+    corpus = embeddings.select(
+        F.col(id_col).alias("__vid"), F.col(vec_col).alias("__vec")
+    )
+    return corpus.mapInPandas(score, "qid long, vec_id long, adc double")
 
 
 def _exact_rerank(
@@ -1186,50 +1198,18 @@ def knn_batch_pq(
     books = pq_fit(
         embeddings, m_subvectors, n_codes, id_col, vec_col, normalize=True
     )
-    q_pdf = queries.select(qid_col, qvec_col).toPandas()
-    if len(q_pdf) == 0:
-        raise ValueError("knn_batch_pq: empty query batch")
-    qx = _l2_normalize_rows(
-        np.array([np.asarray(v, dtype=np.float64) for v in q_pdf[qvec_col]])
-    )
-    qids = q_pdf[qid_col].to_numpy()
-    m = len(books)
-    d_sub = qx.shape[1] // m
-    # LUT[q, j, c] = <q_sub, codebook entry>
-    lut = np.stack(
-        [qx[:, j * d_sub : (j + 1) * d_sub] @ np.asarray(books[j]).T for j in range(m)],
-        axis=1,
-    )
-    top_c = rerank
+    qids, qx = _unit_queries(queries, qid_col, qvec_col, "knn_batch_pq")
+    lut = _adc_lut(qx, books)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            x = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__vec"]]
-            )
-            if len(x) == 0:
-                continue
-            codes, _, _ = _pq_batch(_l2_normalize_rows(x), books)
-            # adc[q, b] = sum_j lut[q, j, codes[b, j]]
-            adc = np.zeros((len(qids), len(x)))
-            for j in range(m):
-                adc += lut[:, j, codes[:, j]]
-            n_keep = min(top_c, len(x))
-            ids = pdf["__vid"].to_numpy()
-            out_qid, out_vid, out_adc = [], [], []
-            for qi in range(len(qids)):
-                part = np.argpartition(-adc[qi], n_keep - 1)[:n_keep]
-                out_qid.extend([qids[qi]] * n_keep)
-                out_vid.extend(ids[part])
-                out_adc.extend(adc[qi, part])
-            yield pd.DataFrame(
-                {"qid": out_qid, "vec_id": out_vid, "adc": out_adc}
-            )
+    def approx(x):
+        codes, _, _ = _pq_batch(_l2_normalize_rows(x), books)
+        # adc[q, b] = sum_j lut[q, j, codes[b, j]]
+        adc = np.zeros((len(qids), len(x)))
+        for j in range(len(books)):
+            adc += lut[:, j, codes[:, j]]
+        return adc
 
-    corpus = embeddings.select(
-        F.col(id_col).alias("__vid"), F.col(vec_col).alias("__vec")
-    )
-    cand = corpus.mapInPandas(score, "qid long, vec_id long, adc double")
+    cand = _batch_candidates(embeddings, qids, rerank, approx, id_col, vec_col)
     return _exact_rerank(
         cand, embeddings, queries, k, rerank,
         id_col, vec_col, qid_col, qvec_col,
@@ -1254,9 +1234,10 @@ def knn_batch_ivfpq(
     """IVF-PQ — the canonical billion-scale ANN composition, built from
     the two halves already in this module:
 
-    1. IVF coarse stage (knn_batch_ivf machinery): corpus clustered by
-       broadcast centroids; each query probes its n_probe nearest cells
-       — touches n_probe/n_clusters of the data;
+    1. IVF coarse stage: corpus clustered by broadcast centroids from
+       the sampled spherical fit (`_kmeans_fit_sample`, ranked by
+       `_nearest_cells_udf`); each query probes its n_probe nearest
+       cells — touches n_probe/n_clusters of the data;
     2. PQ fine stage (knn_batch_pq machinery): inside probed cells,
        ADC lookup-table scores rank candidates without touching raw
        floats; the top-`rerank` per query re-rank with exact cosine.
@@ -1267,7 +1248,7 @@ def knn_batch_ivfpq(
     float column), and only `rerank` full vectors per query are ever
     fetched. Recall is n_probe × rerank tunable, pytest-gated like
     knn_batch_pq (codebooks/k-means make it non-SQL-replayable; the
-    driver-checkable gates are `pq_quantize` and `knn_batch_ivf_exact`).
+    driver-checkable gates are `pq_quantize` and `knn_batch_ivf`).
     """
     centroids = _kmeans_fit_sample(
         embeddings, id_col, vec_col, n_clusters, seed
@@ -1290,19 +1271,9 @@ def knn_batch_ivfpq(
         embeddings, m_subvectors, n_codes, id_col, vec_col,
         seed=seed, normalize=True,
     )
-    q_pdf = queries.select(qid_col, qvec_col).toPandas()
-    if len(q_pdf) == 0:
-        raise ValueError("knn_batch_ivfpq: empty query batch")
-    qx = _l2_normalize_rows(
-        np.array([np.asarray(v, dtype=np.float64) for v in q_pdf[qvec_col]])
-    )
-    qid_to_row = {int(q): i for i, q in enumerate(q_pdf[qid_col])}
-    m = len(books)
-    d_sub = qx.shape[1] // m
-    lut = np.stack(
-        [qx[:, j * d_sub : (j + 1) * d_sub] @ np.asarray(books[j]).T for j in range(m)],
-        axis=1,
-    )
+    qids, qx = _unit_queries(queries, qid_col, qvec_col, "knn_batch_ivfpq")
+    qid_to_row = {int(q): i for i, q in enumerate(qids)}
+    lut = _adc_lut(qx, books)
 
     cell_rows = e.join(F.broadcast(probes), "__cell").select(
         F.col("__pq_qid"),
@@ -1314,15 +1285,13 @@ def knn_batch_ivfpq(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__vec"]]
-            )
+            x = _f64_rows(pdf["__vec"])
             codes, _, _ = _pq_batch(_l2_normalize_rows(x), books)
             qrows = np.array(
                 [qid_to_row[int(q)] for q in pdf["__pq_qid"]]
             )
             adc = np.zeros(len(x))
-            for j in range(m):
+            for j in range(len(books)):
                 adc += lut[qrows, j, codes[:, j]]
             yield pd.DataFrame(
                 {
@@ -1435,8 +1404,7 @@ def mmr_rerank(
         pdf = pdf.sort_values(
             ["relevance", id_col], ascending=[False, True]
         ).reset_index(drop=True)
-        x = np.array([np.asarray(v, dtype=np.float64) for v in pdf["__vec"]])
-        x = _l2_normalize_rows(x)
+        x = _l2_normalize_rows(_f64_rows(pdf["__vec"]))
         sim = x @ x.T  # pool x pool candidate-candidate cosine
         rel = pdf["relevance"].to_numpy(dtype=np.float64)
         ids = pdf[id_col].to_numpy()
@@ -1628,18 +1596,9 @@ def pca_fit(
     `_kmeans_fit` (O(cap·d²) numpy SVD, never a distributed loop).
     Components are orthonormal rows sorted by descending singular
     value."""
-    sample = (
-        embeddings.select(
-            F.col(vec_col).alias("v"),
-            F.xxhash64(F.col(id_col).cast("string"), F.lit(77)).alias("__h"),
-        )
-        .orderBy("__h")
-        .limit(sample_cap)
-        .toPandas()
-    )
-    if len(sample) == 0:
+    x = _hash_sample(embeddings, id_col, vec_col, 77, sample_cap)
+    if len(x) == 0:
         raise ValueError("pca_fit: empty embeddings corpus")
-    x = np.array([np.asarray(v, dtype=np.float64) for v in sample["v"]])
     mu = x.mean(axis=0)
     _, _, vt = np.linalg.svd(x - mu, full_matrices=False)
     # SVD yields min(rows, dims) components; a request beyond that
@@ -1685,7 +1644,7 @@ def pca_project(
                     "bessel_ok": pd.Series([], dtype=bool),
                 }
             )
-        x = np.array([np.asarray(v, dtype=np.float64) for v in vs]) - M
+        x = _f64_rows(vs) - M
         y = x @ W.T
         ok = (y * y).sum(axis=1) <= (x * x).sum(axis=1) + 1e-9
         return pd.DataFrame(
@@ -1735,62 +1694,26 @@ def knn_batch_sq8(
     (ranges come from a sample, so values are not SQL-replayable;
     vector_quantize_int8 carries the exact oracle for the same encode).
     """
-    sample = (
-        embeddings.select(
-            F.col(vec_col).alias("v"),
-            F.xxhash64(F.col(id_col).cast("string"), F.lit(88)).alias("__h"),
-        )
-        .orderBy("__h")
-        .limit(sample_cap)
-        .toPandas()
-    )
+    sample = _hash_sample(embeddings, id_col, vec_col, 88, sample_cap)
     if len(sample) == 0:
         raise ValueError("knn_batch_sq8: empty embeddings corpus")
-    sx = _l2_normalize_rows(
-        np.array([np.asarray(v, dtype=np.float64) for v in sample["v"]])
-    )
+    sx = _l2_normalize_rows(sample)
     lo = sx.min(axis=0)
     width = sx.max(axis=0) - lo
     width[width == 0] = 1.0
 
-    q_pdf = queries.select(qid_col, qvec_col).toPandas()
-    if len(q_pdf) == 0:
-        raise ValueError("knn_batch_sq8: empty query batch")
-    qx = _l2_normalize_rows(
-        np.array([np.asarray(v, dtype=np.float64) for v in q_pdf[qvec_col]])
-    )
-    qids = q_pdf[qid_col].to_numpy()
+    qids, qx = _unit_queries(queries, qid_col, qvec_col, "knn_batch_sq8")
     w_q = qx * (width / 256.0)          # [nq, d] code weights
     const_q = qx @ (lo + width / 512.0)  # dequant offset, rank-neutral
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            x = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__vec"]]
-            )
-            if len(x) == 0:
-                continue
-            codes = np.clip(
-                np.floor((_l2_normalize_rows(x) - lo) * 256.0 / width),
-                0, 255,
-            )
-            approx = codes @ w_q.T + const_q  # [nb, nq]
-            n_keep = min(rerank, len(x))
-            ids = pdf["__vid"].to_numpy()
-            out_qid, out_vid, out_s = [], [], []
-            for qi in range(len(qids)):
-                part = np.argpartition(-approx[:, qi], n_keep - 1)[:n_keep]
-                out_qid.extend([qids[qi]] * n_keep)
-                out_vid.extend(ids[part])
-                out_s.extend(approx[part, qi])
-            yield pd.DataFrame(
-                {"qid": out_qid, "vec_id": out_vid, "adc": out_s}
-            )
+    def approx(x):
+        codes = np.clip(
+            np.floor((_l2_normalize_rows(x) - lo) * 256.0 / width),
+            0, 255,
+        )
+        return (codes @ w_q.T + const_q).T  # [nq, nb]
 
-    corpus = embeddings.select(
-        F.col(id_col).alias("__vid"), F.col(vec_col).alias("__vec")
-    )
-    cand = corpus.mapInPandas(score, "qid long, vec_id long, adc double")
+    cand = _batch_candidates(embeddings, qids, rerank, approx, id_col, vec_col)
     return _exact_rerank(
         cand, embeddings, queries, k, rerank,
         id_col, vec_col, qid_col, qvec_col,

@@ -1,8 +1,7 @@
 """Round-4 analytics extensions: corpus-curation diagnostics
 (duplicated-span mining, near-dup rate, readability), the exact-dedup
 corpus filter, signature-store export, event sessionization, the
-window-distribution family, and MMR diversified re-ranking. Registered
-after the round-3 backlog so the driver window drains in order."""
+window-distribution family, and MMR diversified re-ranking."""
 
 from __future__ import annotations
 

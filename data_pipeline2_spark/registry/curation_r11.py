@@ -219,38 +219,27 @@ def _stream_search_sql(
 
 
 def _probe_cells(spark, cents, qvec, nprobe: int) -> list:
-    """The `nprobe` nearest frozen cells to the query — computed as a
-    tiny Spark job (k rows) so the rounded-distance ordering uses the
-    ENGINE's round semantics, mirroring the oracle's
+    """The `nprobe` nearest frozen cells to the query — the IVF probe
+    rule (`similarity._probe_order`) evaluated on the one-row codebook
+    frame with the query as a literal, so the rounded-distance ordering
+    uses the ENGINE's round semantics, mirroring the oracle's
     `ORDER BY round(sqdist, 6), cid` exactly (Spark HALF_UP and DuckDB
     half-away agree on non-negative distances; a Python round() would
     inject banker's rounding into the tie rule)."""
     if not cents:
         return []
-    from pyspark.sql import functions as F
-
     from data_pipeline2_spark.functions.vectors import query_vector_lit
+    from data_pipeline2_spark.operators.similarity import (
+        _cents_frame,
+        _probe_order,
+    )
 
-    cdf = spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in cents],
-        "cid int, cvec array<double>",
-    )
-    d = F.aggregate(
-        F.zip_with(
-            query_vector_lit(qvec),
-            F.col("cvec"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    rows = (
-        cdf.select("cid", F.round(d, 6).alias("d"))
-        .orderBy("d", "cid")
-        .limit(nprobe)
+    (row,) = (
+        _cents_frame(spark, cents)
+        .select(_probe_order(query_vector_lit(qvec), nprobe).alias("p"))
         .collect()
     )
-    return [r["cid"] for r in rows]
+    return list(row["p"])
 
 
 @_register("streaming_search_e2e", _stream_search_sql())

@@ -1,9 +1,7 @@
 """Round-5 registry keys, part 1: published quality-filter suites
 (Gopher / C4), duplicate-line repetition signals, URL density, and
 exact-integer corpus statistics (token rarity, vocabulary, cross-source
-shingle containment). Registered after analytics_ext so the keys queue
-behind any unverified backlog (there is none entering round 5 — the
-full 50-key window is open)."""
+shingle containment)."""
 
 from __future__ import annotations
 

@@ -4,8 +4,7 @@ cross-document boilerplate stripping, a real unigram-LM quality score
 (integer-exact log-probs), URL canonicalization, asymmetric-containment
 dedup, leakage-safe cluster-aware splits, incremental view maintenance
 over CDC, Z-order layout statistics, and perceptual image hashing over
-the real pixel decoders. Registered after curation_r5 so the keys
-queue behind the three round-6 re-check keys in the driver window.
+the real pixel decoders.
 
 Reference parity note: none of these exist in the reference service
 (solaius/data_pipeline2 is an ingest/search API); they are the

@@ -1,6 +1,4 @@
-"""Registry part-module — see registry/__init__.py. Registration
-order is load-bearing (driver export ordering): part modules are
-imported in sequence by the package __init__."""
+"""Registry part-module — see registry/__init__.py."""
 
 from __future__ import annotations
 

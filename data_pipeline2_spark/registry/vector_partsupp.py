@@ -1,6 +1,4 @@
-"""Registry part-module — see registry/__init__.py. Registration
-order is load-bearing (driver export ordering): part modules are
-imported in sequence by the package __init__."""
+"""Registry part-module — see registry/__init__.py."""
 
 from __future__ import annotations
 
@@ -179,7 +177,7 @@ def _ivf_exact_sql(
     k: int = 3, n_clusters: int = 8, n_iter: int = 2, n_probe: int = 2,
     dim: int = 64, qmax: int = 5,
 ) -> str:
-    """DuckDB replay of knn_batch_ivf_exact: identical centroid
+    """DuckDB replay of similarity.knn_batch_ivf: identical centroid
     trajectory (shared CTE chain), rounded-L2 cell assignment for the
     corpus (the `af` CTE), n_probe nearest cells per query, exact
     cosine re-score inside probed cells only."""
@@ -219,16 +217,15 @@ def _ivf_exact_sql(
 
 @_register("knn_batch_ivf_exact", _ivf_exact_sql())
 def q_knn_batch_ivf_exact(spark, sf_dir):
-    """The IVF ANN pattern with a value oracle end-to-end: determinstic
+    """The IVF ANN pattern with a value oracle end-to-end: deterministic
     distributed k-means fit, cell assignment, n_probe probing and
     in-cell exact re-scoring are all replayed in SQL — the whole
-    inverted-file search loop is hash-checked, not just row-counted
-    (the numpy-fit knn_batch_ivf stays the production scale path)."""
+    inverted-file search loop is hash-checked, not just row-counted."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    return similarity.knn_batch_ivf_exact(
+    return similarity.knn_batch_ivf(
         emb, queries, k=3, n_clusters=8, n_iter=2, n_probe=2
     )
 
@@ -238,20 +235,14 @@ def q_knn_batch_ivf_exact(spark, sf_dir):
     _ivf_exact_sql(k=3, n_clusters=8, n_iter=2, n_probe=3, qmax=8),
 )
 def q_knn_batch_ivf(spark, sf_dir):
-    """IVF batched kNN at a second operating point (n_probe=3, 8
-    queries) — registered with the DETERMINISTIC distributed k-means
-    fit so the full trajectory is SQL-replayable and the driver can
-    value-check it (VERDICT r5 item 2: the previous numpy sampled-fit
-    export could never go green — `err: no_oracle` forever). The
-    sampled-fit `similarity.knn_batch_ivf` remains the production
-    scale path (FAISS pattern, bounded driver-side fit) with its
-    recall gate in
+    """The same IVF operator as knn_batch_ivf_exact at a second
+    operating point (n_probe=3, 8 queries). Its recall gate is
     tests/test_scale_helpers.py::test_ivf_recall_against_exact."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    return similarity.knn_batch_ivf_exact(
+    return similarity.knn_batch_ivf(
         emb, queries, k=3, n_clusters=8, n_iter=2, n_probe=3
     )
 
@@ -259,12 +250,6 @@ def q_knn_batch_ivf(spark, sf_dir):
 @_register("kmeans_embeddings", _kmeans_sql())
 def q_kmeans_embeddings(spark, sf_dir):
     return similarity.kmeans(_t(spark, sf_dir, "embeddings"), k=8, n_iter=2)
-
-
-# Keys below register AFTER the round-3 backlog on purpose: the driver
-# verifies ~50 keys per round in export order, and the 50 keys above
-# exhaust round 3's window — new operators queue here for round 4
-# rather than pushing a backlog key out of its slot.
 
 
 @_register(

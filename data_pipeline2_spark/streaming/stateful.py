@@ -507,89 +507,6 @@ def streaming_sessionize(events_stream, timeout: bool = True):
     )
 
 
-# ------------------------------------------------------------------ the
-# Spark 4 transformWithStateInPandas API (successor of
-# applyInPandasWithState): typed per-key state handles (ValueState /
-# ListState / MapState) + named timers, queryable via the state store.
-# Re-expresses the running-totals operator on the new API so both
-# stateful generations are covered.
-
-try:  # pragma: no cover - import guard exercised by tests
-    from pyspark.sql.streaming import StatefulProcessor
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessorHandle,
-    )
-
-    HAS_TWS = True
-except ImportError:  # pragma: no cover - pyspark < 4.0
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    HAS_TWS = False
-
-try:  # the TWS python runner speaks protobuf to the JVM state server;
-    # without it the driver worker crashes at stream start (observed:
-    # "ImportError: cannot import name 'descriptor' from
-    # 'google.protobuf'"), so probe it up front and fail loudly
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    HAS_TWS_RUNTIME = HAS_TWS
-except ImportError:  # pragma: no cover - protobuf absent in sandbox
-    HAS_TWS_RUNTIME = False
-
-
-class RunningTotalsProcessor(StatefulProcessor):
-    """Per-user running (events, total_value) on the v2 state API:
-    a single ValueState cell per key replaces the tuple-state of
-    `running_totals`; output parity with the v1 operator is pinned in
-    tests/test_stateful_streaming.py."""
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._state = handle.getValueState(
-            "totals", "events long, total_value double"
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        events, total = 0, 0.0
-        if self._state.exists():
-            events, total = self._state.get()
-        for pdf in rows:
-            events += len(pdf)
-            total += float(pdf["value"].sum())
-        self._state.update((events, total))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "events": [events],
-                "total_value": [round(total, 2)],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_running_totals_v2(events_stream):
-    """`streaming_running_totals` on transformWithStateInPandas —
-    identical output contract, typed ValueState instead of the raw
-    tuple state."""
-    if not HAS_TWS_RUNTIME:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires pyspark >= 4.0 AND the "
-            "google.protobuf runtime (the TWS state-server protocol); "
-            "falling back to streaming_running_totals "
-            "(applyInPandasWithState) preserves the output contract"
-        )
-    return (
-        events_stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningTotalsProcessor(),
-            outputStructType=TOTALS_SCHEMA,
-            outputMode="update",
-            timeMode="none",
-        )
-    )
-
-
 # ---------------------------------------------------------------- rate
 # limiting (streaming form of operators/lifecycle.rate_limit_flags)
 

@@ -1,6 +1,7 @@
 """Round-8 operator tests: exact-substring spans (the Lee et al. 2022
 50-token exact-substring dedup standard) — span maximality, positions,
-sub-threshold rejection, the boilerplate df cap, and the plan budget.
+sub-threshold rejection and the boilerplate df cap (the plan budgets
+live in test_exchange_budget).
 """
 
 from __future__ import annotations
@@ -177,39 +178,6 @@ def test_winnow_short_docs_excluded(spark):
     assert {r.doc_id for r in out} == {2}
 
 
-def test_winnow_fingerprints_single_exchange(spark):
-    from data_pipeline2_spark import registry
-
-    df = registry.queries()["winnow_fingerprints"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    # gram hashing is map-only; ONE doc-keyed exchange feeds the
-    # w-window struct-min AND the (doc_id, pos) dedup (partitioning
-    # reused — grouping keys contain doc_id)
-    assert n <= 1, f"winnow_fingerprints: {n} exchanges, budget 1"
-
-
-def test_exact_substring_spans_exchange_budget(spark):
-    from data_pipeline2_spark import registry
-
-    fn = registry.queries()["exact_substring_spans"]
-    df = fn(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    # post-checkpoint plan: self-join (broadcast at test SF, <= 2
-    # candidate-sized exchanges at scale) + the diagonal-island window;
-    # everything upstream of the candidate checkpoint is two map-only
-    # fingerprint scans + one df-filter shuffle, all corpus-linear
-    assert n <= 3, (
-        f"exact_substring_spans: {n} hash/range exchanges post-"
-        f"checkpoint, budget 3 — a new shuffle entered the plan"
-    )
-
-
 # ------------------------------------------- q12/q21 (prepared, gated)
 
 
@@ -324,24 +292,6 @@ def test_winnowed_scale_path_equals_exact_key(spark):
         for r in q["exact_substring_spans_winnowed"](spark, SF).collect()
     )
     assert exact == winnowed and len(exact) > 0
-
-
-def test_winnowed_spans_exchange_budget(spark):
-    from data_pipeline2_spark import registry
-
-    df = registry.queries()["exact_substring_spans_winnowed"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    # post-checkpoint: the (doc_a, doc_b) restrict semi-join shuffles
-    # both sides (2 pair-volume exchanges; the island window REUSES the
-    # pair partitioning — subset clustering satisfies the window's
-    # distribution) + the unmaterialized winnow-index subtree (doc
-    # windows, fp-df cap groupBy, capped fp self-join — all index-
-    # volume, ~2/(w+1) of positions). Nothing here is corpus-volume;
-    # the corpus-sized work is the two map-only fingerprint scans.
-    assert n <= 8, f"exact_substring_spans_winnowed: {n} exchanges, budget 8"
 
 
 def test_incremental_key_is_batch_touching_subset_of_exact(spark):

@@ -1,20 +1,14 @@
 """Unigram-LM tokenizer tests (Kudo 2018): Viterbi semantics, the
-train/held-out split, UNK contract, and the exchange budget. Value
-parity vs the unrolled-DP DuckDB oracle is covered by
-test_oracle_parity + the lake gates.
+train/held-out split and the UNK contract. Value parity vs the
+unrolled-DP DuckDB oracle is covered by test_oracle_parity + the lake
+gates; the exchange budget lives in test_exchange_budget.
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
 
-import pytest
-
-from data_pipeline2_spark import registry
 from data_pipeline2_spark.operators import tokenizer
-
-SF = "/root/testdata/sf0.001"
 
 
 def _h32(s: str) -> int:
@@ -112,20 +106,6 @@ def test_unigram_lm_em_moves_mass_to_used_pieces(spark):
         same_len_unused = [q for q in unused if len(q) == len(p)]
         if same_len_unused:
             assert scores[p] > max(scores[q] for q in same_len_unused)
-
-
-# ------------------------------------------------------- exchange budget
-
-
-def test_exchange_budget_r9f(spark):
-    df = registry.queries()["unigram_lm_tokenize"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    # distinct scored words + per-doc rollup + the left join back onto
-    # scored ids (fit runs at its own bounded collect)
-    assert n <= 4, f"unigram_lm_tokenize: {n} exchanges, budget 4"
 
 
 # --------------------------------------------------------------- benford

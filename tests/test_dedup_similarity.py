@@ -553,7 +553,7 @@ def test_ivf_exact_fit_self_recall_and_probe_consistency(spark):
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    got = similarity.knn_batch_ivf_exact(
+    got = similarity.knn_batch_ivf(
         emb, queries, k=3, n_clusters=8, n_iter=2, n_probe=2
     ).collect()
     top1 = {r.qid: (r.vec_id, r.score) for r in got if r.rank == 1}

@@ -77,8 +77,9 @@ BUDGET = {
     # plans count the FINAL assignment/probe stages (the fixed-iteration
     # fit runs eagerly, its per-round exchanges are O(k*dim) metadata,
     # not corpus).
-    "knn_batch_ivf_exact": 5,   # assign window + probe window + rescore joins
-    "knn_batch_ivf": 5,         # same plan at n_probe=3
+    "knn_batch_ivf_exact": 1,   # the per-qid top-k window only: corpus
+                                # cells map-only, probes an array expr
+    "knn_batch_ivf": 1,         # same operator at n_probe=3
     "knn_batch_lsh": 1,         # sig hash join (broadcast q) + top-k window
     "knn_batch_ivfpq": 6,       # coarse IVF + ADC rank + exact rerank
                                 # (7 -> 6: the cell join emits each
@@ -205,6 +206,31 @@ BUDGET = {
                                      # agg (stats broadcast back)
     "events_burstiness": 2,          # bucket agg + per-key moment agg
     "events_conversion_latency": 4,  # two firsts + key join + rollup
+    # registry/curation_r8.py keys (measured at introduction)
+    "winnow_fingerprints": 1,   # gram hashing is map-only; ONE doc-keyed
+                                # exchange feeds the w-window struct-min
+                                # AND the (doc_id, pos) dedup
+                                # (partitioning reused — grouping keys
+                                # contain doc_id)
+    "exact_substring_spans": 3,  # post-checkpoint plan: self-join
+                                # (broadcast at test SF, <= 2
+                                # candidate-sized exchanges at scale) +
+                                # the diagonal-island window; everything
+                                # upstream of the candidate checkpoint
+                                # is two map-only fingerprint scans + one
+                                # df-filter shuffle, all corpus-linear
+    "exact_substring_spans_winnowed": 8,  # post-checkpoint: the (doc_a,
+                                # doc_b) restrict semi-join shuffles both
+                                # sides (2 pair-volume exchanges; the
+                                # island window REUSES the pair
+                                # partitioning — subset clustering
+                                # satisfies the window's distribution) +
+                                # the unmaterialized winnow-index subtree
+                                # (doc windows, fp-df cap groupBy, capped
+                                # fp self-join — all index-volume,
+                                # ~2/(w+1) of positions). Nothing here is
+                                # corpus-volume; the corpus-sized work is
+                                # the two map-only fingerprint scans.
     # registry/curation_r8b.py keys (measured at introduction)
     "simhash_pairs": 2,         # fingerprint groupBy + band equi-join
                                 # (b-side exchange reused) incl. distinct
@@ -284,6 +310,10 @@ BUDGET = {
                                # and broadcasts)
     "events_lag_autocorr": 3,  # (key,hour) agg + per-key window + the
                                # per-key rollup
+    # registry/curation_r9f.py keys (measured at introduction)
+    "unigram_lm_tokenize": 4,  # distinct scored words + per-doc rollup +
+                               # the left join back onto scored ids (fit
+                               # runs at its own bounded collect)
 }
 
 

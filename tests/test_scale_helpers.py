@@ -59,6 +59,59 @@ def test_ivf_recall_against_exact(spark):
     assert recall >= 0.5, f"recall {recall}"
 
 
+def _ref_probe_order(v, cents, n_probe):
+    """Plain-Python IVF probe rule: left-to-right squared-L2 fold,
+    HALF_UP to 6 places on the double's shortest repr, then (dist, cid)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def dist(c):
+        acc = 0.0
+        for x, y in zip(v, c):
+            acc += (x - y) * (x - y)
+        return Decimal(repr(acc)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+
+    return [cid for _, cid in sorted((dist(c), cid) for cid, c in cents)][:n_probe]
+
+
+def _probe_case(name):
+    import numpy as np
+
+    rng = np.random.RandomState(11)
+    if name == "rounded_tie":
+        # cid 7 is nearer before rounding (0.09 vs 0.09000006); rounded
+        # to 6 places the two tie and the lower cid must come first
+        return [(7, [0.3, 0.0]), (2, [0.3000001, 0.0]), (0, [2.0, 2.0])], [[0.0, 0.0]], 2
+    cents = [(c, [float(x) for x in rng.randn(8)]) for c in range(6)]
+    queries = [[float(x) for x in rng.randn(8)] for _ in range(10)]
+    return cents, queries, 3 if name == "seeded" else 9
+
+
+@pytest.mark.parametrize("case", ["seeded", "rounded_tie", "probe_all"])
+def test_ivf_probe_order_matches_reference(spark, case):
+    """The one IVF cell rule (`_cell_order` sorted, sliced to n_probe)
+    against a plain-Python reference; n_probe >= n_clusters returns
+    every cell in order."""
+    from data_pipeline2_spark.operators.similarity import _cents_frame, _probe_order
+
+    cents, queries, n_probe = _probe_case(case)
+    qdf = spark.createDataFrame(
+        [(i, q) for i, q in enumerate(queries)], "i int, v array<double>"
+    )
+    got = {
+        r.i: list(r.p)
+        for r in _cents_frame(spark, cents)
+        .crossJoin(qdf)
+        .select("i", _probe_order(F.col("v"), n_probe).alias("p"))
+        .collect()
+    }
+    want = {i: _ref_probe_order(q, cents, n_probe) for i, q in enumerate(queries)}
+    assert got == want
+    if case == "rounded_tie":
+        assert got[0] == [2, 7]
+    if case == "probe_all":
+        assert all(len(p) == len(cents) for p in got.values())
+
+
 def test_ensure_parallelism_noop_when_wide(spark):
     df = spark.range(1000).repartition(64)
     assert ensure_parallelism(df, "id").rdd.getNumPartitions() == 64

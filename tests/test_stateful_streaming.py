@@ -220,42 +220,6 @@ def test_streaming_sessionize_late_event_folds_monotone(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_running_totals_v2_matches_v1(spark, multi_batch_src):
-    """The transformWithStateInPandas port must accumulate the same
-    final totals per user as the applyInPandasWithState original."""
-    if not stateful.HAS_TWS_RUNTIME:
-        # the processor class + wiring are still importable/constructible
-        # — pin that and the honest NotImplementedError seam, then skip
-        # the runtime leg (sandbox lacks protobuf for the TWS runner)
-        proc = stateful.RunningTotalsProcessor()
-        assert hasattr(proc, "handleInputRows")
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stateful.streaming_running_totals_v2(
-                _stream(spark, multi_batch_src)
-            )
-        pytest.skip("transformWithStateInPandas runtime unavailable "
-                    "(no google.protobuf in sandbox)")
-
-    def run(make, name, mode):
-        q = (
-            make(_stream(spark, multi_batch_src))
-            .writeStream.format("memory").queryName(name)
-            .outputMode(mode).trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        rows = spark.sql(f"select * from {name}").collect()
-        out = {}
-        for r in rows:  # totals are monotone: max() is order-independent
-            # (memory-sink row order carries no contract across batches)
-            cur = out.get(r.user_id, (0, 0.0))
-            out[r.user_id] = max(cur, (r.events, r.total_value))
-        return out
-
-    v1 = run(stateful.streaming_running_totals, "rt_v1", "update")
-    v2 = run(stateful.streaming_running_totals_v2, "rt_v2", "update")
-    assert v1 == v2 == {1: (3, 8.0), 2: (2, 7.0)}
-
-
 @pytest.fixture()
 def flood_src(spark):
     """One user flooding a single minute ACROSS two micro-batches (the
