@@ -154,6 +154,20 @@ def doc_shingles(
     return out.distinct() if distinct else out
 
 
+def shingle_fingerprints(
+    documents: DataFrame, shingle_n: int = 3,
+    id_col: str = "doc_id", text_col: str = "text",
+    distinct: bool = True,
+) -> DataFrame:
+    """`doc_shingles` fingerprinted to 60-bit longs → (doc_id, sh64):
+    the form every minhash-family shuffle carries (8-byte integers,
+    never shingle strings; VERDICT r3 item 5). `distinct` passes
+    through to doc_shingles and dedups the STRINGS before hashing."""
+    return doc_shingles(
+        documents, shingle_n, id_col, text_col, distinct
+    ).select("doc_id", shingle_hash64(F.col("shingle")).alias("sh64"))
+
+
 def minhash_signatures(
     shingles: DataFrame, n_perm: int = N_PERM
 ) -> DataFrame:
@@ -190,14 +204,14 @@ def lsh_candidate_pairs(band_keys: DataFrame) -> DataFrame:
     )
 
 
-def jaccard_pairs(
-    candidates: DataFrame, shingles: DataFrame, threshold: float = 0.5
+def _pair_shingle_sets(
+    candidates: DataFrame, shingles: DataFrame
 ) -> DataFrame:
-    """Exact n-gram Jaccard verification of candidate pairs.
-
-    → (doc_a, doc_b, jaccard) for pairs >= threshold, jaccard rounded
-    for hash stability. Input `shingles` carries DISTINCT (doc_id,
-    shingle) rows (both callers guarantee it).
+    """Candidate pairs with each side's shingle set → (doc_a, doc_b,
+    __sh_a, n_a, __sh_b, n_b): the one verify shape of the minhash
+    family (jaccard_pairs and containment_pairs project their score
+    from it; `size(array_intersect(__sh_a, __sh_b))` is |A ∩ B|).
+    Input `shingles` carries DISTINCT (doc_id, shingle) rows.
 
     Plan shape (reworked after the round-9b x100 run): the old form
     joined the shingle table twice — candidates⋈sh_a on doc, then that
@@ -228,10 +242,22 @@ def jaccard_pairs(
         F.col("__sh").alias("__sh_b"),
         F.col("n_sh").alias("n_b"),
     )
+    return candidates.join(a, "doc_a").join(b, "doc_b")
+
+
+def jaccard_pairs(
+    candidates: DataFrame, shingles: DataFrame, threshold: float = 0.5
+) -> DataFrame:
+    """Exact n-gram Jaccard verification of candidate pairs.
+
+    → (doc_a, doc_b, jaccard) for pairs >= threshold, jaccard rounded
+    for hash stability. Input `shingles` carries DISTINCT (doc_id,
+    shingle) rows (every caller guarantees it); the plan is the
+    candidate-bounded `_pair_shingle_sets` shape.
+    """
     inter = F.size(F.array_intersect(F.col("__sh_a"), F.col("__sh_b")))
     return (
-        candidates.join(a, "doc_a")
-        .join(b, "doc_b")
+        _pair_shingle_sets(candidates, shingles)
         .select(
             "doc_a",
             "doc_b",
@@ -315,6 +341,69 @@ def lsh_band_keys_wide(
     )
 
 
+def _lsh_candidates(
+    fingerprints: DataFrame, n_perm: int = N_PERM, band_size: int = BAND_SIZE
+) -> tuple[DataFrame, DataFrame]:
+    """The minhash-family candidate stage: (doc_id, sh64) fingerprints
+    → (sigs, cands), wide signatures and the distinct LSH candidate
+    pairs (doc_a < doc_b), both materialized.
+
+    - sigs (n_perm x 8 bytes per doc — the artifact a corpus-scale run
+      persists anyway): the band-bucket self-join consumes them twice,
+      and without the cut the whole shingle+hash pipeline re-executes
+      for each join side (~2x the map work);
+    - cands feeds three consumers (the candidate-id set and both verify
+      join sides); eager localCheckpoint materializes it once and
+      truncates lineage (O(candidate pairs) storage — unlike caching
+      the full shingle set, tiny at any corpus size; cleaned by the
+      ContextCleaner when the result DataFrame is released).
+    """
+    sigs = minhash_signature_cols(fingerprints, n_perm).transform(materialize)
+    cands = lsh_candidate_pairs(
+        lsh_band_keys_wide(sigs, n_perm, band_size)
+    ).transform(materialize)
+    return sigs, cands
+
+
+def _candidate_ids(pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Distinct doc ids appearing on either side of a (doc_a, doc_b)
+    pair relation → (id_col)."""
+    return (
+        pairs.select(F.col("doc_a").alias(id_col))
+        .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
+        .distinct()
+    )
+
+
+def _candidate_fingerprints(
+    documents: DataFrame, cands: DataFrame, shingle_n: int,
+    id_col: str, text_col: str,
+) -> DataFrame:
+    """Distinct (doc_id, shingle) 60-bit fingerprints of the candidate
+    documents only, materialized — the verify side of the minhash
+    family. Candidates are orders of magnitude smaller than the corpus,
+    so re-shingling that sliver touches almost nothing; the distinct
+    runs on the fingerprints (string and fingerprint sets agree up to
+    a ~n_shingles^2 / 2^60 collision probability per doc pair, and the
+    oracle replays the same fingerprints).
+
+    PIN the broadcast: candidates << corpus is this stage's design
+    assumption, but post-checkpoint stats made AQE sort-merge this
+    semi-join at x100 — shuffling the ENTIRE documents table to pick
+    out the candidate docs (measured 165 MB of a 188 MB stage; the id
+    set itself was ~1 MB). With the hint the corpus never moves.
+    """
+    cand_docs = documents.join(
+        F.broadcast(_candidate_ids(cands, id_col)), id_col, "left_semi"
+    )
+    return (
+        shingle_fingerprints(cand_docs, shingle_n, id_col, text_col, distinct=False)
+        .withColumnRenamed("sh64", "shingle")
+        .distinct()
+        .transform(materialize)
+    )
+
+
 def dedup_near_minhash(
     documents: DataFrame,
     shingle_n: int = 3,
@@ -330,48 +419,17 @@ def dedup_near_minhash(
     Three scale tricks:
     - signatures consume NON-distinct shingles (min-aggregation is
       duplicate-invariant), skipping a full-corpus distinct shuffle;
-    - shingles are fingerprinted to 60-bit longs ONCE (shingle_hash64),
-      so both the signature aggregation and the Jaccard verify shuffle
-      8-byte integers, never shingle strings (VERDICT r3 item 5);
+    - shingles are fingerprinted to 60-bit longs ONCE
+      (shingle_fingerprints), so both the signature aggregation and the
+      Jaccard verify shuffle 8-byte integers, never shingle strings;
     - the Jaccard verify re-derives distinct shingle hashes only for
-      the candidate documents (semi-join first) — candidates are orders
-      of magnitude smaller than the corpus, so the quadratic-ish tail
-      touches almost nothing. Jaccard over the fingerprints equals
-      string Jaccard up to a ~n_shingles^2 / 2^60 collision probability
-      per doc pair, and the oracle replays the same fingerprints.
+      the candidate documents (`_candidate_fingerprints`).
     """
-    sh_all = doc_shingles(
-        documents, shingle_n, id_col, text_col, distinct=False
-    ).select("doc_id", shingle_hash64(F.col("shingle")).alias("sh64"))
-    # materialize signatures (n_perm x 8 bytes per doc — the artifact a
-    # corpus-scale run persists anyway): the band-bucket self-join
-    # consumes them twice, and without this the whole shingle+hash
-    # pipeline re-executes for each join side (~2x the map work)
-    sigs = minhash_signature_cols(sh_all, n_perm).transform(materialize)
-    # cands feeds three consumers; eager localCheckpoint materializes it
-    # once and truncates lineage (O(candidate pairs) storage — unlike
-    # caching the full shingle set, tiny at any corpus size; cleaned by
-    # the ContextCleaner when the result DataFrame is released)
-    cands = lsh_candidate_pairs(
-        lsh_band_keys_wide(sigs, n_perm, band_size)
-    ).transform(materialize)
-    cand_ids = (
-        cands.select(F.col("doc_a").alias(id_col))
-        .unionByName(cands.select(F.col("doc_b").alias(id_col)))
-        .distinct()
+    _, cands = _lsh_candidates(
+        shingle_fingerprints(documents, shingle_n, id_col, text_col, distinct=False),
+        n_perm, band_size,
     )
-    # PIN the broadcast: candidates << corpus is this operator's design
-    # assumption, but post-checkpoint stats made AQE sort-merge this
-    # semi-join at x100 — shuffling the ENTIRE documents table to pick
-    # out the candidate docs (measured 165 MB of a 188 MB stage; the id
-    # set itself was ~1 MB). With the hint the corpus never moves.
-    cand_docs = documents.join(F.broadcast(cand_ids), id_col, "left_semi")
-    sh_cand = (
-        doc_shingles(cand_docs, shingle_n, id_col, text_col, distinct=False)
-        .select("doc_id", shingle_hash64(F.col("shingle")).alias("shingle"))
-        .distinct()
-        .transform(materialize)
-    )
+    sh_cand = _candidate_fingerprints(documents, cands, shingle_n, id_col, text_col)
     return jaccard_pairs(cands, sh_cand, threshold)
 
 
@@ -412,13 +470,10 @@ def bbit_minhash_pairs(
     join ships n_perm BITS per doc; the exact verify is
     candidate-bounded (array-pack Jaccard).
     """
-    sh_all = doc_shingles(
-        documents, shingle_n, id_col, text_col, distinct=False
-    ).select("doc_id", shingle_hash64(F.col("shingle")).alias("sh64"))
-    sigs = minhash_signature_cols(sh_all, n_perm).transform(materialize)
-    cands = lsh_candidate_pairs(
-        lsh_band_keys_wide(sigs, n_perm, band_size)
-    ).transform(materialize)
+    sigs, cands = _lsh_candidates(
+        shingle_fingerprints(documents, shingle_n, id_col, text_col, distinct=False),
+        n_perm, band_size,
+    )
     # b-bit projections and the match-bit fold as SQL strings (r11
     # py4j rule): one parse each instead of ~5 JVM calls per perm
     a = sigs.selectExpr(
@@ -442,21 +497,7 @@ def bbit_minhash_pairs(
         ),
         6,
     )
-    # exact verify over the candidate docs only (the dedup_near_minhash
-    # candidate-reduction pattern: broadcast the id set, re-shingle the
-    # sliver, never the corpus)
-    cand_ids = (
-        cands.select(F.col("doc_a").alias(id_col))
-        .unionByName(cands.select(F.col("doc_b").alias(id_col)))
-        .distinct()
-    )
-    cand_docs = documents.join(F.broadcast(cand_ids), id_col, "left_semi")
-    sh_cand = (
-        doc_shingles(cand_docs, shingle_n, id_col, text_col, distinct=False)
-        .select("doc_id", shingle_hash64(F.col("shingle")).alias("shingle"))
-        .distinct()
-        .transform(materialize)
-    )
+    sh_cand = _candidate_fingerprints(documents, cands, shingle_n, id_col, text_col)
     exact = jaccard_pairs(cands, sh_cand, threshold=0.0)
     out = est.join(exact, ["doc_a", "doc_b"]).select(
         "doc_a",
@@ -1130,12 +1171,9 @@ def signature_estimate_pairs(
     candidate-bounded; the store itself never moves.
     """
     cands = candidates.transform(materialize)
-    cand_ids = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
+    sigs_c = signatures.join(
+        F.broadcast(_candidate_ids(cands)), "doc_id", "left_semi"
     )
-    sigs_c = signatures.join(F.broadcast(cand_ids), "doc_id", "left_semi")
     # projections + component-match fold as SQL strings (r11 py4j rule)
     sa = sigs_c.selectExpr(
         "doc_id AS doc_a",
@@ -1322,12 +1360,9 @@ def exact_substring_spans(
         # The df cap then counts documents WITHIN the restricted set:
         # documented scope difference vs the unrestricted key, and
         # exactly what the oracle replays.
-        keep = (
-            restrict_pairs.select(F.col("doc_a").alias(id_col))
-            .unionByName(restrict_pairs.select(F.col("doc_b").alias(id_col)))
-            .distinct()
+        documents = documents.join(
+            _candidate_ids(restrict_pairs, id_col), id_col, "semi"
         )
-        documents = documents.join(keep, id_col, "semi")
     docs = ensure_parallelism(
         documents.filter(
             F.col(text_col).isNotNull()
@@ -1982,32 +2017,21 @@ def containment_pairs(
     where containment_a = |sh(A) ∩ sh(B)| / |sh(A)| (Broder's
     containment, the quote/boilerplate/subset-duplicate signal Jaccard
     misses: a short doc fully embedded in a long one has containment
-    ~1.0 but Jaccard ~|A|/|B|). Pairs kept when EITHER direction
-    >= threshold. Same join shape and cost as jaccard_pairs.
+    ~1.0 but Jaccard ~|A|/|B|). Pairs kept when they share at least one
+    shingle and EITHER direction >= threshold. Input `shingles` carries
+    DISTINCT (doc_id, shingle) rows.
+
+    Same plan as jaccard_pairs (`_pair_shingle_sets`: one per-doc
+    sorted-array pack, candidate-sized joins, a map-side
+    array_intersect); only the projected score differs.
     """
-    counts = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sh_a = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sh_b = shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        candidates.join(sh_a, "doc_a")
-        .join(sh_b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    inter = F.size(F.array_intersect(F.col("__sh_a"), F.col("__sh_b")))
     out = (
-        inter.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("n_a").cast("long").alias("n_a"),
-            F.col("n_b").cast("long").alias("n_b"),
-            F.col("n_inter").cast("long").alias("n_inter"),
-            F.round(F.col("n_inter") / F.col("n_a"), 6).alias("containment_a"),
-            F.round(F.col("n_inter") / F.col("n_b"), 6).alias("containment_b"),
-        )
+        _pair_shingle_sets(candidates, shingles)
+        .select("doc_a", "doc_b", "n_a", "n_b", inter.cast("long").alias("n_inter"))
+        .filter(F.col("n_inter") > 0)
+        .withColumn("containment_a", F.round(F.col("n_inter") / F.col("n_a"), 6))
+        .withColumn("containment_b", F.round(F.col("n_inter") / F.col("n_b"), 6))
     )
     return out.filter(
         F.greatest(F.col("containment_a"), F.col("containment_b"))
@@ -2028,7 +2052,9 @@ def dedup_containment(
     a CONTAINMENT verify instead of Jaccard — finds docs that quote or
     wholesale-embed other docs (containment >= threshold in either
     direction) even when the symmetric Jaccard stays below the dedup
-    cut.
+    cut. Same candidate stage (`_lsh_candidates`), same
+    candidate-bounded fingerprints and verify shape as
+    dedup_near_minhash.
 
     Candidate recall caveat (honest): the LSH banding is tuned for
     JACCARD similarity, so a pair whose sizes differ by much more than
@@ -2040,28 +2066,11 @@ def dedup_containment(
     replays candidates + verify exactly, so what the operator claims
     is what it computes.
     """
-    sh_all = doc_shingles(
-        documents, shingle_n, id_col, text_col, distinct=False
-    ).select("doc_id", shingle_hash64(F.col("shingle")).alias("sh64"))
-    sigs = minhash_signature_cols(sh_all, n_perm).transform(materialize)
-    cands = lsh_candidate_pairs(
-        lsh_band_keys_wide(sigs, n_perm, band_size)
-    ).transform(materialize)
-    cand_ids = (
-        cands.select(F.col("doc_a").alias(id_col))
-        .unionByName(cands.select(F.col("doc_b").alias(id_col)))
-        .distinct()
+    _, cands = _lsh_candidates(
+        shingle_fingerprints(documents, shingle_n, id_col, text_col, distinct=False),
+        n_perm, band_size,
     )
-    # broadcast pinned for the same reason as dedup_near_minhash's
-    # semi-join: candidate ids are tiny by design, and AQE was measured
-    # shuffling the whole corpus here without the hint
-    cand_docs = documents.join(F.broadcast(cand_ids), id_col, "left_semi")
-    sh_cand = (
-        doc_shingles(cand_docs, shingle_n, id_col, text_col, distinct=False)
-        .select("doc_id", shingle_hash64(F.col("shingle")).alias("shingle"))
-        .distinct()
-        .transform(materialize)
-    )
+    sh_cand = _candidate_fingerprints(documents, cands, shingle_n, id_col, text_col)
     return containment_pairs(cands, sh_cand, threshold)
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline2_spark.functions.text import tokens
-from data_pipeline2_spark.operators.dedup import shingle_hash64
+from data_pipeline2_spark.operators.dedup import shingle_fingerprints, shingle_hash64
 from data_pipeline2_spark.plans.materialize import materialize
 
 # Gopher's "at least two of these English words" existence check
@@ -649,11 +649,7 @@ def ngram_novelty(
     """
     from pyspark.sql.window import Window
 
-    from data_pipeline2_spark.operators.dedup import doc_shingles
-
-    fp = doc_shingles(
-        documents, shingle_n, id_col=id_col, text_col=text_col
-    ).select("doc_id", shingle_hash64(F.col("shingle")).alias("sh64"))
+    fp = shingle_fingerprints(documents, shingle_n, id_col, text_col)
     first_doc = F.min("doc_id").over(Window.partitionBy("sh64"))
     return (
         fp.withColumn("first_doc", first_doc)
@@ -774,11 +770,7 @@ def ngram_novelty_vs_store(
 
     → (doc_id, n_shingles, n_novel, novelty)
     """
-    from data_pipeline2_spark.operators.dedup import doc_shingles
-
-    fp = doc_shingles(
-        new_docs, shingle_n, id_col=id_col, text_col=text_col
-    ).select("doc_id", shingle_hash64(F.col("shingle")).alias("sh64"))
+    fp = shingle_fingerprints(new_docs, shingle_n, id_col, text_col)
     seen = store_fp.select("sh64").distinct().withColumn(
         "__seen", F.lit(1)
     )

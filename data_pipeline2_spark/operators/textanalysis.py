@@ -778,10 +778,7 @@ def bm25_search(
     equivalent of an inverted-index seek). df and the corpus stats
     (N, avgdl) are one-row/handful-of-rows aggregates, broadcast back.
     Per-doc scores sum the per-term contributions in a FIXED order
-    (one conditional max per query term, added left-to-right) so the
-    double result is bit-identical across partitionings and engines —
-    there is exactly one contribution per (doc, term), so max is not a
-    float accumulation.
+    (`_bm25_top_k`), bit-identical across partitionings and engines.
     """
     q = sorted({t.lower() for t in query_terms})
     docs = documents.select(
@@ -806,35 +803,9 @@ def bm25_search(
         tf.join(F.broadcast(df_), "term")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "c",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            )
-            * F.col("tf")
-            * F.lit(k1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-            ),
-        )
+        .withColumn("c", _bm25_contrib(k1, b))
     )
-    per_term = [
-        F.coalesce(
-            F.max(F.when(F.col("term") == F.lit(t), F.col("c"))), F.lit(0.0)
-        )
-        for t in q
-    ]
-    score = per_term[0]
-    for p in per_term[1:]:
-        score = score + p
-    agg = contrib.groupBy("doc_id").agg(
-        F.round(score, 6).alias("score"),
-        F.count(F.lit(1)).cast("int").alias("matched_terms"),
-    )
-    return agg.orderBy(F.desc("score"), F.col("doc_id")).limit(k)
+    return _bm25_top_k(contrib, q, k)
 
 
 def bm25_oracle_sql(
@@ -884,8 +855,9 @@ def bm25_oracle_sql(
 
 def _bm25_contrib(k1: float, b: float):
     """Per-(doc, term) BM25 contribution from posting columns
-    (tf, df, dl) + corpus stats (n_docs, avgdl) — shared by the scan
-    and indexed search paths so both produce bit-identical scores."""
+    (tf, df, dl) + corpus stats (n_docs, avgdl) — the one formula of
+    the scan, indexed and batch search paths, so all three produce
+    bit-identical contributions."""
     return (
         F.log(
             F.lit(1.0)
@@ -899,6 +871,30 @@ def _bm25_contrib(k1: float, b: float):
             * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
         )
     )
+
+
+def _bm25_top_k(contrib: DataFrame, q: list[str], k: int) -> DataFrame:
+    """Top-k (doc_id, score, matched_terms) from per-(doc, term)
+    contributions `c`, score desc / doc_id asc. Per-doc scores sum the
+    per-term contributions in a FIXED order (one conditional max per
+    query term of the sorted list `q`, added left-to-right) so the
+    double result is bit-identical across partitionings and engines —
+    there is exactly one contribution per (doc, term), so max is not a
+    float accumulation."""
+    per_term = [
+        F.coalesce(
+            F.max(F.when(F.col("term") == F.lit(t), F.col("c"))), F.lit(0.0)
+        )
+        for t in q
+    ]
+    score = per_term[0]
+    for p in per_term[1:]:
+        score = score + p
+    agg = contrib.groupBy("doc_id").agg(
+        F.round(score, 6).alias("score"),
+        F.count(F.lit(1)).cast("int").alias("matched_terms"),
+    )
+    return agg.orderBy(F.desc("score"), F.col("doc_id")).limit(k)
 
 
 def build_text_index(
@@ -951,8 +947,9 @@ def bm25_search_indexed(
     to bm25_search, but the query plan touches only the query terms'
     posting rows (filter pushed to the postings scan; with postings
     bucketed/partitioned by term on disk, that's an index seek, not a
-    scan). terms/stats are broadcast; scores sum per-term contributions
-    in the same fixed order as the scan path.
+    scan). terms/stats are broadcast; the contribution formula and the
+    fixed-order top-k tail are the scan path's (`_bm25_contrib`,
+    `_bm25_top_k`).
     """
     q = sorted({t.lower() for t in query_terms})
     contrib = (
@@ -963,20 +960,7 @@ def bm25_search_indexed(
         .crossJoin(F.broadcast(index["stats"]))
         .withColumn("c", _bm25_contrib(k1, b))
     )
-    per_term = [
-        F.coalesce(
-            F.max(F.when(F.col("term") == F.lit(t), F.col("c"))), F.lit(0.0)
-        )
-        for t in q
-    ]
-    score = per_term[0]
-    for p in per_term[1:]:
-        score = score + p
-    agg = contrib.groupBy("doc_id").agg(
-        F.round(score, 6).alias("score"),
-        F.count(F.lit(1)).cast("int").alias("matched_terms"),
-    )
-    return agg.orderBy(F.desc("score"), F.col("doc_id")).limit(k)
+    return _bm25_top_k(contrib, q, k)
 
 
 def heavy_hitters(
@@ -1366,25 +1350,7 @@ def bm25_search_batch(
         tf.join(F.broadcast(df_), "term")
         .crossJoin(F.broadcast(stats))
         .withColumn(
-            "c",
-            F.round(
-                F.log(
-                    F.lit(1.0)
-                    + (F.col("n_docs") - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5)
-                )
-                * F.col("tf")
-                * F.lit(k1 + 1.0)
-                / (
-                    F.col("tf")
-                    + F.lit(k1)
-                    * (
-                        F.lit(1.0 - b)
-                        + F.lit(b) * F.col("dl") / F.col("avgdl")
-                    )
-                ),
-                12,
-            ).cast("decimal(28,12)"),
+            "c", F.round(_bm25_contrib(k1, b), 12).cast("decimal(28,12)")
         )
     )
     scored = (

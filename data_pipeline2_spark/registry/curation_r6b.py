@@ -758,13 +758,10 @@ def q_ngram_novelty_incremental(spark, sf_dir):
     store of doc_id < 400 (the dedup_near_incremental split
     convention) — novelty without re-reading historical text."""
     docs = _t(spark, sf_dir, "documents")
-    from data_pipeline2_spark.operators.dedup import (
-        doc_shingles,
-        shingle_hash64,
-    )
+    from data_pipeline2_spark.operators.dedup import shingle_fingerprints
 
-    store_fp = doc_shingles(docs.filter(F.col("doc_id") < 400), 3).select(
-        shingle_hash64(F.col("shingle")).alias("sh64")
+    store_fp = shingle_fingerprints(docs.filter(F.col("doc_id") < 400)).select(
+        "sh64"
     )
     return quality.ngram_novelty_vs_store(
         docs.filter(F.col("doc_id") >= 400), store_fp

@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
-
 from pyspark.sql import functions as F
 
 
@@ -89,24 +87,25 @@ def test_canonicalize_url_variants_collapse(spark):
 def test_containment_pairs_catches_subset_jaccard_misses(spark):
     from data_pipeline2_spark.operators.dedup import (
         containment_pairs,
-        doc_shingles,
-        shingle_hash64,
+        shingle_fingerprints,
     )
 
     short = "w1 w2 w3 w4 w5"  # 3 shingles, all inside long's set
     long_ = short + " x1 x2 x3 x4 x5 x6 x7 x8 x9"  # 12 shingles
+    other = "y1 y2 y3 y4"  # 2 shingles, none shared with doc 1
     docs = spark.createDataFrame(
-        [(1, short), (2, long_)], "doc_id long, text string"
+        [(1, short), (2, long_), (3, other)], "doc_id long, text string"
     )
-    sh = doc_shingles(docs).select(
-        "doc_id", shingle_hash64(F.col("shingle")).alias("shingle")
-    )
-    cand = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
+    sh = shingle_fingerprints(docs).withColumnRenamed("sh64", "shingle")
+    cand = spark.createDataFrame([(1, 2), (1, 3)], "doc_a long, doc_b long")
     [r] = containment_pairs(cand, sh, threshold=0.9).collect()
     assert (r.n_a, r.n_b, r.n_inter) == (3, 12, 3)
     assert r.containment_a == 1.0  # fully embedded
     jaccard = r.n_inter / (r.n_a + r.n_b - r.n_inter)
     assert jaccard < 0.5  # the symmetric metric would miss this pair
+    # a pair sharing no shingle is dropped even at threshold 0
+    [r0] = containment_pairs(cand, sh, threshold=0.0).collect()
+    assert (r0.doc_a, r0.doc_b) == (1, 2)
 
 
 def test_dedup_containment_end_to_end(spark):
@@ -235,7 +234,6 @@ def test_image_ahash_invariants(spark):
 
 def test_image_ahash_near_duplicate_images_have_small_hamming(spark):
     import numpy as np
-    import pandas as pd
 
     from data_pipeline2_spark.functions.imagecodec import decode_gif
     from data_pipeline2_spark.operators import multimodal

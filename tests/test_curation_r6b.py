@@ -666,10 +666,7 @@ def test_new_operator_arg_guards(spark):
 
 
 def test_ngram_novelty_incremental_vs_store(spark):
-    from data_pipeline2_spark.operators.dedup import (
-        doc_shingles,
-        shingle_hash64,
-    )
+    from data_pipeline2_spark.operators.dedup import shingle_fingerprints
     from data_pipeline2_spark.operators.quality import ngram_novelty_vs_store
 
     old = spark.createDataFrame(
@@ -684,9 +681,7 @@ def test_ngram_novelty_incremental_vs_store(spark):
         ],
         "doc_id long, text string",
     )
-    store = doc_shingles(old, 3).select(
-        shingle_hash64(F.col("shingle")).alias("sh64")
-    )
+    store = shingle_fingerprints(old).select("sh64")
     out = {
         r.doc_id: r for r in ngram_novelty_vs_store(new, store).collect()
     }

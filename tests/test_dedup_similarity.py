@@ -352,9 +352,7 @@ def test_minhash_string_build_matches_column_build(spark):
     from data_pipeline2_spark.sources.parquet import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    sh = dedup.doc_shingles(docs, 3, distinct=False).select(
-        "doc_id", dedup.shingle_hash64(F.col("shingle")).alias("sh64")
-    )
+    sh = dedup.shingle_fingerprints(docs, 3, distinct=False)
     new_sigs = dedup.minhash_signature_cols(sh, 16)
     # the pre-r11 Column-built aggregate, reconstructed verbatim
     a, b = dedup.minhash_coeffs(16)
@@ -935,7 +933,6 @@ def test_mmr_rerank_respects_custom_id_types(spark):
     ids must survive end-to-end (regression: schema was hardcoded to
     long)."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     def n(v):
         v = np.asarray(v, dtype=float)
@@ -983,8 +980,6 @@ def test_bm25_batch_matches_single_query(spark):
     """Each query's batch result must equal the single-query operator's
     ranking for the same terms (shared postings change the plan, not
     the scores)."""
-    from pyspark.sql import functions as F
-
     from data_pipeline2_spark.operators import textanalysis
     from data_pipeline2_spark.sources.parquet import load_table
 

@@ -96,7 +96,12 @@ BUDGET = {
     "strip_boilerplate": 3,     # line agg + boiler distinct + join-back
     "unigram_logprob": 3,       # unigram agg + per-doc join-agg
     "url_canonicalize": 1,      # ONE groupBy on the canonical key
-    "dedup_containment": 3,     # sig agg + band join + containment verify
+    "dedup_containment": 2,     # the verify's per-doc array pack, once per
+                                # join side (sigs and cands checkpoint)
+    "dedup_near_incremental": 6,  # 3 doc-keyed exchanges of the store's
+                                  # sig build, once per estimate join side
+    "fulltext_bm25": 4,         # tf agg (twice: df side) + df + doc score
+    "fulltext_bm25_indexed": 4,  # postings agg (twice) + df + doc score
     "leakage_safe_split": 13,   # minhash verify + CC labels + split joins
     "ivm_agg_delta": 8,         # delta algebra + IVM merge + recompute arm
     "zorder_layout": 1,         # one groupBy on the z-range (key is map-side)

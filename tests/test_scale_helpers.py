@@ -94,12 +94,17 @@ def test_ivf_probe_order_matches_reference(spark, case):
     from data_pipeline2_spark.operators.similarity import _cents_frame, _probe_order
 
     cents, queries, n_probe = _probe_case(case)
+    cents_df = _cents_frame(spark, cents)
+    # the codebook is local data, not a pickled Python RDD (`Scan
+    # ExistingRDD` needs a Python worker on every round, batch and probe)
+    plan = cents_df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
     qdf = spark.createDataFrame(
         [(i, q) for i, q in enumerate(queries)], "i int, v array<double>"
     )
     got = {
         r.i: list(r.p)
-        for r in _cents_frame(spark, cents)
+        for r in cents_df
         .crossJoin(qdf)
         .select("i", _probe_order(F.col("v"), n_probe).alias("p"))
         .collect()
