@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 
 from data_pipeline2_spark.operators import dedup
 from data_pipeline2_spark.operators.textanalysis import (
+    _term_counts,
+    _terms,
     lang_pred_cols,
     pii_redact_col,
     quality_feature_cols,
@@ -181,14 +183,7 @@ def corpus_datasheet(
         ),
     )
     vocab = (
-        documents.filter(t.isNotNull())
-        .select(
-            F.explode(
-                F.transform(tokens(t), lambda x: F.lower(x))
-            ).alias("w")
-        )
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
+        _term_counts(_terms(documents, text_col))
         .agg(
             F.count(F.lit(1)).cast("long").alias("vocab_size"),
             F.round(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from data_pipeline2_spark.functions.text import tokens
 from data_pipeline2_spark.operators.dedup import shingle_fingerprints, shingle_hash64
+from data_pipeline2_spark.operators.textanalysis import _term_counts, _terms
 from data_pipeline2_spark.plans.materialize import materialize
 
 # Gopher's "at least two of these English words" existence check
@@ -262,6 +263,28 @@ def url_stats(
     )
 
 
+def _count_rollup(
+    documents: DataFrame,
+    id_col: str,
+    text_col: str,
+    *aggs: Column,
+    with_total: bool = False,
+) -> DataFrame:
+    """(doc_id, n_tokens, *aggs): each lowercased token of a document
+    joined back to its corpus count `c` (and, `with_total`, the
+    broadcast corpus token total `__total`), rolled up per doc — the
+    shape token_rarity and unigram_logprob share."""
+    toks = _terms(documents, text_col, F.col(id_col).alias("doc_id"))
+    counts = _term_counts(toks)
+    scored = toks.join(counts, "term")
+    if with_total:
+        total = counts.agg(F.sum("c").alias("__total"))
+        scored = scored.crossJoin(F.broadcast(total))
+    return scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_tokens"), *aggs
+    )
+
+
 def token_rarity(
     documents: DataFrame,
     id_col: str = "doc_id",
@@ -277,22 +300,17 @@ def token_rarity(
     rare_tokens counts tokens whose corpus count <= rare_max_count —
     the OOV/garbage signal quality classifiers train on.
 
-    Scale shape: the unigram table aggregates once (shuffle = distinct
-    words); the per-doc join re-shuffles exploded tokens by word. At
-    lake scale the count table's head is tiny and skewed — AQE's
-    skew-join handles the 'the' partition; all sums are exact longs.
+    Scale shape (shared with unigram_logprob): the unigram table
+    aggregates once (shuffle = distinct words); the per-doc join
+    re-shuffles exploded tokens by word. At lake scale the count
+    table's head is tiny and skewed — AQE's skew-join handles the 'the'
+    partition; all sums are exact longs.
     """
-    t = F.col(text_col)
-    toks = documents.filter(t.isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.transform(tokens(t), lambda w: F.lower(w))).alias("w"),
-    )
-    counts = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     return (
-        toks.join(counts, "w")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
+        _count_rollup(
+            documents,
+            id_col,
+            text_col,
             F.sum("c").cast("long").alias("freq_sum"),
             F.sum((F.col("c") <= rare_max_count).cast("long"))
             .cast("long")
@@ -319,12 +337,7 @@ def vocab_stats(
     template-generated corpus fails. Exact integers; two cheap
     aggregations (word counts, then one global row).
     """
-    t = F.col(text_col)
-    toks = documents.filter(t.isNotNull()).select(
-        F.explode(F.transform(tokens(t), lambda w: F.lower(w))).alias("w")
-    )
-    counts = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    return counts.agg(
+    return _term_counts(_terms(documents, text_col)).agg(
         F.sum("c").cast("long").alias("total_tokens"),
         F.count(F.lit(1)).cast("long").alias("vocab_size"),
         F.sum((F.col("c") == 1).cast("long")).cast("long").alias("hapax_count"),
@@ -544,27 +557,19 @@ def unigram_logprob(
     and oracle-exact (the idiom zscore_outliers uses decimals for,
     in log space).
 
-    Scale shape: identical to token_rarity — one unigram aggregation
-    (shuffle = distinct words), one per-doc join-agg over exploded
-    tokens; AQE skew-join absorbs the stopword head.
+    Scale shape: token_rarity's.
     """
-    t = F.col(text_col)
-    toks = documents.filter(t.isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.transform(tokens(t), lambda w: F.lower(w))).alias("w"),
-    )
-    counts = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    total = counts.agg(F.sum("c").alias("__total"))
     term = F.floor(
         F.log(F.col("c").cast("double") / F.col("__total").cast("double"))
         * F.lit(float(_LOGPROB_SCALE))
     ).cast("long")
-    scored = toks.join(counts, "w").crossJoin(F.broadcast(total))
     return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
+        _count_rollup(
+            documents,
+            id_col,
+            text_col,
             F.sum(term).cast("long").alias("logprob_sum_scaled"),
+            with_total=True,
         )
         .select(
             "doc_id",

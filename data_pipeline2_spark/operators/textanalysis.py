@@ -32,6 +32,46 @@ STOPWORDS = {
 }
 
 
+# ---------------------------------------------------------------- term
+# statistics core: every bag-of-words operator below is a composition
+# of these three stages
+
+
+def _terms(documents: DataFrame, text_col: str, *keys) -> DataFrame:
+    """(*keys, term) rows: each document's lowercased whitespace tokens,
+    exploded (null and blank text explode to no rows). `keys` are the
+    per-document columns each term row carries (doc_id, a group key,
+    the doc length)."""
+    return documents.select(
+        *keys, F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
+    )
+
+
+def _postings(terms: DataFrame, *aggs: Column) -> DataFrame:
+    """(doc_id, term, tf, *aggs) postings of `_terms` rows keyed by
+    doc_id — one (doc_id, term) aggregation, tf a BIGINT count; `aggs`
+    ride the same aggregate."""
+    return terms.groupBy("doc_id", "term").agg(
+        F.count(F.lit(1)).alias("tf"), *aggs
+    )
+
+
+def _term_counts(terms: DataFrame) -> DataFrame:
+    """(term, c) corpus count table of `_terms` rows — one
+    vocabulary-bounded aggregation with map-side partials."""
+    return terms.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
+
+
+def _query_terms(queries: DataFrame, qid_col: str, qtext_col: str) -> DataFrame:
+    """(qid, term) rows: each query's distinct lowercased tokens."""
+    return queries.select(
+        F.col(qid_col).alias("qid"),
+        F.explode(
+            F.array_distinct(tokens(F.lower(F.col(qtext_col))))
+        ).alias("term"),
+    )
+
+
 def _hits(toks: Column, words: list[str]) -> Column:
     """Count of tokens (with multiplicity) found in `words`."""
     return F.size(F.filter(toks, lambda t: t.isin(*words)))
@@ -299,21 +339,13 @@ def dsir_weights(
     scoring pass with a groupBy(doc) exact-integer sum — no join
     against a corpus-sized side anywhere.
     """
-    md5h = F.md5(F.col("tok"))
+    md5h = F.md5(F.col("term"))
     bucket = (
         F.conv(F.substring(md5h, 1, 8), 16, 10).cast("long")
         % F.lit(n_buckets)
     ).cast("int")
-    toks = (
-        documents.filter(
-            F.col(text_col).isNotNull()
-            & (F.length(F.trim(F.col(text_col))) > 0)
-        )
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
-        )
-        .select("doc_id", bucket.alias("b"))
+    toks = _terms(documents, text_col, F.col(id_col).alias("doc_id")).select(
+        "doc_id", bucket.alias("b")
     )
     tgt = target.select(F.col(id_col).alias("doc_id")).distinct()
     flagged = toks.join(
@@ -417,22 +449,22 @@ def tfidf_top_terms(
     """Top-k TF-IDF terms per document → (doc_id, term, tf, df, tfidf, rank).
 
     tf = in-doc term count, df = documents containing the term,
-    idf = ln(N/df). One explode + two aggregations + a broadcast-sized
-    term-df join; the heavy (doc,term) aggregation shuffles once.
-    tfidf rounded for cross-engine hash stability.
+    idf = ln(N/df). One explode + one (doc, term) aggregation; df is a
+    per-term window count over the postings (as in the BM25 probe) and
+    N a broadcast one-row count, so building the plan runs no Spark
+    job. tfidf rounded for cross-engine hash stability.
     """
     from pyspark.sql.window import Window
 
-    toks = documents.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
-    )
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = documents.count()
-    scored = tf.join(df_, "term").withColumn(
-        "tfidf",
-        F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6),
+    tf = _postings(_terms(documents, text_col, F.col(id_col).alias("doc_id")))
+    n_docs = documents.agg(F.count(F.lit(1)).cast("double").alias("__n"))
+    scored = (
+        tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
+        .crossJoin(F.broadcast(n_docs))
+        .withColumn(
+            "tfidf",
+            F.round(F.col("tf") * F.log(F.col("__n") / F.col("df")), 6),
+        )
     )
     w = Window.partitionBy("doc_id").orderBy(
         F.desc("tfidf"), F.col("term")
@@ -767,45 +799,28 @@ def bm25_search(
     `match` query (test_full_pipeline.py:130-139; README.md:35-38
     promises full-text search), and ES `match` scores with Lucene's
     BM25 (k1=1.2, b=0.75 defaults). This is that scoring function as a
-    pure Catalyst plan — no index, no UDF:
+    pure Catalyst plan — no stored index, no UDF:
 
         idf(t)  = ln(1 + (N - df + 0.5) / (df + 0.5))      (Lucene idf)
         s(d, t) = idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
 
-    Scale shape: the token explode is filtered to the query terms
-    BEFORE the (doc, term) aggregation, so the big shuffle carries only
-    matching postings (query terms are a handful — this is the moral
-    equivalent of an inverted-index seek). df and the corpus stats
-    (N, avgdl) are one-row/handful-of-rows aggregates, broadcast back.
+    The scan is the index probe over an unmaterialized index:
+    `bm25_search_indexed(build_text_index(documents), query_terms)`.
+    Catalyst pushes the probe's `term IN q` filter below the postings
+    aggregate to sit right after the token explode, so the one
+    (doc_id, term) shuffle carries only matching postings (query terms
+    are a handful — the moral equivalent of an inverted-index seek).
     Per-doc scores sum the per-term contributions in a FIXED order
     (`_bm25_top_k`), bit-identical across partitionings and engines.
+    Raises ValueError when `query_terms` is empty.
     """
-    q = sorted({t.lower() for t in query_terms})
-    docs = documents.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
+    return bm25_search_indexed(
+        build_text_index(documents, id_col=id_col, text_col=text_col),
+        query_terms,
+        k=k,
+        k1=k1,
+        b=b,
     )
-    dl = docs.select(
-        "doc_id", token_count(F.col("_text")).cast("double").alias("dl")
-    )
-    # integer-valued doubles: sums are exact, avg is order-independent
-    stats = dl.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
-    toks = docs.select(
-        "doc_id", F.explode(tokens(F.lower(F.col("_text")))).alias("term")
-    ).filter(F.col("term").isin(q))
-    tf = toks.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).cast("double").alias("tf")
-    )
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    contrib = (
-        tf.join(F.broadcast(df_), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("c", _bm25_contrib(k1, b))
-    )
-    return _bm25_top_k(contrib, q, k)
 
 
 def bm25_oracle_sql(
@@ -856,8 +871,8 @@ def bm25_oracle_sql(
 def _bm25_contrib(k1: float, b: float):
     """Per-(doc, term) BM25 contribution from posting columns
     (tf, df, dl) + corpus stats (n_docs, avgdl) — the one formula of
-    the scan, indexed and batch search paths, so all three produce
-    bit-identical contributions."""
+    the indexed (and so the scan) and batch search paths, so both
+    produce bit-identical contributions."""
     return (
         F.log(
             F.lit(1.0)
@@ -902,9 +917,10 @@ def build_text_index(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> dict[str, DataFrame]:
-    """Materialize the inverted-index tables behind BM25 →
-    {"postings": (term, doc_id, tf), "terms": (term, df),
-     "doclen": (doc_id, dl), "stats": (n_docs, avgdl)}.
+    """The inverted-index tables behind BM25 →
+    {"postings": (term, doc_id, tf), "doclen": (doc_id, dl),
+     "stats": (n_docs, avgdl)}. There is no df table: the probe counts
+    each query term's postings itself (`bm25_search_indexed`).
 
     This is the build-side of the SCALE.md retrieval story: at
     search-serving rates you pay the corpus text scan ONCE, persist
@@ -912,28 +928,29 @@ def build_text_index(
     probe — the engine-native analog of the reference's Elasticsearch
     inverted index (ES does exactly this behind `match`). Postings are
     one row per (doc, term): the heavy aggregation happens at build
-    time, never at query time.
+    time, never at query time. Unmaterialized, the same tables are the
+    scan path (`bm25_search`).
     """
-    docs = documents.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
+    dl = documents.select(
+        F.col(id_col).alias("doc_id"),
+        token_count(F.col(text_col)).cast("double").alias("dl"),
     )
-    dl = docs.select(
-        "doc_id", token_count(F.col("_text")).cast("double").alias("dl")
-    )
-    stats = dl.agg(
+    postings = _postings(
+        _terms(documents, text_col, F.col(id_col).alias("doc_id"))
+    ).select("term", "doc_id", F.col("tf").cast("double").alias("tf"))
+    return {"postings": postings, "doclen": dl, "stats": _index_stats(dl)}
+
+
+def _index_stats(doclen: DataFrame) -> DataFrame:
+    """One-row corpus stats (n_docs, avgdl) of a (doc_id, dl) doc-length
+    table — the one derivation behind a built index, a streamed index
+    reloaded from disk (streaming/stateful.py:load_text_index) and the
+    batch search. dl are integer-valued doubles: the sum is exact, so
+    the avg is order-independent."""
+    return doclen.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
     )
-    toks = docs.select(
-        "doc_id", F.explode(tokens(F.lower(F.col("_text")))).alias("term")
-    )
-    postings = toks.groupBy("term", "doc_id").agg(
-        F.count(F.lit(1)).cast("double").alias("tf")
-    )
-    terms = postings.groupBy("term").agg(
-        F.count(F.lit(1)).cast("double").alias("df")
-    )
-    return {"postings": postings, "terms": terms, "doclen": dl, "stats": stats}
 
 
 def bm25_search_indexed(
@@ -943,19 +960,29 @@ def bm25_search_indexed(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """BM25 top-k over a materialized text index — bit-identical output
-    to bm25_search, but the query plan touches only the query terms'
-    posting rows (filter pushed to the postings scan; with postings
-    bucketed/partitioned by term on disk, that's an index seek, not a
-    scan). terms/stats are broadcast; the contribution formula and the
-    fixed-order top-k tail are the scan path's (`_bm25_contrib`,
-    `_bm25_top_k`).
+    """BM25 top-k over a text index (`build_text_index` or
+    `load_text_index`) → (doc_id, score, matched_terms), score desc /
+    doc_id asc; `bm25_search` is this probe over an unmaterialized
+    index, so the two are bit-identical. The plan touches only the
+    query terms' posting rows (filter pushed to the postings scan; with
+    postings bucketed/partitioned by term on disk, that's an index
+    seek, not a scan). df is `count(*) OVER (PARTITION BY term)` over
+    those rows, so the postings are read once per query (no df
+    aggregate re-reading them); stats broadcast. The contribution
+    formula and the fixed-order top-k tail are shared with the batch
+    path (`_bm25_contrib`, `_bm25_top_k`). Raises ValueError when
+    `query_terms` is empty.
     """
+    from pyspark.sql.window import Window
+
     q = sorted({t.lower() for t in query_terms})
+    if not q:
+        raise ValueError("BM25 query has no terms: query_terms is empty")
+    df_ = F.count(F.lit(1)).over(Window.partitionBy("term")).cast("double")
     contrib = (
         index["postings"]
         .filter(F.col("term").isin(q))
-        .join(F.broadcast(index["terms"]), "term")
+        .withColumn("df", df_)
         .join(index["doclen"], "doc_id")
         .crossJoin(F.broadcast(index["stats"]))
         .withColumn("c", _bm25_contrib(k1, b))
@@ -980,10 +1007,8 @@ def heavy_hitters(
     """
     from pyspark.sql.window import Window
 
-    counts = (
-        documents.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("occurrences"))
+    counts = _term_counts(_terms(documents, text_col)).withColumnRenamed(
+        "c", "occurrences"
     )
     w = Window.orderBy(F.desc("occurrences"), F.col("term"))
     return (
@@ -1228,9 +1253,7 @@ def heavy_hitters_sketch(
     # silently rather than returning a wrong (incomplete) answer
     cap = max(candidate_cap, phi)
 
-    toks = documents.select(
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
-    )
+    toks = _terms(documents, text_col)
 
     def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counters: Counter = Counter()
@@ -1317,32 +1340,18 @@ def bm25_search_batch(
     """
     from pyspark.sql.window import Window
 
-    qt = queries.select(
-        F.col(qid_col).alias("qid"),
-        F.explode(
-            F.array_distinct(tokens(F.lower(F.col(qtext_col))))
-        ).alias("term"),
-    )
+    qt = _query_terms(queries, qid_col, qtext_col)
     all_terms = qt.select("term").distinct()
-    docs = documents.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
-    )
-    stats = docs.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg(token_count(F.col("_text")).cast("double")).alias("avgdl"),
-    )
+    dl = token_count(F.col(text_col)).cast("double").alias("dl")
+    stats = _index_stats(documents.select(dl))
     tf = (
-        docs.select(
-            "doc_id",
-            token_count(F.col("_text")).cast("double").alias("dl"),
-            F.explode(tokens(F.lower(F.col("_text")))).alias("term"),
-        )
-        .join(F.broadcast(all_terms), "term", "left_semi")
-        .groupBy("doc_id", "term")
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("tf"),
+        _postings(
+            _terms(
+                documents, text_col, F.col(id_col).alias("doc_id"), dl
+            ).join(F.broadcast(all_terms), "term", "left_semi"),
             F.max("dl").alias("dl"),
         )
+        .withColumn("tf", F.col("tf").cast("double"))
         .transform(materialize)
     )
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
@@ -1502,21 +1511,12 @@ def rm3_expansion(
     )
 
     fb_docs = fb.select("doc_id").distinct()
-    toks = (
-        documents.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
+    toks = _postings(
+        _terms(documents, text_col, F.col(id_col).alias("doc_id")).join(
+            F.broadcast(fb_docs), "doc_id", "left_semi"
         )
-        .join(F.broadcast(fb_docs), "doc_id", "left_semi")
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
     )
-    qterms = queries.select(
-        F.col(qid_col).alias("qid"),
-        F.explode(
-            F.array_distinct(tokens(F.lower(F.col(qtext_col))))
-        ).alias("term"),
-    )
+    qterms = _query_terms(queries, qid_col, qtext_col)
     weighted = (
         toks.join(F.broadcast(fb), "doc_id")
         .groupBy("qid", "term")
@@ -1611,23 +1611,8 @@ def cms_sketch(
     """
     if depth < 1 or width < 1:
         raise ValueError(f"depth/width must be >= 1, got {depth}/{width}")
-    counts = _word_counts(documents, text_col).withColumnRenamed(
-        "exact_c", "c"
-    )
-    return _cms_from_counts(counts, depth, width)
-
-
-def _word_counts(documents: DataFrame, text_col: str) -> DataFrame:
-    """(w, exact_c) exact unigram counts — ONE corpus exchange."""
-    return (
-        documents.filter(F.col(text_col).isNotNull())
-        .select(
-            F.explode(
-                F.transform(tokens(F.col(text_col)), lambda x: F.lower(x))
-            ).alias("w")
-        )
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("exact_c"))
+    return _cms_from_counts(
+        _term_counts(_terms(documents, text_col)), depth, width
     )
 
 
@@ -1650,12 +1635,12 @@ def _cms_from_counts(counts: DataFrame, depth: int, width: int) -> DataFrame:
             F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias(
                 "row_j"
             ),
-            F.col("w"),
+            F.col("term"),
             F.col("c"),
         )
         .select(
             "row_j",
-            _cms_bucket(F.col("row_j"), F.col("w"), width),
+            _cms_bucket(F.col("row_j"), F.col("term"), width),
             "c",
         )
         .groupBy("row_j", "bucket")
@@ -1690,35 +1675,31 @@ def cms_frequency_eval(
     """
     if depth < 1 or width < 1:
         raise ValueError(f"depth/width must be >= 1, got {depth}/{width}")
-    counts = _word_counts(documents, text_col).transform(materialize)
-    sketch = _cms_from_counts(
-        counts.withColumnRenamed("exact_c", "c"), depth, width
-    )
-    probe_rows = counts.orderBy(F.desc("exact_c"), F.col("w")).limit(probes)
+    counts = _term_counts(_terms(documents, text_col)).transform(materialize)
+    sketch = _cms_from_counts(counts, depth, width)
+    probe_rows = counts.orderBy(F.desc("c"), F.col("term")).limit(probes)
     probed = probe_rows.select(
-        F.col("w"),
-        F.col("exact_c"),
+        F.col("term"),
+        F.col("c"),
         F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row_j"),
     ).select(
-        "w",
-        "exact_c",
+        "term",
+        "c",
         "row_j",
-        _cms_bucket(F.col("row_j"), F.col("w"), width),
+        _cms_bucket(F.col("row_j"), F.col("term"), width),
     )
     # every probed cell exists in the sketch (the probe's own count is
     # in it), so the inner join is lossless by construction
     est = (
         probed.join(F.broadcast(sketch), ["row_j", "bucket"])
-        .groupBy("w", "exact_c")
+        .groupBy("term", "c")
         .agg(F.min("bucket_count").cast("long").alias("cms_est"))
     )
     return est.select(
-        F.col("w").alias("word"),
-        F.col("exact_c").cast("long").alias("exact_c"),
+        F.col("term").alias("word"),
+        F.col("c").cast("long").alias("exact_c"),
         "cms_est",
-        (F.col("cms_est") - F.col("exact_c")).cast("long").alias(
-            "overestimate"
-        ),
+        (F.col("cms_est") - F.col("c")).cast("long").alias("overestimate"),
     )
 
 
@@ -1873,17 +1854,11 @@ def zipf_fit(
     if top_ranks < 2:
         raise ValueError(f"top_ranks must be >= 2, got {top_ranks}")
     counts = (
-        documents.filter(F.col(text_col).isNotNull())
-        .select(
-            F.col(group_col).alias("source"),
-            F.explode(
-                F.transform(tokens(F.col(text_col)), lambda x: F.lower(x))
-            ).alias("w"),
-        )
-        .groupBy("source", "w")
+        _terms(documents, text_col, F.col(group_col).alias("source"))
+        .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    w = Window.partitionBy("source").orderBy(F.desc("c"), F.col("w"))
+    w = Window.partitionBy("source").orderBy(F.desc("c"), F.col("term"))
     ranked = (
         counts.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= top_ranks)
@@ -2145,16 +2120,11 @@ def heaps_fit(
     if n_checkpoints < 3:
         raise ValueError(f"n_checkpoints must be >= 3, got {n_checkpoints}")
     C = int(n_checkpoints)
-    toks = documents.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.transform(tokens(F.col(text_col)), lambda x: F.lower(x))
-        ).alias("w"),
-    )
+    toks = _terms(documents, text_col, F.col(id_col).alias("doc_id"))
     bounds = toks.agg(
         F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
     )
-    first_doc = toks.groupBy("w").agg(F.min("doc_id").alias("fd"))
+    first_doc = toks.groupBy("term").agg(F.min("doc_id").alias("fd"))
     doc_tokens = toks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("ntok")
     )
@@ -2322,19 +2292,11 @@ def phonetic_vocab_groups(
         raise ValueError(f"min_variants must be >= 2, got {min_variants}")
     if sample_n < 1:
         raise ValueError(f"sample_n must be >= 1, got {sample_n}")
-    vocab = (
-        documents.filter(F.col(text_col).isNotNull())
-        .select(
-            F.explode(
-                F.transform(tokens(F.col(text_col)), lambda x: F.lower(x))
-            ).alias("w")
-        )
-        .filter(F.col("w").rlike("^[a-z]{1,30}$"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
+    vocab = _term_counts(_terms(documents, text_col)).filter(
+        F.col("term").rlike("^[a-z]{1,30}$")
     )
-    coded = vocab.withColumn("soundex", soundex(F.col("w")))
-    wn = Window.partitionBy("soundex").orderBy(F.desc("c"), F.col("w"))
+    coded = vocab.withColumn("soundex", soundex(F.col("term")))
+    wn = Window.partitionBy("soundex").orderBy(F.desc("c"), F.col("term"))
     ranked = coded.withColumn("__rn", F.row_number().over(wn))
     return (
         ranked.groupBy("soundex")
@@ -2349,12 +2311,12 @@ def phonetic_vocab_groups(
                                 F.col("__rn") <= sample_n,
                                 F.struct(
                                     F.col("__rn").alias("rn"),
-                                    F.col("w").alias("w"),
+                                    F.col("term"),
                                 ),
                             )
                         )
                     ),
-                    lambda x: x["w"],
+                    lambda x: x["term"],
                 ),
                 "|",
             ).alias("variants_sample"),

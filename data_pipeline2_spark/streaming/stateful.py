@@ -129,10 +129,11 @@ def index_maintenance_sink(index_dir: str):
     append-only by doc_id (the reference's upsert-by-_id collapses to
     this under latest-wins ingestion); a retried batch re-appends the
     same rows, which load_text_index collapses by key — so the index is
-    exactly-once under task/batch retry. Global stats (df, N, avgdl)
-    are NOT maintained per batch: they are cheap aggregates of the
-    stored tables, derived at load (at scale, a periodic compaction job
-    snapshots them alongside the postings buckets).
+    exactly-once under task/batch retry. Global stats (N, avgdl) are
+    NOT maintained per batch: they are cheap aggregates of the stored
+    doclen table, derived at load (at scale, a periodic compaction job
+    snapshots them alongside the postings buckets); df is counted per
+    query by the probe.
     """
     from data_pipeline2_spark.operators.textanalysis import build_text_index
 
@@ -376,8 +377,11 @@ def load_ivf_vectors(spark, layout_dir: str, cells=None):
 
 def load_text_index(spark, index_dir: str) -> dict:
     """Load the streamed index back into the bm25_search_indexed
-    contract: collapse retry duplicates by key, then derive terms/stats.
+    contract: collapse retry duplicates by key, then derive stats the
+    way build_text_index does.
     """
+    from data_pipeline2_spark.operators.textanalysis import _index_stats
+
     postings = (
         spark.read.parquet(os.path.join(index_dir, "postings"))
         .dropDuplicates(["term", "doc_id"])
@@ -388,14 +392,7 @@ def load_text_index(spark, index_dir: str) -> dict:
         .dropDuplicates(["doc_id"])
         .select("doc_id", "dl")
     )
-    terms = postings.groupBy("term").agg(
-        F.count(F.lit(1)).cast("double").alias("df")
-    )
-    stats = doclen.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
-    return {"postings": postings, "terms": terms, "doclen": doclen, "stats": stats}
+    return {"postings": postings, "doclen": doclen, "stats": _index_stats(doclen)}
 
 
 SESSION_SCHEMA = (

@@ -325,7 +325,23 @@ def test_dedup_representative_keeps_longest_and_singletons(spark):
     assert got[4] == (4, True)
 
 
-def test_bm25_indexed_matches_scan(spark):
+def _bm25_hex(rows):
+    return [(r["doc_id"], r["score"].hex(), r["matched_terms"]) for r in rows]
+
+
+@pytest.mark.driver
+@pytest.mark.parametrize(
+    "terms",
+    [
+        ["dup", "vector", "spark"],
+        ["the"],
+        ["Dup", "DUP", "zzzznotaword"],  # case-folded duplicates + absent
+        ["the", "a", "of", "and", "to", "in"],  # stopword-heavy postings
+        ["zzzznotaword"],  # no postings at all
+    ],
+    ids=["dup_vector_spark", "the", "case_folded", "stopwords", "absent"],
+)
+def test_bm25_indexed_matches_scan(spark, terms):
     from data_pipeline2_spark.operators.textanalysis import (
         bm25_search,
         bm25_search_indexed,
@@ -334,10 +350,41 @@ def test_bm25_indexed_matches_scan(spark):
     from data_pipeline2_spark.sources.parquet import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    scan = bm25_search(docs, ["dup", "vector", "spark"], k=25).collect()
-    idx = build_text_index(docs)
-    probed = bm25_search_indexed(idx, ["dup", "vector", "spark"], k=25).collect()
-    assert [tuple(r) for r in scan] == [tuple(r) for r in probed]
+    scan = bm25_search(docs, terms, k=25).collect()
+    probed = bm25_search_indexed(build_text_index(docs), terms, k=25).collect()
+    assert _bm25_hex(scan) == _bm25_hex(probed)
+    if terms == ["zzzznotaword"]:
+        assert scan == []
+
+
+@pytest.mark.driver
+def test_bm25_empty_query_is_a_named_error(spark):
+    """An empty term list has no BM25 score: every entry point that
+    reaches the shared probe raises one ValueError, not an engine
+    internal."""
+    from data_pipeline2_spark.operators.similarity import (
+        hybrid_search_linear,
+        hybrid_search_rrf,
+    )
+    from data_pipeline2_spark.operators.textanalysis import (
+        bm25_search,
+        bm25_search_indexed,
+        build_text_index,
+    )
+
+    docs = spark.createDataFrame([(0, "alpha beta")], "doc_id long, text string")
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "vec_id long, embedding array<float>"
+    )
+    calls = [
+        lambda: bm25_search(docs, []),
+        lambda: bm25_search_indexed(build_text_index(docs), []),
+        lambda: hybrid_search_rrf(docs, emb, [], [1.0, 0.0]),
+        lambda: hybrid_search_linear(docs, emb, [], [1.0, 0.0]),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="query has no terms"):
+            call()
 
 
 def test_minhash_string_build_matches_column_build(spark):

@@ -100,8 +100,20 @@ BUDGET = {
                                 # join side (sigs and cands checkpoint)
     "dedup_near_incremental": 6,  # 3 doc-keyed exchanges of the store's
                                   # sig build, once per estimate join side
-    "fulltext_bm25": 4,         # tf agg (twice: df side) + df + doc score
-    "fulltext_bm25_indexed": 4,  # postings agg (twice) + df + doc score
+    "fulltext_bm25": 3,         # query-filtered postings agg + per-term
+                                # df window + doc score (the scan is the
+                                # index probe over an unmaterialized index)
+    "fulltext_bm25_indexed": 3,  # same plan as fulltext_bm25
+    "tfidf_top_terms": 3,       # postings agg + per-term df window +
+                                # per-doc rank window (N is a broadcast
+                                # one-row count)
+    "heavy_hitters": 1,         # the (term) count agg; top-k is TakeOrdered
+    "hybrid_search_rrf": 3,     # the fulltext_bm25 probe; the vector leg
+                                # and the fusion run on candidate rows
+    "hybrid_search_linear": 6,  # the 3-exchange BM25 probe, once per
+                                # consumer of the lexical leg (min/max
+                                # bounds and the normalized rows); AQE
+                                # reuses the second copy at run time
     "leakage_safe_split": 13,   # minhash verify + CC labels + split joins
     "ivm_agg_delta": 8,         # delta algebra + IVM merge + recompute arm
     "zorder_layout": 1,         # one groupBy on the z-range (key is map-side)

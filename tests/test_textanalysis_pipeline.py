@@ -4,6 +4,8 @@ repetition ratio on known-shape docs, decontamination overlap math."""
 
 from __future__ import annotations
 
+import math
+
 from data_pipeline2_spark.operators import textanalysis
 
 
@@ -264,3 +266,28 @@ def test_readability_flesch_values(spark):
     assert abs(r1.flesch - expected) < 1e-9
     r2 = out[2]
     assert r2.n_sentences == 1  # punctuation-free floor
+
+
+def test_tfidf_top_terms_builds_its_plan_without_a_spark_job(spark):
+    """N (the corpus doc count) is a broadcast one-row aggregate inside
+    the plan, so calling tfidf_top_terms starts no Spark job — an eager
+    documents.count() would run a second corpus scan at call time."""
+    sc = spark.sparkContext
+    df = _docs(spark, [(1, "a b B"), (2, "a c")])
+    group = "tfidf-plan-build"
+    sc.setJobGroup(group, "tfidf_top_terms plan build")
+    try:
+        out = textanalysis.tfidf_top_terms(df, k=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    got = {
+        (r["doc_id"], r["term"]): (r["tf"], r["df"], r["tfidf"], r["rank"])
+        for r in out.collect()
+    }
+    assert got == {
+        (1, "b"): (2, 1, round(2 * math.log(2.0), 6), 1),
+        (1, "a"): (1, 2, 0.0, 2),
+        (2, "c"): (1, 1, round(math.log(2.0), 6), 1),
+        (2, "a"): (1, 2, 0.0, 2),
+    }
