@@ -26,7 +26,13 @@ from pyspark.sql import functions as F
 
 from data_pipeline2_spark.functions.text import tokens
 from data_pipeline2_spark.operators.dedup import shingle_fingerprints, shingle_hash64
-from data_pipeline2_spark.operators.textanalysis import _term_counts, _terms
+from data_pipeline2_spark.operators.textanalysis import (
+    _ngrams,
+    _positions,
+    _term_counts,
+    _terms,
+    _train_held,
+)
 from data_pipeline2_spark.plans.materialize import materialize
 
 # Gopher's "at least two of these English words" existence check
@@ -693,9 +699,9 @@ def bigram_logprob(
 
     Scale shape: bigram table keyed by (w1, w2) — Zipf-headed like the
     unigram table, AQE skew-join absorbs it; the per-doc bigram stream
-    is a posexplode + lead window clustered by doc_id (no extra
-    shuffle beyond the doc hash). Docs with < 2 tokens drop out (no
-    bigrams), exactly as in the oracle.
+    is `_ngrams` over `_positions`, one lag window clustered by doc_id
+    (no extra shuffle beyond the doc hash). Docs with < 2 tokens drop
+    out (no bigrams), exactly as in the oracle.
 
     r13 note: an in-row rewrite (transform over window-start indices,
     the doc_shingles idiom — both a struct-lambda and an
@@ -703,30 +709,19 @@ def bigram_logprob(
     REJECTED on measurement: interleaved same-session A/B on the x10
     lake read window 2.46 s < zip 3.08 s < struct-lambda 3.58 s
     medians — for bigram volume the in-row array materialization costs
-    more than lead() over the already-clustered stream, the opposite
+    more than a window over the already-clustered stream, the opposite
     of the 3-gram concat case. Keeping the measured-faster shape.
     """
-    from pyspark.sql.window import Window
-
     from data_pipeline2_spark.plans.partitioning import ensure_parallelism
 
-    t = F.col(text_col)
     docs = ensure_parallelism(
-        documents.filter(t.isNotNull()), id_col
+        documents.filter(F.col(text_col).isNotNull()), id_col
     )
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.transform(tokens(t), lambda w: F.lower(w))).alias(
-            "p", "w1"
-        ),
+    toks = _positions(docs, text_col, id_col)
+    bg = _ngrams(toks, 2).select("doc_id", "w1", "w2")
+    uni = toks.groupBy(F.col("term").alias("w1")).agg(
+        F.count(F.lit(1)).alias("c1")
     )
-    w = Window.partitionBy("doc_id").orderBy("p")
-    bg = (
-        toks.withColumn("w2", F.lead("w1").over(w))
-        .filter(F.col("w2").isNotNull())
-        .select("doc_id", "w1", "w2")
-    )
-    uni = toks.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     big = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     term = F.floor(
         F.log(F.col("c2").cast("double") / F.col("c1").cast("double"))
@@ -987,62 +982,31 @@ def stupid_backoff_logprob(
     corpus-cross). At 100 TB the counts tables persist once and every
     scoring batch reuses them — the Brants architecture verbatim.
     """
-    from pyspark.sql.window import Window
-
     from data_pipeline2_spark.plans.partitioning import ensure_parallelism
 
-    t = F.col(text_col)
-    base = documents.filter(t.isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.transform(tokens(t), lambda x: F.lower(x))).alias(
-            "p", "w"
-        ),
-    )
-    train = base.filter(F.pmod(F.col("doc_id"), F.lit(2)) == 0)
-    held = ensure_parallelism(
-        documents.filter(
-            t.isNotNull() & (F.pmod(F.col(id_col), F.lit(2)) == 1)
-        ),
-        id_col,
-    ).select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.transform(tokens(t), lambda x: F.lower(x))).alias(
-            "p", "w3"
-        ),
-    )
+    train_docs, held_docs = _train_held(documents, text_col, id_col)
+    train = _positions(train_docs, text_col, id_col)
 
     # the counts tables are consumed by multiple joins below (uni twice,
     # bi twice) and by the N/V aggregate — checkpoint each so the train
     # stream aggregates exactly once per order, the in-session form of
     # "counts tables persist once, every scoring batch reuses them"
     uni = (
-        train.groupBy(F.col("w").alias("u_w"))
+        train.groupBy(F.col("term").alias("u_w"))
         .agg(F.count(F.lit(1)).alias("c_u"))
         .transform(materialize)
     )
-    win = Window.partitionBy("doc_id").orderBy("p")
-    tr_seq = train.select(
-        "doc_id",
-        "p",
-        F.lag("w", 2).over(win).alias("w1"),
-        F.lag("w", 1).over(win).alias("w2"),
-        F.col("w").alias("w3"),
-    )
     bi = (
-        tr_seq.filter(F.col("w2").isNotNull())
-        .groupBy(F.col("w2").alias("b_w1"), F.col("w3").alias("b_w2"))
+        _ngrams(train, 2)
+        .groupBy(F.col("w1").alias("b_w1"), F.col("w2").alias("b_w2"))
         .agg(F.count(F.lit(1)).alias("c_b"))
         .transform(materialize)
     )
-    tri = (
-        tr_seq.filter(F.col("w1").isNotNull())
-        .groupBy(
-            F.col("w1").alias("t_w1"),
-            F.col("w2").alias("t_w2"),
-            F.col("w3").alias("t_w3"),
-        )
-        .agg(F.count(F.lit(1)).alias("c_t"))
-    )
+    tri = _ngrams(train, 3).groupBy(
+        F.col("w1").alias("t_w1"),
+        F.col("w2").alias("t_w2"),
+        F.col("w3").alias("t_w3"),
+    ).agg(F.count(F.lit(1)).alias("c_t"))
     # N = Σ counts, V = |vocab| — off the already-aggregated unigram
     # table, never a count_distinct expand over the raw stream
     nv = uni.agg(
@@ -1050,17 +1014,10 @@ def stupid_backoff_logprob(
         F.count(F.lit(1)).cast("long").alias("__v"),
     )
 
-    hw = Window.partitionBy("doc_id").orderBy("p")
-    stream = (
-        held.select(
-            "doc_id",
-            "p",
-            F.lag("w3", 2).over(hw).alias("w1"),
-            F.lag("w3", 1).over(hw).alias("w2"),
-            "w3",
-        )
-        .filter(F.col("w1").isNotNull())
+    held = _positions(
+        ensure_parallelism(held_docs, id_col), text_col, id_col
     )
+    stream = _ngrams(held, 3)
     scored = (
         stream.join(
             tri,
@@ -1344,8 +1301,8 @@ def kneser_ney_logprob(
     (doc_id, n_bigrams, hits_bigram, hits_context, misses,
     logprob_sum_scaled, avg_logprob).
 
-    Counts fit on EVEN doc_ids, ODD half scored (the
-    stupid_backoff_logprob split). With C(·) train bigram counts,
+    Counts fit on EVEN doc_ids, ODD half scored (the shared
+    `_train_held` split); both sides' bigram streams are `_ngrams`. With C(·) train bigram counts,
     D = 0.75, N1+(w1·) the distinct-continuation count, N1+(·w2) the
     distinct-history count, T total bigram types, V train vocabulary:
 
@@ -1371,24 +1328,13 @@ def kneser_ney_logprob(
     held-out bigram stream chains three key-partitioned LEFT joins —
     the Brants counts-table architecture with KN arithmetic on top.
     """
-    from pyspark.sql.window import Window
-
     from data_pipeline2_spark.plans.partitioning import ensure_parallelism
 
-    t = F.col(text_col)
-    base = documents.filter(t.isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.transform(tokens(t), lambda x: F.lower(x))).alias(
-            "p", "w"
-        ),
-    )
-    train = base.filter(F.pmod(F.col("doc_id"), F.lit(2)) == 0)
-    win = Window.partitionBy("doc_id").orderBy("p")
-    tr_bi = train.select(
-        F.lag("w", 1).over(win).alias("w1"), F.col("w").alias("w2")
-    ).filter(F.col("w1").isNotNull())
+    train_docs, held_docs = _train_held(documents, text_col, id_col)
+    train = _positions(train_docs, text_col, id_col)
     bi = (
-        tr_bi.groupBy(F.col("w1").alias("b_w1"), F.col("w2").alias("b_w2"))
+        _ngrams(train, 2)
+        .groupBy(F.col("w1").alias("b_w1"), F.col("w2").alias("b_w2"))
         .agg(F.count(F.lit(1)).alias("c12"))
         .transform(materialize)
     )
@@ -1402,27 +1348,16 @@ def kneser_ney_logprob(
         bi.agg(F.count(F.lit(1)).cast("long").alias("__t"))
         .crossJoin(
             F.broadcast(
-                train.select("w")
+                train.select("term")
                 .distinct()
                 .agg(F.count(F.lit(1)).cast("long").alias("__v"))
             )
         )
     )
-    held = ensure_parallelism(
-        documents.filter(
-            t.isNotNull() & (F.pmod(F.col(id_col), F.lit(2)) == 1)
-        ),
-        id_col,
-    ).select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.transform(tokens(t), lambda x: F.lower(x))).alias(
-            "p", "w2"
-        ),
+    stream = _ngrams(
+        _positions(ensure_parallelism(held_docs, id_col), text_col, id_col),
+        2,
     )
-    hw = Window.partitionBy("doc_id").orderBy("p")
-    stream = held.select(
-        "doc_id", F.lag("w2", 1).over(hw).alias("w1"), "w2"
-    ).filter(F.col("w1").isNotNull())
     scored = (
         stream.join(
             bi,

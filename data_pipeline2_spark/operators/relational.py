@@ -123,7 +123,9 @@ def phrase_match(
     dominate; at that point extend build_text_index's postings with
     position arrays (the ES layout) and intersect adjacent terms.
     """
-    needle = " ".join(phrase.lower().split())
+    from data_pipeline2_spark.operators.textanalysis import _phrase_terms
+
+    needle = " ".join(_phrase_terms(phrase))
     haystack = F.concat(
         F.lit(" "),
         F.array_join(tokens(F.lower(F.col(text_column))), " "),

@@ -1903,7 +1903,7 @@ def topic_cluster_terms(
 
     → (cluster, rank, w, cnt, lift)
     """
-    from data_pipeline2_spark.functions.text import tokens as _tokens
+    from data_pipeline2_spark.operators.textanalysis import _terms
 
     if k < 1 or n_iter < 0 or top_n < 1:
         raise ValueError(
@@ -1914,13 +1914,12 @@ def topic_cluster_terms(
     assigned = assign(cents).select(
         F.col("_id").alias("__vid"), "cluster"
     )
-    toks = (
-        docs.filter(F.col(text_col).isNotNull())
-        .join(assigned, F.col(doc_id_col) == F.col("__vid"))
-        .select(
-            "cluster",
-            F.explode(_tokens(F.lower(F.col(text_col)))).alias("w"),
-        )
+    toks = _terms(
+        docs.filter(F.col(text_col).isNotNull()).join(
+            assigned, F.col(doc_id_col) == F.col("__vid")
+        ),
+        text_col,
+        "cluster",
     )
     # ALL totals derive from the (cluster, w) count table rather than
     # re-aggregating the raw token stream (Σ per-(cluster,w) counts ==
@@ -1934,7 +1933,7 @@ def topic_cluster_terms(
     # bench-neutral, but 4 corpus explode passes -> 1 is the
     # scale-dominant term and the reason the checkpoint stays.)
     cw = (
-        toks.groupBy("cluster", "w")
+        toks.groupBy("cluster", F.col("term").alias("w"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .transform(materialize)
     )
@@ -1994,21 +1993,16 @@ def sparse_cosine_topk(
 
     → (doc_a, rank, doc_b, score)
     """
-    from data_pipeline2_spark.functions.text import tokens as _tokens
+    from data_pipeline2_spark.operators.textanalysis import _postings, _terms
 
     if k < 1 or not (0.0 < df_cap <= 1.0):
         raise ValueError(
             f"need k >= 1 and 0 < df_cap <= 1; got ({k}, {df_cap})"
         )
     base = docs.filter(F.col(text_col).isNotNull())
-    tf = (
-        base.select(
-            F.col(id_col).alias("doc"),
-            F.explode(_tokens(F.lower(F.col(text_col)))).alias("w"),
-        )
-        .groupBy("doc", "w")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    tf = _postings(
+        _terms(base, text_col, F.col(id_col).alias("doc_id"))
+    ).select(F.col("doc_id").alias("doc"), F.col("term").alias("w"), "tf")
     if df_cap < 1.0 or df_cap_abs is not None:
         # the effective cap is min(n·frac, abs): a RELATIVE cap alone
         # is structurally toothless over heterogeneous sub-corpora —

@@ -62,6 +62,98 @@ def _term_counts(terms: DataFrame) -> DataFrame:
     return terms.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
 
 
+# ---------------------------------------------------------------- token
+# position core: every sequence-aware operator (positional index,
+# co-occurrence, PMI, TextTiling, the n-gram LMs, the held-out
+# tokenizers) is a composition of these stages
+
+
+def _positions(documents: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(doc_id, p, term) rows: `_terms` with each token's 0-based
+    position — the lowercased whitespace tokens, posexploded (null and
+    blank text explode to no rows)."""
+    return documents.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(tokens(F.lower(F.col(text_col)))).alias("p", "term"),
+    )
+
+
+def _window_pairs(positions: DataFrame, window: int) -> DataFrame:
+    """(w1, w2) rows: every token paired with each of the next `window`
+    tokens of its document, normalized so w1 <= w2. One lead() per
+    offset over the per-doc ordering — O(T x window) rows behind ONE
+    doc_id exchange; a doc_id self-join would leave the range
+    predicate as a post-join residual and enumerate all same-doc pairs
+    first."""
+    from pyspark.sql.window import Window
+
+    if window < 1:
+        raise ValueError(f"window must be >= 1, got {window}")
+    wspec = Window.partitionBy("doc_id").orderBy("p")
+    offs = positions.select(
+        "term",
+        *[
+            F.lead("term", i).over(wspec).alias(f"__n{i}")
+            for i in range(1, window + 1)
+        ],
+    )
+    # keep the raw lead in the struct: least/greatest SKIP nulls, so
+    # filtering on them would admit spurious (w, w) pairs at doc tails
+    pair_structs = F.array(
+        *[
+            F.struct(
+                F.col(f"__n{i}").alias("nb"),
+                F.least(F.col("term"), F.col(f"__n{i}")).alias("w1"),
+                F.greatest(F.col("term"), F.col(f"__n{i}")).alias("w2"),
+            )
+            for i in range(1, window + 1)
+        ]
+    )
+    return (
+        offs.select(F.explode(pair_structs).alias("pr"))
+        .filter(F.col("pr.nb").isNotNull())
+        .select(F.col("pr.w1").alias("w1"), F.col("pr.w2").alias("w2"))
+    )
+
+
+def _ngrams(positions: DataFrame, n: int) -> DataFrame:
+    """(doc_id, p, w1 … wn) rows: every run of n consecutive tokens of a
+    document, ending at position p — lag()s over the per-doc ordering,
+    clustered by the one doc_id exchange; docs shorter than n tokens
+    give no rows."""
+    from pyspark.sql.window import Window
+
+    wspec = Window.partitionBy("doc_id").orderBy("p")
+    return positions.select(
+        "doc_id",
+        "p",
+        *[
+            F.lag("term", n - i).over(wspec).alias(f"w{i}")
+            for i in range(1, n)
+        ],
+        F.col("term").alias(f"w{n}"),
+    ).filter(F.col("w1").isNotNull())
+
+
+def _train_held(
+    documents: DataFrame, text_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """(train, held) halves of the non-null-text documents: even
+    pmod(id, 2) ids fit, odd ids are scored."""
+    docs = documents.filter(F.col(text_col).isNotNull())
+    parity = F.pmod(F.col(id_col), F.lit(2))
+    return docs.filter(parity == 0), docs.filter(parity == 1)
+
+
+def _phrase_terms(phrase: str) -> list[str]:
+    """A phrase query's lowercased whitespace tokens; a phrase with no
+    tokens matches nothing meaningful, so it is a named error."""
+    terms = phrase.lower().split()
+    if not terms:
+        raise ValueError(f"phrase has no tokens: {phrase!r}")
+    return terms
+
+
 def _query_terms(queries: DataFrame, qid_col: str, qtext_col: str) -> DataFrame:
     """(qid, term) rows: each query's distinct lowercased tokens."""
     return queries.select(
@@ -1029,10 +1121,7 @@ def build_positional_index(
     build shape as build_text_index with the position list carried
     through the one (term, doc_id) aggregation.
     """
-    toks = documents.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens(F.lower(F.col(text_col)))).alias("p", "term"),
-    )
+    toks = _positions(documents, text_col, id_col)
     return toks.groupBy("term", "doc_id").agg(
         F.count(F.lit(1)).cast("double").alias("tf"),
         F.sort_array(F.collect_list("p")).alias("positions"),
@@ -1053,7 +1142,7 @@ def phrase_match_indexed(
     scan-side phrase_match (equivalence-tested), with cost proportional
     to the phrase terms' posting lists instead of the corpus.
     """
-    terms = phrase.lower().split()
+    terms = _phrase_terms(phrase)
 
     def _shift_by(i: int):
         # single-arg lambda: a 2-arg lambda would make F.transform pass
@@ -1166,45 +1255,12 @@ def term_cooccurrence(
     pairs): the word2vec/GloVe-style co-occurrence statistic, pairs
     normalized lexicographically so (a,b) and (b,a) accumulate together.
 
-    Shape at scale: tokens explode map-side, then each of the `window`
-    forward offsets is a lead() over the per-doc ordering — O(T x
-    window) with ONE scan and one hash exchange on doc_id, the same
-    pattern (and for the same reason) as dedup.doc_shingles. A doc_id
-    self-join was rejected: the range predicate stays a post-join
-    residual, so a 10k-token document would enumerate 100M candidate
-    pairs before filtering. The pair count partial-aggregates; `top`
-    is a TakeOrdered.
+    Shape at scale: `_window_pairs` over `_positions` — O(T x window)
+    pairs with ONE scan and one hash exchange on doc_id, the same
+    pattern (and for the same reason) as dedup.doc_shingles. The pair
+    count partial-aggregates; `top` is a TakeOrdered.
     """
-    from pyspark.sql.window import Window
-
-    from data_pipeline2_spark.functions.text import tokens
-
-    toks = documents.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens(F.lower(F.col(text_col)))).alias("p", "w"),
-    )
-    wspec = Window.partitionBy("doc_id").orderBy("p")
-    offs = toks.select(
-        "w",
-        *[F.lead("w", i).over(wspec).alias(f"__n{i}") for i in range(1, window + 1)],
-    )
-    # keep the raw lead in the struct: least/greatest SKIP nulls, so
-    # filtering on them would admit spurious (w, w) pairs at doc tails
-    pair_structs = F.array(
-        *[
-            F.struct(
-                F.col(f"__n{i}").alias("nb"),
-                F.least(F.col("w"), F.col(f"__n{i}")).alias("w1"),
-                F.greatest(F.col("w"), F.col(f"__n{i}")).alias("w2"),
-            )
-            for i in range(1, window + 1)
-        ]
-    )
-    pairs = (
-        offs.select(F.explode(pair_structs).alias("pr"))
-        .filter(F.col("pr.nb").isNotNull())
-        .select(F.col("pr.w1").alias("w1"), F.col("pr.w2").alias("w2"))
-    )
+    pairs = _window_pairs(_positions(documents, text_col, id_col), window)
     return (
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("pairs"))
@@ -1723,30 +1779,26 @@ def pmi_collocations(
     floors the pair count: PMI famously explodes on hapax pairs, and
     the floor is what keeps the ranking stable under corpus growth.
 
-    Scale shape: pair generation is the term_cooccurrence lead()
-    pattern (one doc_id exchange, O(T·window) rows); pair and unigram
-    counts partial-aggregate; the unigram table is vocabulary-bounded,
-    localCheckpoints (the textrank-edges idiom), and joins back
-    BROADCAST twice; N_tok and N_pairs come CLOSED-FORM from per-doc
+    Scale shape: pair generation is `_window_pairs` over `_positions`,
+    shared with term_cooccurrence (one doc_id exchange, O(T·window)
+    rows); pair and unigram counts partial-aggregate; the unigram
+    table is vocabulary-bounded, localCheckpoints (the textrank-edges
+    idiom), and joins back BROADCAST twice; N_tok and N_pairs come CLOSED-FORM from per-doc
     token counts (N_pairs = Σ_docs Σ_i max(L−i, 0) — exactly the pair
     table's total, without re-executing its subtree), so neither total
     re-runs a corpus aggregation; `top` is a TakeOrdered over the
     min_pairs-floored pair table. Corpus text never shuffles.
     """
-    from pyspark.sql.window import Window
-
-    if window < 1:
-        raise ValueError(f"window must be >= 1, got {window}")
+    toks = _positions(documents, text_col, id_col)
+    pairs = (
+        _window_pairs(toks, window)
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("pairs"))
+    )
     if min_pairs < 1:
         raise ValueError(f"min_pairs must be >= 1, got {min_pairs}")
-    toks = documents.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(
-            F.transform(tokens(F.col(text_col)), lambda x: F.lower(x))
-        ).alias("p", "w"),
-    )
     uni = (
-        toks.groupBy("w")
+        toks.groupBy(F.col("term").alias("w"))
         .agg(F.count(F.lit(1)).alias("cw"))
         .transform(materialize)
     )
@@ -1761,31 +1813,6 @@ def pmi_collocations(
                 for i in range(1, window + 1)
             )
         ).alias("n_pairs"),
-    )
-    wspec = Window.partitionBy("doc_id").orderBy("p")
-    offs = toks.select(
-        "w",
-        *[
-            F.lead("w", i).over(wspec).alias(f"__n{i}")
-            for i in range(1, window + 1)
-        ],
-    )
-    pair_structs = F.array(
-        *[
-            F.struct(
-                F.col(f"__n{i}").alias("nb"),
-                F.least(F.col("w"), F.col(f"__n{i}")).alias("w1"),
-                F.greatest(F.col("w"), F.col(f"__n{i}")).alias("w2"),
-            )
-            for i in range(1, window + 1)
-        ]
-    )
-    pairs = (
-        offs.select(F.explode(pair_structs).alias("pr"))
-        .filter(F.col("pr.nb").isNotNull())
-        .select(F.col("pr.w1").alias("w1"), F.col("pr.w2").alias("w2"))
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("pairs"))
     )
     u1 = uni.select(F.col("w").alias("w1"), F.col("cw").alias("c1"))
     u2 = uni.select(F.col("w").alias("w2"), F.col("cw").alias("c2"))
@@ -1964,12 +1991,7 @@ def texttiling_boundaries(
             "sent_tokens, block_sents, peak_window must all be >= 1"
         )
     k, b = int(sent_tokens), int(block_sents)
-    toks = documents.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(
-            F.transform(tokens(F.col(text_col)), lambda x: F.lower(x))
-        ).alias("p", "w"),
-    )
+    toks = _positions(documents, text_col, id_col)
     # full pseudo-sentences only: sent s covers tokens [s*k, (s+1)*k)
     sent_terms = (
         toks.withColumn("s", F.floor(F.col("p") / k).cast("int"))
@@ -1979,7 +2001,9 @@ def texttiling_boundaries(
             .cast("int"),
         )
         .filter(F.col("s") < F.col("__n_sents"))
-        .groupBy("doc_id", "__n_sents", "s", shingle_hash64(F.col("w")).alias("t"))
+        .groupBy(
+            "doc_id", "__n_sents", "s", shingle_hash64(F.col("term")).alias("t")
+        )
         .agg(F.count(F.lit(1)).alias("c"))
     )
     # gap g exists for b <= g <= n_sents - b; sent s feeds the LEFT

@@ -27,15 +27,22 @@ while the merge table itself stays non-SQL-replayable.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_pipeline2_spark.operators.textanalysis import (
+    _positions,
+    _term_counts,
+    _terms,
+    _train_held,
+)
 from data_pipeline2_spark.plans.materialize import materialize
 
-# ASCII whitespace ONLY — matching Spark's Java \s (bpe_train's split)
+# ASCII whitespace ONLY — matching Spark's Java \s (the `_terms` split)
 # and the DuckDB oracle's RE2 \s exactly; Python's Unicode-aware \S
 # would split on U+00A0 etc. where the other two engines do not.
 _WORD_RE = re.compile(r"[^ \t\n\r\f\v]+")
@@ -53,6 +60,30 @@ def _words(text: str) -> list[str]:
     return _WORD_RE.findall(text.lower())
 
 
+def _word_table(documents: DataFrame, text_col: str) -> DataFrame:
+    """(term, c) count table of the documents' non-empty lowercased
+    whitespace tokens (`_terms`; the empty token a leading tab leaves
+    carries no characters and is dropped)."""
+    return _term_counts(
+        _terms(documents, text_col).filter(F.length("term") > 0)
+    )
+
+
+def _word_counts(
+    documents: DataFrame, text_col: str, max_words: int
+) -> list[tuple[str, int]]:
+    """The `max_words` most frequent words as (word, count), ties by
+    word — the bounded driver artifact the BPE and unigram-LM fits
+    train on."""
+    rows = (
+        _word_table(documents, text_col)
+        .orderBy(F.desc("c"), F.col("term"))
+        .limit(max_words)
+        .collect()
+    )
+    return [(r["term"], int(r["c"])) for r in rows]
+
+
 def bpe_train(
     documents: DataFrame,
     n_merges: int = 200,
@@ -66,26 +97,11 @@ def bpe_train(
     The frequency table is capped at the `max_words` most frequent
     words (deterministic ties by word) — the bounded driver artifact.
     """
-    rows = (
-        documents.select(
-            F.explode(
-                F.split(
-                    F.lower(F.trim(F.col(text_col).cast("string"))), r"\s+"
-                )
-            ).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), F.col("w"))
-        .limit(max_words)
-        .collect()
-    )
     vocab = {}
-    for r in rows:
-        pieces = tuple(r["w"].replace(END, "")) + (END,)
+    for w, n in _word_counts(documents, text_col, max_words):
+        pieces = tuple(w.replace(END, "")) + (END,)
         if len(pieces) > 1:
-            vocab[pieces] = vocab.get(pieces, 0) + int(r["n"])
+            vocab[pieces] = vocab.get(pieces, 0) + n
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         pair_freq: dict[tuple[str, str], int] = {}
@@ -190,6 +206,75 @@ def bpe_tokenize_stats(
     ).mapInPandas(stats, _TOKENIZE_SCHEMA)
 
 
+def _held_word_stats(
+    documents: DataFrame,
+    match: Callable[[str], tuple],
+    checksum: str,
+    extra: tuple[str, ...] = (),
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Score every word of the HELD-OUT half (odd pmod residues, the
+    `_train_held` split) with `match` → (doc_id, n_words, n_unk_words,
+    n_pieces, *extra, <checksum>).
+
+    `match(word)` → (n_pieces, is_unk, word_checksum, *extra values);
+    each `extra` column is the per-doc sum of its value, and
+    <checksum> = Σ over words of (word_checksum · word_position) mod
+    2^32 with 1-based positions — position-weighted, so WHICH pieces
+    fired and in WHAT order is pinned end-to-end, not just the counts.
+
+    Scale shape: `match` runs once per DISTINCT scored word (one
+    distinct exchange, vocabulary-bounded) inside an Arrow-batched
+    mapInPandas, the per-word stats broadcast-join back onto the
+    `_positions` word stream, and ONE doc_id aggregation closes —
+    document text never carries a Python round-trip, the corpus-sized
+    path is pure Catalyst. Scored docs with no words emit an all-zero
+    row.
+    """
+    _, held = _train_held(documents, text_col, id_col)
+    words = _positions(held, text_col, id_col).select(
+        "doc_id",
+        (F.col("p") + 1).cast("long").alias("p"),
+        F.col("term").alias("w"),
+    )
+    cols = ["w", "n_pieces", "unk", "wcksum", *extra]
+
+    def match_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [(w, *match(w)) for w in pdf["w"]], columns=cols
+            )
+
+    per_word = words.select("w").distinct().mapInPandas(
+        match_batches,
+        "w string, n_pieces int, unk boolean, wcksum long"
+        + "".join(f", {c} long" for c in extra),
+    )
+    sums = ("n_words", "n_unk_words", "n_pieces", *extra, checksum)
+    per_doc = (
+        words.join(F.broadcast(per_word), "w")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_words"),
+            F.sum(F.col("unk").cast("long")).alias("n_unk_words"),
+            F.sum("n_pieces").alias("n_pieces"),
+            *[F.sum(c).alias(c) for c in extra],
+            F.sum(
+                F.pmod(F.col("wcksum") * F.col("p"), F.lit(4_294_967_296))
+            ).alias(checksum),
+        )
+    )
+    return (
+        held.select(F.col(id_col).alias("doc_id"))
+        .join(per_doc, "doc_id", "left")
+        .select(
+            "doc_id",
+            *[F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c) for c in sums],
+        )
+    )
+
+
 # ------------------------------------------------------------- WordPiece
 # (Wu et al. 2016 §4.1 / BERT's tokenization.py — the algorithm is
 # public): greedy longest-match-first against a piece vocabulary, word
@@ -213,7 +298,7 @@ def wordpiece_vocab(
     text_col: str = "text",
 ) -> tuple[frozenset, frozenset]:
     """Derive the WordPiece vocabulary from the TRAIN half of the corpus
-    (even pmod(doc_id, 2) residues — the stupid_backoff split) →
+    (even pmod(doc_id, 2) residues — the `_train_held` split) →
     (word-initial piece set, continuation piece set).
 
     Pieces (all lowercased, bodies <= max_piece chars):
@@ -232,25 +317,14 @@ def wordpiece_vocab(
     result is the piece sets — the bounded driver artifact, exactly
     bpe_train's economics.
     """
-    from data_pipeline2_spark.functions.text import tokens
-
-    train = documents.filter(
-        F.col(text_col).isNotNull()
-        & (F.pmod(F.col(id_col), F.lit(2)) == 0)
-    )
+    train, _ = _train_held(documents, text_col, id_col)
+    # empty-string tokens (the split artifact on tab-only text) carry
+    # no pieces — and F.sequence(1, 0) would walk DESCENDING and inject
+    # '' into the char sets where the oracle's generate_series(1, 0)
+    # is empty; `_word_table` drops them
     wc = (
-        train.select(
-            F.explode(
-                F.transform(tokens(F.col(text_col)), lambda x: F.lower(x))
-            ).alias("w")
-        )
-        # empty-string tokens (the split artifact on tab-only text)
-        # carry no pieces — and F.sequence(1, 0) would walk DESCENDING
-        # and inject '' into the char sets where the oracle's
-        # generate_series(1, 0) is empty (review r9s3 finding)
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
+        _word_table(train, text_col)
+        .select(F.col("term").alias("w"), "c")
         .transform(materialize)
     )
     ln = F.length("w")
@@ -352,69 +426,16 @@ def wordpiece_tokenize_stats(
     2^32 — position-weighted at both levels, so WHICH pieces fired and
     in WHAT order is pinned end-to-end, not just the counts.
 
-    Scale shape: the greedy matcher runs once per DISTINCT scored word
-    (one distinct exchange, vocabulary-bounded) inside an Arrow-batched
-    mapInPandas, the per-word stats broadcast-join back onto the
-    exploded word stream, and ONE doc_id aggregation closes — document
-    text never carries a Python round-trip, the corpus-sized path is
-    pure Catalyst. Blank scored docs emit an all-zero row.
+    Scale shape: `_held_word_stats` — the greedy matcher runs once per
+    DISTINCT scored word, then one doc_id rollup. Blank scored docs
+    emit an all-zero row.
     """
-    from data_pipeline2_spark.functions.text import tokens
-
-    scored = documents.filter(
-        F.col(text_col).isNotNull()
-        & (F.pmod(F.col(id_col), F.lit(2)) == 1)
-    ).select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(tokens(F.col(text_col)), lambda x: F.lower(x)).alias(
-            "__ws"
-        ),
-    )
-    words = scored.select(
-        "doc_id", F.posexplode("__ws").alias("p0", "w")
-    ).select("doc_id", (F.col("p0") + 1).cast("long").alias("p"), "w")
-    dw = words.select("w").distinct()
-
-    def match_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"w": [], "n_pieces": [], "unk": [], "wcksum": []}
-            for w in pdf["w"]:
-                n, unk, ck = _wp_match(w, init, cont, max_piece, max_word)
-                out["w"].append(w)
-                out["n_pieces"].append(n)
-                out["unk"].append(unk)
-                out["wcksum"].append(ck)
-            yield pd.DataFrame(out)
-
-    per_word = dw.mapInPandas(
-        match_batches, "w string, n_pieces int, unk boolean, wcksum long"
-    )
-    per_doc = (
-        words.join(F.broadcast(per_word), "w")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum(F.col("unk").cast("long")).cast("long").alias(
-                "n_unk_words"
-            ),
-            F.sum("n_pieces").cast("long").alias("n_pieces"),
-            F.sum(
-                F.pmod(F.col("wcksum") * F.col("p"), F.lit(4_294_967_296))
-            )
-            .cast("long")
-            .alias("wp_checksum"),
-        )
-    )
-    return (
-        scored.select("doc_id")
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            *[
-                F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
-                for c in ("n_words", "n_unk_words", "n_pieces", "wp_checksum")
-            ],
-        )
+    return _held_word_stats(
+        documents,
+        lambda w: _wp_match(w, init, cont, max_piece, max_word),
+        "wp_checksum",
+        id_col=id_col,
+        text_col=text_col,
     )
 
 
@@ -494,26 +515,8 @@ def unigram_lm_fit(
     """
     import math
 
-    rows = (
-        documents.filter(
-            F.col(text_col).isNotNull()
-            & (F.pmod(F.col(id_col), F.lit(2)) == 0)
-        )
-        .select(
-            F.explode(
-                F.split(
-                    F.lower(F.trim(F.col(text_col).cast("string"))), r"\s+"
-                )
-            ).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), F.col("w"))
-        .limit(max_words)
-        .collect()
-    )
-    wc = [(r["w"], int(r["c"])) for r in rows]
+    train, _ = _train_held(documents, text_col, id_col)
+    wc = _word_counts(train, text_col, max_words)
     sub: dict = {}
     for w, c in wc:
         for i in range(len(w)):
@@ -567,109 +570,38 @@ def unigram_lm_tokenize_stats(
     with word_checksum = Σ (md5_32(piece) · piece_index) — the
     wordpiece_tokenize contract, pinning WHICH segmentation won.
 
-    Scale shape: identical to wordpiece_tokenize_stats — the Viterbi
-    runs once per DISTINCT scored word in an Arrow-batched mapInPandas
-    with the broadcast score dict, stats broadcast-join back, ONE
-    doc_id rollup with map-side partials.
+    Scale shape: `_held_word_stats`, the skeleton wordpiece_tokenize_stats
+    also runs — the Viterbi runs once per DISTINCT scored word with the
+    score dict shipped in the closure, then one doc_id rollup with
+    map-side partials.
     """
     import hashlib
-
-    from data_pipeline2_spark.functions.text import tokens
 
     def h32(s: str) -> int:
         return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % 2**32
 
     unk32 = h32(WP_UNK)
-    scored = documents.filter(
-        F.col(text_col).isNotNull()
-        & (F.pmod(F.col(id_col), F.lit(2)) == 1)
-    ).select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(tokens(F.col(text_col)), lambda x: F.lower(x)).alias(
-            "__ws"
-        ),
-    )
-    words = scored.select(
-        "doc_id", F.posexplode("__ws").alias("p0", "w")
-    ).select("doc_id", (F.col("p0") + 1).cast("long").alias("p"), "w")
-    dw = words.select("w").distinct()
 
-    def seg_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "w": [],
-                "n_pieces": [],
-                "unk": [],
-                "wcksum": [],
-                "wlogprob": [],
-            }
-            for w in pdf["w"]:
-                pieces = (
-                    _ulm_viterbi(w, scores, max_piece)
-                    if 0 < len(w) <= max_word
-                    else None
-                )
-                if pieces is None:
-                    out["w"].append(w)
-                    out["n_pieces"].append(1)
-                    out["unk"].append(True)
-                    out["wcksum"].append(unk32)
-                    out["wlogprob"].append(0)
-                else:
-                    # mod 2^32 per word (matches _wp_match): keeps the
-                    # wcksum·p position multiply inside int64 for any
-                    # document below 2^31 words; commutes with the
-                    # per-position pmod so values are unchanged
-                    ck = (
-                        sum(h32(p) * (k + 1) for k, p in enumerate(pieces))
-                        % 2**32
-                    )
-                    lp = sum(scores[p] for p in pieces)
-                    out["w"].append(w)
-                    out["n_pieces"].append(len(pieces))
-                    out["unk"].append(False)
-                    out["wcksum"].append(ck)
-                    out["wlogprob"].append(lp)
-            yield pd.DataFrame(
-                out,
-                columns=["w", "n_pieces", "unk", "wcksum", "wlogprob"],
-            )
+    def segment(w: str) -> tuple[int, bool, int, int]:
+        pieces = (
+            _ulm_viterbi(w, scores, max_piece)
+            if 0 < len(w) <= max_word
+            else None
+        )
+        if pieces is None:
+            return 1, True, unk32, 0
+        # mod 2^32 per word (matches _wp_match): keeps the wcksum·p
+        # position multiply inside int64 for any document below 2^31
+        # words; commutes with the per-position pmod so values are
+        # unchanged
+        ck = sum(h32(p) * (k + 1) for k, p in enumerate(pieces)) % 2**32
+        return len(pieces), False, ck, sum(scores[p] for p in pieces)
 
-    per_word = dw.mapInPandas(
-        seg_batches,
-        "w string, n_pieces int, unk boolean, wcksum long, wlogprob long",
-    )
-    per_doc = (
-        words.join(F.broadcast(per_word), "w")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum(F.col("unk").cast("long")).cast("long").alias(
-                "n_unk_words"
-            ),
-            F.sum("n_pieces").cast("long").alias("n_pieces"),
-            F.sum("wlogprob").cast("long").alias("logprob_sum_scaled"),
-            F.sum(
-                F.pmod(F.col("wcksum") * F.col("p"), F.lit(4_294_967_296))
-            )
-            .cast("long")
-            .alias("ulm_checksum"),
-        )
-    )
-    return (
-        scored.select("doc_id")
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            *[
-                F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
-                for c in (
-                    "n_words",
-                    "n_unk_words",
-                    "n_pieces",
-                    "logprob_sum_scaled",
-                    "ulm_checksum",
-                )
-            ],
-        )
+    return _held_word_stats(
+        documents,
+        segment,
+        "ulm_checksum",
+        extra=("logprob_sum_scaled",),
+        id_col=id_col,
+        text_col=text_col,
     )

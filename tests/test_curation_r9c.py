@@ -163,9 +163,18 @@ def test_pmi_min_pairs_floor_drops_hapax(spark):
     assert ("common", "common") in pairs
 
 
-def test_pmi_validates_params(spark):
+@pytest.mark.driver
+@pytest.mark.parametrize(
+    "op, kwargs, match",
+    [
+        ("term_cooccurrence", {"window": 0}, "window"),
+        ("textrank_terms", {"window": 0}, "window"),
+        ("pmi_collocations", {"window": 0}, "window"),
+        ("pmi_collocations", {"min_pairs": 0}, "min_pairs"),
+    ],
+    ids=["cooc-window", "textrank-window", "pmi-window", "pmi-min_pairs"],
+)
+def test_window_ops_validate_params(spark, op, kwargs, match):
     df = _docs(spark, [(1, "a b")])
-    with pytest.raises(ValueError, match="window"):
-        textanalysis.pmi_collocations(df, window=0)
-    with pytest.raises(ValueError, match="min_pairs"):
-        textanalysis.pmi_collocations(df, min_pairs=0)
+    with pytest.raises(ValueError, match=match):
+        getattr(textanalysis, op)(df, **kwargs)

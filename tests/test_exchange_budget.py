@@ -62,8 +62,12 @@ BUDGET = {
     "vector_quantize_int8": 2,  # range agg + per-vec rollup
     # late round-5 keys (eager localCheckpoints truncate some plans: the
     # measured count covers the final, post-checkpoint stage)
-    "bm25_batch": 8,            # shared postings + per-query window
-    "hybrid_search_batch": 12,  # both legs + fusion + final window
+    "bm25_batch": 4,            # query-term postings agg + (qid, doc)
+                                # score agg + per-query window + the
+                                # result ordering
+    "hybrid_search_batch": 8,   # BM25 leg's 3 + the vector leg's
+                                # per-query window + both sides of the
+                                # fusion join + final window + ordering
     "dedup_lsh_eval": 12,       # exact + LSH pipelines + overlap joins
     "knn_batch_sq8": 7,         # candidate window + rerank joins
     "lsh_tuning_curve": 0,      # pure expression table
@@ -153,12 +157,16 @@ BUDGET = {
     "events_resample_ohlc": 1,  # one map-side-combined hash agg
     "fuzzy_join_ed1": 2,        # vocab distincts; variant join + dedup
     "events_seasonal_baseline": 2,  # two aggs; profile join broadcasts
-    "topic_cluster_terms": 8,   # assign window + doc join + 3 token
-                                # aggs + lift joins + top-n window
+    "topic_cluster_terms": 3,   # cluster and term totals over the
+                                # checkpointed (cluster, term) counts
+                                # + the per-cluster top-n window
     "retrieval_metrics_mrl16": 3,  # same plan as retrieval_metrics
     "winsorized_stats": 2,      # percentile agg + clipped-moment agg
     "ngram_novelty": 4,         # shingle window + first-seen agg + join
-    "bigram_logprob": 6,        # doc window + uni/bigram aggs + 2 joins
+    "bigram_logprob": 5,        # the doc_id repartition once per token
+                                # stream consumer (bigram rows, bigram
+                                # agg, unigram agg) + the two count
+                                # aggs; window and rollup reuse doc_id
     "events_variant_agg": 2,    # distinct-agg two-phase over variant field
     "events_type_entropy": 3,   # (user,type) agg + totals + final rollup
     "sparse_cosine_topk": 11,   # posting self-join + dots + half-matrix
@@ -181,7 +189,7 @@ BUDGET = {
                                   # the per-key sort
     "cohort_ltv": 3,              # first-order agg + join-back + matrix
     "join_interval_overlap": 3,   # interval agg + bucket join + dedup
-    "rm3_expansion": 7,           # bm25 postings (checkpointed fb) +
+    "rm3_expansion": 4,           # bm25 postings (checkpointed fb) +
                                   # feedback tf agg + weight agg + rank
     "video_scene_cuts": 1,        # per-asset window + scene agg share
                                   # one asset-keyed exchange
@@ -288,11 +296,12 @@ BUDGET = {
                                 # (the corpus word-count agg runs once
                                 # at the vocab checkpoint)
     "strip_repeated_lines": 0,  # ONE Catalyst projection, zero shuffles
-    "pmi_collocations": 3,      # doc window + pair agg + unigram agg;
-                                # unigram joins broadcast back
+    "pmi_collocations": 2,      # doc window + pair agg; the unigram
+                                # agg runs at its checkpoint and
+                                # broadcasts back
     # registry/curation_r9d.py keys (measured at introduction)
-    "wordpiece_tokenize": 4,  # distinct scored words + per-doc rollup +
-                              # the left-join pair back onto scored ids
+    "wordpiece_tokenize": 3,  # distinct scored words + per-doc rollup +
+                              # the scored ids' side of the left join
                               # (vocab fit runs at its own collect)
     "retrieval_ndcg": 4,      # query window + top-k window + grade agg
                               # (+1 AQE-shaped residual); corpus never
@@ -306,15 +315,17 @@ BUDGET = {
     "heaps_fit": 2,            # word->min-doc agg + per-doc token agg;
                                # checkpoint cells and the fit are
                                # single-row combinations
-    "texttiling_boundaries": 4,  # sent-term agg + (doc,gap,term)
-                               # side-pivot agg + (doc,gap) cosine agg
-                               # + per-doc windows (rollup reuses doc
-                               # partitioning)
+    "texttiling_boundaries": 1,  # ONE doc_id exchange: the sent-term,
+                               # side-pivot and cosine aggs and the
+                               # per-doc windows all group on keys
+                               # that contain doc_id and reuse it
     "zipf_fit": 3,             # (source, word) agg + per-source rank
                                # window + the per-source regression agg
-    "kneser_ney_logprob": 6,   # train bigram window+agg run at the
-                               # checkpoint; held window + 3 LEFT joins
-                               # (bigram/ctx/nbw keyed) + per-doc rollup
+    "kneser_ney_logprob": 4,   # held doc_id repartition (window and
+                               # rollup reuse it) + ctx/nbw aggs over
+                               # the checkpointed bigram table + the
+                               # train vocabulary distinct; LEFT joins
+                               # broadcast
     "stream_tumbling_upsert": 0,  # batch READBACK plan of the merged
                                # table (the streaming job's shuffles
                                # happen inside the drained query)
@@ -328,9 +339,16 @@ BUDGET = {
     "events_lag_autocorr": 3,  # (key,hour) agg + per-key window + the
                                # per-key rollup
     # registry/curation_r9f.py keys (measured at introduction)
-    "unigram_lm_tokenize": 4,  # distinct scored words + per-doc rollup +
-                               # the left join back onto scored ids (fit
-                               # runs at its own bounded collect)
+    "unigram_lm_tokenize": 3,  # distinct scored words + per-doc rollup +
+                               # the scored ids' side of the left join
+                               # (fit runs at its own bounded collect)
+    # keys without a row until the token-position core (measured there)
+    "term_cooccurrence": 2,    # doc_id window + pair agg; top is a
+                               # TakeOrdered
+    "phrase_match_indexed": 2,  # the positional index (term, doc_id)
+                               # agg once per phrase leg; the leg join
+                               # broadcasts
+    "near_match": 2,           # same shape: two legs, one agg each
 }
 
 

@@ -197,6 +197,30 @@ def test_near_match_slop_and_order(spark):
     assert got == {1: 1, 3: 1}
 
 
+@pytest.mark.driver
+@pytest.mark.parametrize(
+    "phrase", ["", "   ", "\t"], ids=["empty", "blank", "tab"]
+)
+def test_phrase_without_tokens_is_a_named_error(spark, phrase):
+    """A phrase with no tokens raises the same ValueError on the scan
+    side and the index side — it must not match the docs whose token
+    stream holds a double space, nor fail on an empty leg list."""
+    from data_pipeline2_spark.operators.relational import phrase_match
+    from data_pipeline2_spark.operators.textanalysis import (
+        build_positional_index,
+        phrase_match_indexed,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b"), (2, ""), (3, "\t"), (4, "\ta b\t"), (5, None)],
+        "doc_id long, text string",
+    )
+    with pytest.raises(ValueError, match="phrase has no tokens"):
+        phrase_match(docs, "text", phrase)
+    with pytest.raises(ValueError, match="phrase has no tokens"):
+        phrase_match_indexed(build_positional_index(docs), phrase)
+
+
 def test_real_binary_format_conversion(spark):
     """Real container bytes (DOCX/XLSX/PPTX zip+XML, FlateDecode PDF,
     HTML) convert to the exact markdown the fixtures imply — the

@@ -3,11 +3,15 @@ invariants, compression behavior, determinism."""
 
 from __future__ import annotations
 
+import pytest
+
 from data_pipeline2_spark.operators.tokenizer import (
     END,
     _apply_merges,
     bpe_tokenize_stats,
     bpe_train,
+    unigram_lm_fit,
+    wordpiece_vocab,
 )
 
 
@@ -62,14 +66,31 @@ def test_training_is_deterministic(spark):
     assert m1 == m2
 
 
+@pytest.mark.driver
 def test_null_and_empty_text_rows(spark):
-    docs = _docs(spark, [(1, None), (2, ""), (3, "   "), (4, "word")])
+    # null, blank, tab-only and tab-edged rows add exactly their
+    # non-empty words to every tokenizer fit: the BPE word table, the
+    # WordPiece piece sets and the unigram-LM scores equal those of the
+    # clean rows (even ids train the WordPiece / unigram-LM fits)
+    docs = _docs(
+        spark,
+        [
+            (1, None), (2, ""), (3, "   "), (4, "word"), (5, "\tx"),
+            (6, "\t"), (8, "\tword  Word\t"), (10, " \t "), (12, None),
+        ],
+    )
+    clean = _docs(spark, [(4, "word"), (5, "x"), (8, "word word")])
+    assert bpe_train(docs, n_merges=5) == bpe_train(clean, n_merges=5)
+    assert wordpiece_vocab(docs, min_count=1) == wordpiece_vocab(
+        clean, min_count=1
+    )
+    assert unigram_lm_fit(docs) == unigram_lm_fit(clean)
     merges = bpe_train(docs, n_merges=5)
     st = {r["doc_id"]: r.asDict() for r in bpe_tokenize_stats(docs, merges).collect()}
-    for d in (1, 2, 3):
+    for d in (1, 2, 3, 6, 10, 12):
         assert st[d]["n_words"] == 0 and st[d]["n_tokens"] == 0
         assert st[d]["reconstructed_ok"]
-    assert st[4]["n_words"] == 1
+    assert st[4]["n_words"] == 1 and st[8]["n_words"] == 2
 
 
 def test_sentinel_never_leaks_into_tokens(spark):
