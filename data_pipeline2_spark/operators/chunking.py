@@ -39,19 +39,12 @@ from pyspark.sql.window import Window
 
 from data_pipeline2_spark.functions.text import (
     ASCII_WS,
-    SENTENCE_REGEX,
+    ascii_split,
+    sentence_end,
     sentences,
+    split_sentences,
     tokens,
 )
-
-
-def _ascii_split(text: str) -> list[str]:
-    """Whitespace split with the engine's ASCII \\s (JVM/RE2 parity):
-    str.split() would also split on \\xa0 and friends, which the JVM
-    and the DuckDB oracles treat as word characters."""
-    import re
-
-    return re.split(r"\s+", text, flags=re.ASCII)
 from data_pipeline2_spark.plans.partitioning import (
     adaptive_key_join,
     ensure_parallelism,
@@ -351,18 +344,15 @@ def chunk_sentence_exact(
     reference exposes as pluggable chunking strategies
     (docling_service.py:208-271).
     """
-    import re
-
     validate_chunk_config(chunk_size)
-    sent_re = re.compile(SENTENCE_REGEX)
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
         for _, r in pdf.iterrows():
             text = r["__text"] or ""
-            units = [s.strip(ASCII_WS) for s in sent_re.findall(text)]
+            units = [s.strip(ASCII_WS) for s in split_sentences(text)]
             if not units:
-                units = [w for w in _ascii_split(text) if w]
+                units = ascii_split(text)
             if not units:
                 units = [""]
             for pos, content, n_units in _greedy_pack(units, chunk_size):
@@ -485,10 +475,7 @@ def chunk_hybrid(
     the reference's HybridChunker uses — unlike the character budgets
     of chunk_fixed/chunk_sentence.
     """
-    import re
-
     validate_chunk_config(chunk_size, chunk_overlap)
-    sent_re = re.compile(SENTENCE_REGEX)
     # default tokenizer resolves in ONE place: _greedy_pack_tokens
     count_fn = token_count
 
@@ -496,20 +483,20 @@ def chunk_hybrid(
         rows = []
         for _, r in pdf.iterrows():
             text = r["__text"] or ""
-            ends = [m.end() for m in sent_re.finditer(text)]
-            units = [s.strip(ASCII_WS) for s in sent_re.findall(text)]
+            units = [s.strip(ASCII_WS) for s in split_sentences(text)]
             # HybridChunker never drops text: whatever follows the LAST
             # sentence match becomes the final unit (chunk_sentence
             # keeps the reference packer's drop semantics; this operator
-            # models docling's chunker, which is lossless). Anchoring on
-            # the last match end — not a leading-run regex — so text
-            # starting with a bare terminator can't re-append the whole
-            # document as a duplicate unit.
-            tail = text[ends[-1]:].strip(ASCII_WS) if ends else ""
-            if units and tail:
+            # models docling's chunker, which is lossless). The last
+            # match ends at the text's last terminator; anchoring there
+            # — not on a leading-run regex — means text starting with a
+            # bare terminator can't re-append the whole document as a
+            # duplicate unit.
+            tail = text[sentence_end(text):].strip(ASCII_WS) if units else ""
+            if tail:
                 units.append(tail)
             if not units:
-                units = [w for w in _ascii_split(text) if w]
+                units = ascii_split(text)
             if not units:
                 units = [""]
             for pos, content, n_tok in _greedy_pack_tokens(
@@ -550,8 +537,6 @@ def sentence_udtf_class():
     generative Python. Sentence regex matches the reference's
     (docling_service.py:103).
     """
-    import re
-
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="pos: int, sentence: string")
@@ -559,7 +544,7 @@ def sentence_udtf_class():
         def eval(self, text: str):
             if not text:
                 return
-            for i, m in enumerate(re.finditer(r"[^.!?]+[.!?]+", text)):
-                yield i, m.group(0).strip(ASCII_WS)
+            for i, s in enumerate(split_sentences(text)):
+                yield i, s.strip(ASCII_WS)
 
     return SplitSentences

@@ -6,14 +6,16 @@ providers (Nomic :95-105, Granite :107-122), batch fan-out of 32
 via Redis (:148-170), failed items dropped from results (:206-212).
 
 Engine realization:
-- the provider seam is a scalar pandas_udf over Arrow batches (the
-  10-100x-over-row-Python path); batch size = Arrow batch config, the
-  analog of EMBEDDING_BATCH_SIZE;
 - the default provider is a deterministic hash-projection embedder so
   the whole pipeline is reproducible (the reference's live HTTP calls
   are a non-deterministic dependency, excluded from the correctness
-  surface by design — SURVEY.md §7); real providers implement the same
-  signature (text batch -> vector batch) including retry loops;
+  surface by design — SURVEY.md §7). It is a JVM expression
+  (`embed_chunks`): sha2 + array arithmetic, no Python worker on the
+  chunk → embed path; `hash_embed_one` is its driver-side twin (query
+  embedding, tests' reference);
+- the HTTP providers keep a scalar pandas_udf seam over Arrow batches
+  (`make_provider_embedder`; batch size = Arrow batch config, the
+  analog of EMBEDDING_BATCH_SIZE) with the reference's retry loop;
 - failure semantics: a provider returns null for a failed item; callers
   drop nulls — identical to the reference's skip-and-continue;
 - cache-aside: left_anti against the materialized embedding table, then
@@ -27,7 +29,7 @@ import math
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType
 from pyspark.sql import pandas as _  # noqa: F401  (ensures pandas-on-spark support loaded)
@@ -36,8 +38,8 @@ DEFAULT_DIM = 64  # testdata embedding width; reference providers use 768
 EMBED_BATCH_SIZE = 32  # reference settings.py:43 — maps to Arrow batch size
 
 # canonical ASCII whitespace set (see functions/text.py for the
-# engine-wide rationale — ADVICE r8): Python-side blank tests strip
-# exactly this set, matching the JVM/RE2 \s the oracles use.
+# engine-wide rationale — ADVICE r8): the blank test strips exactly
+# this set, matching the JVM/RE2 \s the oracles use.
 from data_pipeline2_spark.functions.text import ASCII_WS  # noqa: E402
 from data_pipeline2_spark.plans.partitioning import (  # noqa: E402
     adaptive_key_join,
@@ -49,7 +51,8 @@ def hash_embed_one(text: str, dim: int = DEFAULT_DIM) -> list[float]:
     """Deterministic unit-norm vector from text content.
 
     sha256-seeded byte stream → [-1,1) components → L2 normalize. Pure
-    python/stdlib so driver, executor, and tests agree bit-for-bit.
+    python/stdlib: the driver's query embedder and the tests' reference,
+    which `embed_chunks` replays bit-for-bit on the executors.
     """
     out: list[float] = []
     counter = 0
@@ -66,26 +69,6 @@ def hash_embed_one(text: str, dim: int = DEFAULT_DIM) -> list[float]:
     return [float(v / norm) for v in out]
 
 
-def make_hash_embedder(dim: int = DEFAULT_DIM, fail_on_empty: bool = True):
-    """pandas_udf text -> array<float>; null (dropped later) for blank
-    input, mirroring the reference's skip-and-continue on provider error.
-
-    Blank = nothing but ASCII whitespace (`ASCII_WS`): a text of
-    Unicode-only whitespace (\\xa0 ...) is NOT blank — it embeds, same
-    as the SQL/JVM side would keep it (their \\s is ASCII-only)."""
-
-    @F.pandas_udf(ArrayType(FloatType()))
-    def embed(texts: pd.Series) -> pd.Series:
-        def one(t):
-            if t is None or (fail_on_empty and not t.strip(ASCII_WS)):
-                return None
-            return hash_embed_one(t, dim)
-
-        return texts.map(one)
-
-    return embed
-
-
 def embed_chunks(
     chunks: DataFrame,
     text_col: str = "content",
@@ -96,16 +79,52 @@ def embed_chunks(
     """chunks → (chunk_id, provider, embedding) with failed rows dropped.
 
     Reference contract: generate_embeddings returns only successes
-    (embedding_service.py:206-212).
-    """
-    embedder = make_hash_embedder(dim)
+    (embedding_service.py:206-212). A null or blank chunk (nothing but
+    ASCII whitespace, `ASCII_WS`) is the provider's failed item. A
+    text of Unicode-only whitespace (\\xa0 ...) is NOT blank: it
+    embeds, same as the SQL/JVM side keeps it (their \\s is ASCII).
+
+    The vector is `hash_embed_one` replayed as Catalyst expressions,
+    bit for bit (the recipe `_hash_embed_ctes` replays in DuckDB):
+    sha256 of `text || '|' || c` per 16-component block c, 16-bit
+    big-endian words → n/32768 − 1, the norm as a left-fold sum of
+    squares (Python's sum order) and sqrt with 0 → 1, an IEEE divide
+    and one float32 cast. The per-row sha hex and norm enter the
+    element lambdas as `array_repeat` arguments, never as captured
+    columns: Catalyst inlines a projected column into a lambda that
+    captures it, re-evaluating it for every element."""
+    text = F.col(text_col)
+    hexd = F.concat(
+        *[F.sha2(F.concat(text, F.lit(f"|{c}")), 256) for c in range(-(-dim // 16))]
+    )
+    raw = F.transform(
+        F.array_repeat(hexd, dim),
+        lambda h, i: F.conv(F.substring(h, i * 4 + 1, 4), 16, 10).cast("int")
+        / F.lit(32768.0)
+        - F.lit(1.0),
+    )
+    norm = F.aggregate(
+        "__raw",
+        F.lit(0.0),
+        lambda acc, x: acc + x * x,
+        lambda s: F.when(s == 0, F.lit(1.0)).otherwise(F.sqrt(s)),
+    )
     return (
-        chunks.select(
+        chunks.filter(F.length(F.btrim(text, F.lit(ASCII_WS))) > 0)
+        .select(
             F.col(id_col).alias("chunk_id"),
             F.lit(provider).alias("provider"),
-            embedder(F.col(text_col)).alias("embedding"),
+            raw.alias("__raw"),
         )
-        .filter(F.col("embedding").isNotNull())
+        .select(
+            "chunk_id",
+            "provider",
+            F.zip_with(
+                "__raw",
+                F.array_repeat(norm, dim),
+                lambda x, n: (x / n).cast("float"),
+            ).alias("embedding"),
+        )
     )
 
 

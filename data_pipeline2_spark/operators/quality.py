@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_pipeline2_spark.functions.text import tokens
+from data_pipeline2_spark.functions.text import sentences, tokens
 from data_pipeline2_spark.operators.dedup import shingle_fingerprints, shingle_hash64
 from data_pipeline2_spark.operators.textanalysis import (
     _ngrams,
@@ -175,9 +175,7 @@ def c4_cols(t: Column) -> dict[str, Column]:
         lines, lambda x: F.size(F.split(F.trim(x), r"\s+")) >= 5
     )
     js_lines = F.filter(lines, lambda x: F.lower(x).contains("javascript"))
-    n_sentences = F.size(
-        F.regexp_extract_all(t, F.lit(r"[^.!?]+[.!?]+"), 0)
-    ).cast("long")
+    n_sentences = F.size(sentences(t)).cast("long")
     has_lorem = F.lower(t).contains("lorem ipsum")
     has_brace = t.contains("{")
     n_js = F.size(js_lines).cast("long")

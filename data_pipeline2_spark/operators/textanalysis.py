@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline2_spark.functions.text import (
+    ascii_split,
     content_hash,
     sentences,
     token_count,
@@ -146,9 +147,10 @@ def _train_held(
 
 
 def _phrase_terms(phrase: str) -> list[str]:
-    """A phrase query's lowercased whitespace tokens; a phrase with no
-    tokens matches nothing meaningful, so it is a named error."""
-    terms = phrase.lower().split()
+    """A phrase query's lowercased tokens, split on the engine's ASCII
+    whitespace like the documents; a phrase with no tokens matches
+    nothing meaningful, so it is a named error."""
+    terms = ascii_split(phrase.lower())
     if not terms:
         raise ValueError(f"phrase has no tokens: {phrase!r}")
     return terms

@@ -138,6 +138,29 @@ def test_get_chunks_empty_text_is_found(spark):
     assert api.get_chunks(3) is None
 
 
+@pytest.mark.driver
+def test_upload_without_terminator_chunks_in_linear_time(spark):
+    # a long upload with no sentence terminator: the full-text regex
+    # backtracks quadratically over it (tens of seconds at this length,
+    # stalling the single-threaded server); the tail cut is one pass.
+    # The word-unit fallback must still rebuild the upload's words.
+    import time
+
+    from data_pipeline2_spark.api import EngineAPI
+
+    api = EngineAPI(spark, SF)
+    api.upload(b"warm up the seam. once", "warm.txt")  # cold start, untimed
+    words = [f"word{i}" for i in range(8000)]
+    text = " ".join(words)
+    assert len(text) >= 60_000
+    t0 = time.perf_counter()
+    resp = api.upload(text.encode(), "no_terminator.txt")
+    elapsed = time.perf_counter() - t0
+    chunks = sorted(api.uploads[resp["doc_id"]]["chunks"], key=lambda c: c["pos"])
+    assert " ".join(c["content"] for c in chunks).split(" ") == words
+    assert elapsed < 4.0, f"upload took {elapsed:.1f}s"
+
+
 def test_handler_logs_swallowed_errors(monkeypatch, caplog):
     # an exception escaping the route handlers is logged, not dropped
     # silently; the connection still just closes

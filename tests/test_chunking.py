@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from data_pipeline2_spark.functions.text import split_sentences
 from data_pipeline2_spark.operators import chunking
 
 FIXTURE = """# Title
@@ -136,18 +137,15 @@ def test_hybrid_packs_by_token_budget(spark, docs):
     """HybridChunker semantics: chunks respect a TOKEN budget (not
     characters); n_tokens is the exact BPE-ish count of the content;
     the only over-budget chunks are single oversized units."""
-    import re
-
     budget = 30
     out = chunking.chunk_hybrid(docs, budget, 5).orderBy("doc_id", "pos").collect()
     assert out
-    sent_re = re.compile(chunking.SENTENCE_REGEX)
     for r in out:
         assert r.n_tokens == chunking._bpe_token_count(r.content)
         if r.n_tokens > budget:
             # oversized-single-unit case: content is one sentence unit
             # (or a unit-less word blob doc packed word by word)
-            assert len(sent_re.findall(r.content)) <= 1
+            assert len(split_sentences(r.content)) <= 1
 
 
 def test_hybrid_injected_tokenizer_budget_compliance(spark, docs):
@@ -156,7 +154,6 @@ def test_hybrid_injected_tokenizer_budget_compliance(spark, docs):
     that tokenizer's count of its content and respects the budget
     (oversized-single-unit excepted), so a user targeting a model's
     real context window gets exact compliance."""
-    import re
 
     def word_tokens(s: str) -> int:  # stand-in for an HF tokenizer count
         return len(s.split())
@@ -168,12 +165,11 @@ def test_hybrid_injected_tokenizer_budget_compliance(spark, docs):
         .collect()
     )
     assert out
-    sent_re = re.compile(chunking.SENTENCE_REGEX)
     default = chunking.chunk_hybrid(docs, budget, 3).orderBy("doc_id", "pos").collect()
     for r in out:
         assert r.n_tokens == word_tokens(r.content)
         if r.n_tokens > budget:
-            assert len(sent_re.findall(r.content)) <= 1
+            assert len(split_sentences(r.content)) <= 1
     # the injected tokenizer actually changed the packing (word counts
     # differ from BPE-ish counts), so the seam is live, not decorative
     assert [(r.doc_id, r.pos, r.content) for r in out] != [
@@ -282,3 +278,44 @@ def test_hybrid_leading_terminator_no_duplication(spark):
     joined = " ".join(r.content for r in out)
     assert joined.count("Hello there.") == 1
     assert joined.count("Bye bye now.") == 1
+
+
+@pytest.mark.driver
+def test_sentences_equal_full_text_regex(spark):
+    """`sentences` (regex on the prefix ending at the last terminator)
+    returns exactly the full-text SENTENCE_REGEX extraction, on random
+    terminator-heavy text plus the edge rows."""
+    import random
+
+    from data_pipeline2_spark.functions.text import SENTENCE_REGEX, sentences
+
+    rng = random.Random(11)
+    alphabet = "ab .!?\n\xa0😀"
+    texts = [None, "", "...", "?!a", ".. a b. c", "a\xa0b.", "😀!😀", "a" * 50]
+    texts += [
+        "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 40)))
+        for _ in range(20000 - len(texts))
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    full = F.regexp_extract_all("t", F.lit(SENTENCE_REGEX), 0)
+    n_diff = df.filter(~sentences(F.col("t")).eqNullSafe(full)).count()
+    assert n_diff == 0
+
+
+@pytest.mark.driver
+def test_sentences_linear_on_terminator_free_text(spark):
+    """A 100k-char document with no terminator: the full-text regex
+    backtracks quadratically over it (47 s on 4 vCPU); the tail cut makes
+    it one linear pass."""
+    import time
+
+    from data_pipeline2_spark.functions.text import sentences
+
+    text = ("lorem ipsum dolor sit amet " * 4000)[:100_000]
+    df = spark.createDataFrame([(text,)], "t string")
+    df.select(F.length("t")).first()  # cold start, untimed
+    t0 = time.perf_counter()
+    (n,) = df.select(F.size(sentences(F.col("t")))).first()
+    elapsed = time.perf_counter() - t0
+    assert n == 0
+    assert elapsed < 4.0, f"sentences() took {elapsed:.1f}s on 100k chars"

@@ -6,7 +6,9 @@ determinism of the provider seam."""
 from __future__ import annotations
 
 import math
+import struct
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline2_spark.operators import embedding
@@ -44,6 +46,34 @@ def test_embed_blank_is_ascii_whitespace_only(spark):
     chunks = spark.createDataFrame(rows, "chunk_id string, content string")
     out = embedding.embed_chunks(chunks).toPandas()
     assert set(out.chunk_id) == {"unicode_ws", "real"}
+
+
+EDGE_TEXTS = [
+    "hello world", "é", "😀 emoji 🚀", "x" * 700, "a", "0", "line\nbreak",
+    "\xa0", "\u3000 ", None, "", " ", " \t\n\r\x0b\x0c ",
+]
+
+
+@pytest.mark.driver
+@pytest.mark.parametrize("dim", [4, 16, 64, 100])
+def test_embed_chunks_bit_identical_to_hash_embed_one(spark, dim):
+    # the JVM embedder replays hash_embed_one's float32 output bit for
+    # bit (dims off the 16-word sha block included), and drops exactly
+    # the null / ASCII-blank rows
+    from data_pipeline2_spark.functions.text import ASCII_WS
+    from data_pipeline2_spark.operators.serving_e2e import _f32
+
+    rows = [(f"c{i}", t) for i, t in enumerate(EDGE_TEXTS)]
+    chunks = spark.createDataFrame(rows, "chunk_id string, content string")
+    got = {r.chunk_id: r.embedding for r in embedding.embed_chunks(chunks, dim=dim).collect()}
+    want = {
+        cid: _f32(embedding.hash_embed_one(t, dim))
+        for cid, t in rows
+        if t is not None and t.strip(ASCII_WS)
+    }
+    assert got.keys() == want.keys()
+    for cid, vec in want.items():
+        assert struct.pack(f"<{dim}f", *got[cid]) == struct.pack(f"<{dim}f", *vec), cid
 
 
 def test_embed_incremental_reuses_cache(spark):

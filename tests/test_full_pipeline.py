@@ -149,11 +149,14 @@ def test_phrase_match_word_boundaries(spark):
             (2, "sparkly join here"),          # substring, not a token
             (3, "spark  JOIN   with spaces"),  # whitespace runs + case
             (4, "join spark reversed"),
+            (5, "a\u00a0b"),                  # \xa0 is a word char, not a space
         ],
         "doc_id long, text string",
     )
     got = sorted(r.doc_id for r in phrase_match(docs, "text", "Spark Join").collect())
     assert got == [1, 3]
+    got = [r.doc_id for r in phrase_match(docs, "text", "a\u00a0b").collect()]
+    assert got == [5]
 
 
 def test_phrase_indexed_counts_overlapping_starts(spark):
@@ -167,6 +170,7 @@ def test_phrase_indexed_counts_overlapping_starts(spark):
             (1, "a b a b a"),   # 'a b' starts at 0 and 2
             (2, "b a"),          # reversed, no match
             (3, "a a a"),        # repeated-term phrase 'a a': starts 0,1
+            (4, "a\u00a0b"),     # one token: \xa0 is not ASCII whitespace
         ],
         "doc_id long, text string",
     )
@@ -175,6 +179,8 @@ def test_phrase_indexed_counts_overlapping_starts(spark):
     assert ab == {1: 2}
     aa = {r.doc_id: r.n_matches for r in phrase_match_indexed(idx, "a a").collect()}
     assert aa == {3: 2}
+    nb = {r.doc_id: r.n_matches for r in phrase_match_indexed(idx, "a\u00a0b").collect()}
+    assert nb == {4: 1}
 
 
 def test_near_match_slop_and_order(spark):

@@ -8,6 +8,8 @@ results stay right.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -424,3 +426,34 @@ def test_term_cooccurrence_single_scan(spark):
     docs = load_table(spark, SF, "documents")
     plan = plan_of(term_cooccurrence(docs))
     assert plan.count("Scan parquet") == 1
+
+
+_PYTHON_WORKER_NODE = re.compile(r"ArrowEvalPython|BatchEvalPython|\w+InPandas")
+
+
+def test_chunk_embed_path_runs_no_python_worker(spark, monkeypatch):
+    """The ingest path chunk → embed → index is JVM-only: the hash
+    embedder is a Catalyst expression, so neither `embed_chunks`, the
+    serving composition's vector index nor the streaming sink's
+    per-batch frame may carry a Python evaluation node. The index is
+    inspected unmaterialized: a checkpoint's plan would hide the
+    lineage that built it."""
+    from data_pipeline2_spark.operators import embedding, serving_e2e
+    from data_pipeline2_spark.sources.parquet import load_table
+    from data_pipeline2_spark.streaming import stateful
+
+    docs = load_table(spark, SF, "documents")
+    chunks = spark.createDataFrame(
+        [("c1", "some text"), ("c2", " ")], "chunk_id string, content string"
+    )
+    monkeypatch.setattr(serving_e2e, "materialize", lambda df: df)
+    monkeypatch.setattr(serving_e2e, "materialize_lazy", lambda df: df)
+    cents = [(0, [0.0] * 64), (1, [1.0] * 64)]
+    frames = {
+        "embed_chunks": embedding.embed_chunks(chunks),
+        "semantic_search index": serving_e2e.semantic_search_frames(docs)["index"],
+        "document_index_frame": stateful.document_index_frame(docs, cents),
+    }
+    for name, df in frames.items():
+        plan = plan_of(df)
+        assert not _PYTHON_WORKER_NODE.search(plan), f"{name}:\n{plan}"

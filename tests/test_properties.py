@@ -13,7 +13,11 @@ import re
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from data_pipeline2_spark.functions.text import SENTENCE_REGEX
+from data_pipeline2_spark.functions.text import (
+    SENTENCE_REGEX,
+    sentence_end,
+    split_sentences,
+)
 from data_pipeline2_spark.operators.chunking import _greedy_pack
 from data_pipeline2_spark.operators.embedding import hash_embed_one
 
@@ -42,8 +46,11 @@ def test_greedy_pack_properties(units, chunk_size):
         assert len(c1) + 1 + len(first_next) > chunk_size
 
 
-@given(st.text(max_size=500))
-@settings(max_examples=200, deadline=None)
+@given(
+    st.text(max_size=500)
+    | st.text(alphabet="ab .!?\n\xa0😀", max_size=200)
+)
+@settings(max_examples=400, deadline=None)
 def test_sentence_regex_lossless_within_matches(text):
     # every extracted sentence is a substring, in order, non-overlapping
     matches = re.findall(SENTENCE_REGEX, text)
@@ -52,6 +59,11 @@ def test_sentence_regex_lossless_within_matches(text):
         idx = text.index(m, cursor)
         assert idx >= cursor
         cursor = idx + len(m)
+    # the linear tail-cut helper is the same extraction, and the last
+    # match ends at the last terminator
+    assert split_sentences(text) == matches
+    if matches:
+        assert cursor == sentence_end(text)
 
 
 @given(st.text(max_size=200), st.integers(min_value=4, max_value=128))
