@@ -36,6 +36,17 @@ from pyspark.sql import functions as F
 _log = logging.getLogger(__name__)
 
 
+def _sentence_chunks(df) -> list[dict]:
+    """The chunks the upload and /chunks routes serve: exact sentence
+    packing at 500 chars with chunk metadata, one dict per chunk."""
+    from data_pipeline2_spark.operators import chunking
+
+    out = chunking.chunk_metadata_enrich(
+        chunking.chunk_sentence_exact(df, 500), "sentence"
+    )
+    return [r.asDict() for r in out.collect()]
+
+
 class EngineAPI:
     """Holds the session + corpus and implements each endpoint."""
 
@@ -55,18 +66,13 @@ class EngineAPI:
     # ---- endpoint implementations ----
 
     def upload(self, payload: bytes, filename: str) -> dict:
-        from data_pipeline2_spark.operators import chunking
-
         text = payload.decode("utf-8", errors="replace")
         doc_id = int.from_bytes(
             __import__("hashlib").sha256(filename.encode() + payload).digest()[:6],
             "big",
         )
         df = self.spark.createDataFrame([(doc_id, text)], "doc_id long, text string")
-        chunks = chunking.chunk_metadata_enrich(
-            chunking.chunk_sentence_exact(df, 500), "sentence"
-        )
-        rows = [r.asDict() for r in chunks.collect()]
+        rows = _sentence_chunks(df)
         with self._lock:
             while len(self.uploads) >= self.max_uploads:
                 self.uploads.pop(next(iter(self.uploads)))  # evict oldest
@@ -106,18 +112,13 @@ class EngineAPI:
         return {"doc_id": doc_id, "status": doc["status"]} if doc else None
 
     def get_chunks(self, doc_id: int) -> list | None:
-        from data_pipeline2_spark.operators import chunking
-
         with self._lock:
             if doc_id in self.uploads:
                 return self.uploads[doc_id]["chunks"]
         # chunk_sentence_exact emits at least one row per document (empty
         # text packs to [""]), so no rows means no such document
         doc = self.documents.filter(F.col("doc_id") == doc_id)
-        out = chunking.chunk_metadata_enrich(
-            chunking.chunk_sentence_exact(doc, 500), "sentence"
-        )
-        return [r.asDict() for r in out.collect()] or None
+        return _sentence_chunks(doc) or None
 
     def search(self, query: str, k: int = 10) -> list:
         from data_pipeline2_spark.operators.embedding import hash_embed_one

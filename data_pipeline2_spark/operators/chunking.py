@@ -13,27 +13,39 @@ Reference strategies (doc_pipeline/services/docling_service.py):
   (docling_service.py:222-236),
 - config validation (docling_service.py:42-51).
 
-Spark-first realization: chunking is an `explode` pipeline — generate
-chunk indices per document, explode, slice with `substring` — all
-JVM-side expressions, embarrassingly parallel, no shuffle except the
-window for metadata enrichment (partitioned by doc_id, which is also
-the natural data layout at 100 TB: chunks co-partitioned with their
-documents).
+One chunk core: every chunker composes the pieces below, so each
+chunking decision is made in exactly one place.
 
-Greedy packing is inherently sequential per document; the oracled
-default (`chunk_sentence`) uses a running-sum bucket approximation
-(identical semantics expressible in ANSI SQL); the exact scan ships as
-`chunk_sentence_exact` via applyInPandas (rows-only check). The size
-bound invariant (content <= chunk_size + max_unit_len) holds for both.
+- `chunk_overlap_slices` is the one slicer: an `explode` of slice
+  indices and a `substring`, JVM-side and shuffle-free. Fixed slices
+  are overlap 0.
+- `_pack_running_sum` is the one running-sum packer: a window running
+  sum of a per-unit cost gives each unit its chunk `pos`, and each
+  (doc_id, pos) group joins its units in order. Sentence, markdown and
+  token-budget chunking differ only in units, cost and separator. The
+  window partitions by doc_id, the natural layout at 100 TB (chunks
+  co-partitioned with their documents).
+- `_greedy_pack` is the one exact greedy loop (token budget with
+  overlap carry); character packing is the same loop with cost
+  len + 1, budget chunk_size + 1 and no overlap.
+- `_pack_documents` is the one per-document applyInPandas shell, fed
+  by the one Python unit rule `_python_units`.
+
+Greedy packing is inherently sequential per document. The default
+(`chunk_sentence`) uses the running-sum bucket approximation, which
+ANSI SQL expresses directly; the exact scans (`chunk_sentence_exact`,
+`chunk_hybrid`) are value-checked by recursive-CTE oracles that replay
+the greedy loop. The size bound (content <= chunk_size + max_unit_len)
+holds for both.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
+from collections.abc import Callable, Iterable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -76,29 +88,13 @@ def chunk_fixed(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Fixed-width character slices; empty docs yield one empty chunk
-    (the whole-doc fallback, docling_service.py:277-292).
+    """Fixed-width character slices: the slicer at overlap 0. Empty
+    docs yield one empty chunk (the whole-doc fallback,
+    docling_service.py:277-292).
 
     → (doc_id, pos, chunk_id, content)
     """
-    validate_chunk_config(chunk_size)
-    documents = ensure_parallelism(documents, id_col)
-    n = F.greatest(F.ceil(F.length(F.col(text_col)) / F.lit(chunk_size)), F.lit(1))
-    return (
-        documents.select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(F.sequence(F.lit(0), (n - 1).cast("int"))).alias("pos", "_i"),
-            F.col(text_col),
-        )
-        .select(
-            "doc_id",
-            F.col("pos").cast("int").alias("pos"),
-            F.concat_ws("-", F.col("doc_id"), F.col("pos")).alias("chunk_id"),
-            F.substring(
-                F.col(text_col), F.col("pos") * chunk_size + 1, chunk_size
-            ).alias("content"),
-        )
-    )
+    return chunk_overlap_slices(documents, chunk_size, 0, id_col, text_col)
 
 
 def chunk_overlap_slices(
@@ -113,6 +109,8 @@ def chunk_overlap_slices(
     Reference: chunk_overlap config consumed by the HybridChunker
     (docling_service.py:216-217); realized here as deterministic
     character windows.
+
+    → (doc_id, pos, chunk_id, content)
     """
     validate_chunk_config(chunk_size, overlap)
     documents = ensure_parallelism(documents, id_col)
@@ -138,6 +136,53 @@ def chunk_overlap_slices(
     )
 
 
+def _pack_running_sum(
+    units: DataFrame,
+    cost: Column,
+    sep: str,
+    budget: int | None = None,
+    **aggs: Column,
+) -> DataFrame:
+    """The one running-sum packer over (doc_id, upos, unit) rows.
+
+    A unit's chunk `pos` is the running sum of `cost` over its document
+    in `upos` order, bucketed as floor((sum - 1) / budget) when a
+    budget is given. Each (doc_id, pos) group joins its units in order
+    with `sep`; `aggs` are extra named per-chunk aggregates.
+
+    → (doc_id, pos, chunk_id, content, *aggs)
+    """
+    w = (
+        Window.partitionBy("doc_id")
+        .orderBy("upos")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    pos = F.sum(cost).over(w)
+    if budget is not None:
+        pos = F.floor((pos - 1) / F.lit(budget))
+    return (
+        units.withColumn("pos", pos.cast("int"))
+        .groupBy("doc_id", "pos")
+        .agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("upos", "unit"))),
+                    lambda s: s["unit"],
+                ),
+                sep,
+            ).alias("content"),
+            *[c.alias(name) for name, c in aggs.items()],
+        )
+        .select(
+            "doc_id",
+            "pos",
+            F.concat_ws("-", F.col("doc_id"), F.col("pos")).alias("chunk_id"),
+            "content",
+            *aggs,
+        )
+    )
+
+
 def chunk_sentence(
     documents: DataFrame,
     chunk_size: int = DEFAULT_CHUNK_SIZE,
@@ -146,52 +191,33 @@ def chunk_sentence(
 ) -> DataFrame:
     """Sentence-pack chunking, running-sum bucket variant (oracled).
 
-    Units are regex sentences (docling_service.py:103); a document with
-    no sentence terminators degrades to word units — the word-split path
-    the reference applies to oversized sentences (docling_service.py:124-147).
-    Packing: cumulative joined-length running sum, bucket =
-    floor((cum-1)/chunk_size); units in one bucket join with ' '.
+    Units are regex sentences (docling_service.py:103) stripped of
+    ASCII whitespace; a document with no sentence terminators degrades
+    to word units — the word-split path the reference applies to
+    oversized sentences (docling_service.py:124-147). Packing: running
+    sum of len + 1, bucket = floor((cum-1)/chunk_size); units in one
+    bucket join with ' '.
 
     → (doc_id, pos, chunk_id, content, n_units)
     """
     validate_chunk_config(chunk_size)
     documents = ensure_parallelism(documents, id_col)
     sent = sentences(F.col(text_col))
-    units = F.when(F.size(sent) > 0, F.transform(sent, F.trim)).otherwise(
-        tokens(F.col(text_col))
-    )
+    # one-argument lambda: handed `F.btrim` itself, transform would bind
+    # its second parameter to the element index
+    units = F.when(
+        F.size(sent) > 0, F.transform(sent, lambda s: F.btrim(s, F.lit(ASCII_WS)))
+    ).otherwise(tokens(F.col(text_col)))
     exploded = documents.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(units).alias("upos", "unit"),
     )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("upos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum(F.length("unit") + 1).over(w)
-    bucketed = exploded.withColumn(
-        "pos", F.floor((cum - 1) / F.lit(chunk_size)).cast("int")
-    )
-    return (
-        bucketed.groupBy("doc_id", "pos")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("upos", "unit"))),
-                    lambda s: s["unit"],
-                ),
-                " ",
-            ).alias("content"),
-            F.count(F.lit(1)).cast("int").alias("n_units"),
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.concat_ws("-", F.col("doc_id"), F.col("pos")).alias("chunk_id"),
-            "content",
-            "n_units",
-        )
+    return _pack_running_sum(
+        exploded,
+        F.length("unit") + 1,
+        " ",
+        chunk_size,
+        n_units=F.count(F.lit(1)).cast("int"),
     )
 
 
@@ -213,37 +239,43 @@ def chunk_markdown(
     documents = ensure_parallelism(documents, id_col)
     lines = documents.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("lpos", "line"),
+        F.posexplode(F.split(F.col(text_col), "\n")).alias("upos", "unit"),
     )
-    is_heading = F.col("line").startswith("#")
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("lpos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    sectioned = lines.withColumn(
-        "pos", F.sum(is_heading.cast("int")).over(w).cast("int")
-    )
+    is_heading = F.col("unit").startswith("#")
     return (
-        sectioned.groupBy("doc_id", "pos")
-        .agg(
-            F.max(F.when(is_heading, F.col("line"))).alias("heading"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("lpos", "line"))),
-                    lambda s: s["line"],
-                ),
-                "\n",
-            ).alias("content"),
+        _pack_running_sum(
+            lines,
+            is_heading.cast("int"),
+            "\n",
+            heading=F.max(F.when(is_heading, F.col("unit"))),
         )
         .filter(F.length(F.trim(F.col("content"))) > 0)
-        .select(
-            "doc_id",
-            "pos",
-            F.concat_ws("-", F.col("doc_id"), F.col("pos")).alias("chunk_id"),
-            "heading",
-            "content",
-        )
+        .select("doc_id", "pos", "chunk_id", "heading", "content")
+    )
+
+
+def chunk_token_budget(
+    documents: DataFrame,
+    token_budget: int = 64,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Word units packed into <= `token_budget`-token chunks with the
+    deterministic estimator ceil(len / 4) ≈ BPE tokens: the running-sum
+    packer budgeted in tokens instead of characters, the
+    LLM-context-window chunker.
+
+    → (doc_id, pos, chunk_id, content, est_tokens)
+    """
+    validate_chunk_config(token_budget)
+    documents = ensure_parallelism(documents, id_col)
+    words = documents.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(tokens(F.col(text_col))).alias("upos", "unit"),
+    )
+    est = F.ceil(F.length("unit") / 4.0).cast("long")
+    return _pack_running_sum(
+        words, est, " ", token_budget, est_tokens=F.sum(est)
     )
 
 
@@ -301,33 +333,101 @@ def chunk_metadata_enrich(chunks: DataFrame, strategy: str) -> DataFrame:
     ).withColumn("strategy", F.lit(strategy))
 
 
-# ---- exact greedy packing (applyInPandas; rows-only oracle) ----
-
-_EXACT_SCHEMA = (
-    "doc_id long, pos int, chunk_id string, content string, n_units int"
-)
+# ---- exact greedy packing (applyInPandas; recursive-CTE value oracles) ----
 
 
-def _greedy_pack(units: Iterable[str], chunk_size: int) -> list[tuple[int, str, int]]:
-    """The reference's exact greedy accumulation loop
-    (docling_service.py:150-160): pack units until adding the next would
-    exceed chunk_size; oversized single units become their own chunk."""
-    out: list[tuple[int, str, int]] = []
+def _greedy_pack(
+    units: list[str], costs: list[int], budget: int, overlap: int
+) -> list[tuple[int, list[str], int]]:
+    """The one greedy packing loop → [(pos, chunk units, cost sum)].
+
+    The reference's accumulation loop (docling_service.py:150-160):
+    pack units until adding the next would exceed `budget`. An
+    oversized single unit becomes its own chunk (the reference then
+    word-splits it, docling_service.py:124-147; here it stays whole).
+    On each flush the next chunk first carries the trailing whole units
+    of the last one that cost <= `overlap` in total, dropped entirely
+    when carrying them would overflow the next chunk.
+
+    Character packing is this loop with cost len + 1, budget
+    chunk_size + 1 and overlap 0: the joined length of a chunk plus one
+    is its cost sum, and no unit costs 0, so nothing is carried.
+    """
+    out: list[tuple[int, list[str], int]] = []
     cur: list[str] = []
-    cur_len = 0
-    pos = 0
-    for u in units:
-        ulen = len(u) + (1 if cur else 0)
-        if cur and cur_len + ulen > chunk_size:
-            out.append((pos, " ".join(cur), len(cur)))
-            pos += 1
-            cur, cur_len = [u], len(u)
+    cur_costs: list[int] = []
+    cur_cost = 0
+    for u, c in zip(units, costs):
+        if cur and cur_cost + c > budget:
+            out.append((len(out), cur, cur_cost))
+            n_keep = 0
+            keep_cost = 0
+            for v in reversed(cur_costs):
+                if keep_cost + v > overlap:
+                    break
+                n_keep += 1
+                keep_cost += v
+            if keep_cost + c > budget:
+                n_keep, keep_cost = 0, 0
+            cur = cur[len(cur) - n_keep:] + [u]
+            cur_costs = cur_costs[len(cur_costs) - n_keep:] + [c]
+            cur_cost = keep_cost + c
         else:
             cur.append(u)
-            cur_len += ulen
+            cur_costs.append(c)
+            cur_cost += c
     if cur:
-        out.append((pos, " ".join(cur), len(cur)))
+        out.append((len(out), cur, cur_cost))
     return out
+
+
+def _python_units(text: str, tail: bool) -> list[str]:
+    """The one Python unit rule: the ASCII_WS-stripped sentences, else
+    the ASCII words, else [""]. With `tail`, whatever follows the last
+    sentence becomes one more unit. The tail starts where the last match
+    ends, so text that opens with a bare terminator cannot re-append
+    the whole document as a duplicate unit."""
+    units = [s.strip(ASCII_WS) for s in split_sentences(text)]
+    rest = text[sentence_end(text):].strip(ASCII_WS) if tail and units else ""
+    if rest:
+        units.append(rest)
+    return units or ascii_split(text) or [""]
+
+
+def _pack_documents(
+    documents: DataFrame,
+    id_col: str,
+    text_col: str,
+    count_col: str,
+    pack: Callable[[str], Iterable[tuple[int, str, int]]],
+) -> DataFrame:
+    """The one per-document applyInPandas shell: `pack(text)` yields
+    one document's (pos, content, count) rows.
+
+    Arrow-batched, grouped by doc_id: each group is one document, so
+    parallelism = number of documents — fine at any scale (documents
+    are small relative to partitions). This is the UDAF/UDTF-shaped
+    seam the reference exposes as pluggable chunking strategies
+    (docling_service.py:208-271).
+
+    → (doc_id, pos, chunk_id, content, <count_col>)
+    """
+    cols = ["doc_id", "pos", "chunk_id", "content", count_col]
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = [
+            (d, pos, f"{d}-{pos}", content, n)
+            for d, text in zip(pdf["doc_id"], pdf["__text"])
+            for pos, content, n in pack(text or "")
+        ]
+        return pd.DataFrame(rows, columns=cols)
+
+    prepared = ensure_parallelism(documents, id_col).select(
+        F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("__text")
+    )
+    return prepared.groupBy("doc_id").applyInPandas(
+        run, f"doc_id long, pos int, chunk_id string, content string, {count_col} int"
+    )
 
 
 def chunk_sentence_exact(
@@ -336,37 +436,20 @@ def chunk_sentence_exact(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Exact sequential greedy packing via applyInPandas per document.
+    """Exact sequential greedy packing of the Python sentence units
+    into <= chunk_size characters, one document per group.
 
-    Arrow-batched, partitioned by doc_id: each group is one document, so
-    parallelism = number of documents — fine at any scale (documents are
-    small relative to partitions). This is the UDAF/UDTF-shaped seam the
-    reference exposes as pluggable chunking strategies
-    (docling_service.py:208-271).
+    → (doc_id, pos, chunk_id, content, n_units)
     """
     validate_chunk_config(chunk_size)
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for _, r in pdf.iterrows():
-            text = r["__text"] or ""
-            units = [s.strip(ASCII_WS) for s in split_sentences(text)]
-            if not units:
-                units = ascii_split(text)
-            if not units:
-                units = [""]
-            for pos, content, n_units in _greedy_pack(units, chunk_size):
-                rows.append(
-                    (r["doc_id"], pos, f"{r['doc_id']}-{pos}", content, n_units)
-                )
-        return pd.DataFrame(
-            rows, columns=["doc_id", "pos", "chunk_id", "content", "n_units"]
-        )
+    def pack(text: str):
+        units = _python_units(text, tail=False)
+        costs = [len(u) + 1 for u in units]
+        for pos, chunk, _ in _greedy_pack(units, costs, chunk_size + 1, 0):
+            yield pos, " ".join(chunk), len(chunk)
 
-    prepared = ensure_parallelism(documents, id_col).select(
-        F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("__text")
-    )
-    return prepared.groupBy("doc_id").applyInPandas(pack, _EXACT_SCHEMA)
+    return _pack_documents(documents, id_col, text_col, "n_units", pack)
 
 
 # BPE-ish subword estimator: greedy <=4-char alphabetic pieces, digit
@@ -387,64 +470,6 @@ def _bpe_token_count(text: str) -> int:
     return len(_BPE_RE.findall(text.lower()))
 
 
-def _greedy_pack_tokens(
-    units: list[str], budget: int, overlap: int, count_fn=None
-) -> list[tuple[int, str, int]]:
-    """Greedy token-budget packing with trailing-unit overlap carry →
-    [(pos, content, n_tokens)].
-
-    Invariant (tested): n_tokens <= budget unless a chunk is a single
-    unit that alone exceeds the budget (the reference's oversized-
-    sentence case, docling_service.py:124-147, which it then word-
-    splits; here the oversized unit stays whole and is flagged by its
-    token count). Overlap keeps trailing whole units totaling <=
-    `overlap` tokens — dropped entirely when carrying them would
-    overflow the next chunk.
-
-    `count_fn` (str -> int) is the tokenizer seam; chunk counts are the
-    SUM of per-unit counts, exact whenever no token spans the joining
-    whitespace (true of the default estimator and of word/BPE-family
-    tokenizers).
-    """
-    count_fn = count_fn or _bpe_token_count
-    out: list[tuple[int, str, int]] = []
-    cur: list[str] = []
-    cur_tok = 0
-    pos = 0
-    counts: list[int] = []
-    for u in units:
-        ut = count_fn(u)
-        if cur and cur_tok + ut > budget:
-            out.append((pos, " ".join(cur), cur_tok))
-            pos += 1
-            keep: list[str] = []
-            keep_counts: list[int] = []
-            keep_tok = 0
-            for v, vt in zip(reversed(cur), reversed(counts)):
-                if keep_tok + vt > overlap:
-                    break
-                keep.insert(0, v)
-                keep_counts.insert(0, vt)
-                keep_tok += vt
-            if keep_tok + ut > budget:
-                keep, keep_counts, keep_tok = [], [], 0
-            cur = keep + [u]
-            counts = keep_counts + [ut]
-            cur_tok = keep_tok + ut
-        else:
-            cur.append(u)
-            counts.append(ut)
-            cur_tok += ut
-    if cur:
-        out.append((pos, " ".join(cur), cur_tok))
-    return out
-
-
-_HYBRID_SCHEMA = (
-    "doc_id long, pos int, chunk_id string, content string, n_tokens int"
-)
-
-
 def chunk_hybrid(
     documents: DataFrame,
     chunk_size: int = DEFAULT_CHUNK_SIZE,
@@ -459,6 +484,9 @@ def chunk_hybrid(
     Mirrors docling's HybridChunker semantics (docling_service.py:
     212-236 — tokenizer-counted packing with chunk_overlap carry,
     tokenizer BAAI/bge-small-en-v1.5 per config/settings.py:50).
+    HybridChunker never drops text, so the text after the last
+    sentence is one more unit (chunk_sentence keeps the reference
+    packer's drop semantics).
 
     `token_count` (str -> int, picklable) is the tokenizer seam: pass a
     real tokenizer's count — e.g.
@@ -469,50 +497,29 @@ def chunk_hybrid(
     the engine's deterministic BPE-ish estimator (same regex family as
     token_count_bpe) — the HF tokenizer itself is a non-deterministic
     external dependency, so the oracled registry key stays on the
-    default.
+    default. Chunk counts are the SUM of per-unit counts, exact
+    whenever no token spans the joining whitespace (true of the
+    default estimator and of word/BPE-family tokenizers).
 
     `chunk_size`/`chunk_overlap` are budgets in TOKENS here — the unit
     the reference's HybridChunker uses — unlike the character budgets
     of chunk_fixed/chunk_sentence.
+
+    Invariant (tested): n_tokens <= chunk_size unless a chunk is a
+    single unit that alone exceeds it.
+
+    → (doc_id, pos, chunk_id, content, n_tokens)
     """
     validate_chunk_config(chunk_size, chunk_overlap)
-    # default tokenizer resolves in ONE place: _greedy_pack_tokens
-    count_fn = token_count
+    count_fn = token_count or _bpe_token_count
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for _, r in pdf.iterrows():
-            text = r["__text"] or ""
-            units = [s.strip(ASCII_WS) for s in split_sentences(text)]
-            # HybridChunker never drops text: whatever follows the LAST
-            # sentence match becomes the final unit (chunk_sentence
-            # keeps the reference packer's drop semantics; this operator
-            # models docling's chunker, which is lossless). The last
-            # match ends at the text's last terminator; anchoring there
-            # — not on a leading-run regex — means text starting with a
-            # bare terminator can't re-append the whole document as a
-            # duplicate unit.
-            tail = text[sentence_end(text):].strip(ASCII_WS) if units else ""
-            if tail:
-                units.append(tail)
-            if not units:
-                units = ascii_split(text)
-            if not units:
-                units = [""]
-            for pos, content, n_tok in _greedy_pack_tokens(
-                units, chunk_size, chunk_overlap, count_fn
-            ):
-                rows.append(
-                    (r["doc_id"], pos, f"{r['doc_id']}-{pos}", content, n_tok)
-                )
-        return pd.DataFrame(
-            rows, columns=["doc_id", "pos", "chunk_id", "content", "n_tokens"]
-        )
+    def pack(text: str):
+        units = _python_units(text, tail=True)
+        costs = [count_fn(u) for u in units]
+        for pos, chunk, n_tok in _greedy_pack(units, costs, chunk_size, chunk_overlap):
+            yield pos, " ".join(chunk), n_tok
 
-    prepared = ensure_parallelism(documents, id_col).select(
-        F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("__text")
-    )
-    return prepared.groupBy("doc_id").applyInPandas(pack, _HYBRID_SCHEMA)
+    return _pack_documents(documents, id_col, text_col, "n_tokens", pack)
 
 
 def sentence_udtf_class():

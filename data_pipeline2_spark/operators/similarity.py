@@ -717,10 +717,17 @@ def _kmeans_trajectory(
     # — materialize it once instead of re-running scan+cast per round
     # (the MLlib pattern: iterative fits cache their input working
     # set). Lazy: the init collect triggers it, so no dedicated job.
-    proj = embeddings.select(
-        F.col(id_col).alias("_id"),
-        _as_double(vec_col).alias("_v"),
-    ).transform(materialize_lazy)
+    # Spread over the session's default parallelism first: every fit
+    # stage runs one task per partition of `proj`, and a small input
+    # often arrives AQE-coalesced to a single partition.
+    proj = (
+        embeddings.select(
+            F.col(id_col).alias("_id"),
+            _as_double(vec_col).alias("_v"),
+        )
+        .repartition(embeddings.sparkSession.sparkContext.defaultParallelism)
+        .transform(materialize_lazy)
+    )
 
     init = (
         proj.orderBy("_id")

@@ -1228,14 +1228,17 @@ def readability(
     n_words = F.size(tokens(F.lower(t)))
     n_sents = F.greatest(F.size(sentences(t)), F.lit(1))
     n_syll = F.size(F.regexp_extract_all(F.lower(t), F.lit("[aeiouy]+"), 0))
+    score = (
+        F.lit(206.835)
+        - F.lit(1.015) * (n_words / n_sents)
+        - F.lit(84.6) * (n_syll / n_words)
+    )
+    # round to 4 places as round(x * 1e4) / 1e4 in IEEE doubles, the
+    # DuckDB/C rule: a 4-place round of the double's decimal value
+    # differs where the multiply lands exactly on a tie
+    # (-6899.818749999999 → -6899.8188, not -6899.8187)
     flesch = F.when(
-        n_words > 0,
-        F.round(
-            F.lit(206.835)
-            - F.lit(1.015) * (n_words / n_sents)
-            - F.lit(84.6) * (n_syll / n_words),
-            4,
-        ),
+        n_words > 0, F.round(score * F.lit(1e4), 0) / F.lit(1e4)
     )
     return documents.filter(t.isNotNull()).select(
         F.col(id_col),

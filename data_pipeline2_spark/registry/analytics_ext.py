@@ -21,6 +21,7 @@ from data_pipeline2_spark.registry.ingest_chunk import (
     _jaccard_verify_ctes,
     _lsh_bands_cand_ctes,
     _minhash_mh_ctes,
+    _slices_sql,
 )
 from data_pipeline2_spark.streaming import events as ev
 
@@ -232,15 +233,8 @@ def q_group_topn_sample(spark, sf_dir):
 
 @_register(
     "chunk_dedup",
-    """
-    WITH chunks AS (
-      SELECT doc_id, doc_id::VARCHAR || '-' || i::VARCHAR AS chunk_id,
-             substring(text, CAST(i*100+1 AS INT), 100) AS content
-      FROM (SELECT doc_id, text,
-                   unnest(generate_series(0,
-                      greatest(CAST(ceil(length(text)/100.0) AS BIGINT), 1) - 1)) AS i
-            FROM documents)
-    )
+    f"""
+    WITH chunks AS ({_slices_sql("documents", 100)})
     SELECT sha256(lower(regexp_replace(trim(content, ' '), '\\s+', ' ', 'g')))
              AS content_sha,
            count(*) AS n_chunks,

@@ -6,7 +6,7 @@
   oracle replays every stage as MATERIALIZED CTEs reusing the SAME
   fragment builders the member keys' oracles use (quality SQL, the
   minhash shd/mh/bands/cand/verify chain, the recursive-CC pattern
-  from simhash_dedup_drop, the chunk_sentence bucketing), so a green
+  from simhash_dedup_drop, the chunk_sentence buckets), so a green
   row value-checks the COMPOSITION — inter-stage row accounting
   included — not just each operator solo.
 - `ivf_index_stream`: continuous ANN-index maintenance through the real
@@ -30,6 +30,7 @@ from data_pipeline2_spark.registry.ingest_chunk import (
     _jaccard_verify_ctes,
     _lsh_bands_cand_ctes,
     _minhash_mh_ctes,
+    _sentence_chunks_sql,
 )
 from data_pipeline2_spark.registry.text_sampling import _QUALITY_SQL
 
@@ -122,32 +123,8 @@ def _e2e_sql(
       SELECT * FROM s4
       WHERE doc_id NOT IN (SELECT doc_id FROM clusters WHERE cid <> doc_id)
     ),
-    cbase AS (
-      SELECT doc_id,
-             regexp_extract_all(text, '[^.!?]+[.!?]+') AS sents,
-             CASE WHEN len(trim(text, ' ')) = 0 THEN []
-                  ELSE regexp_split_to_array(trim(text, ' '), '\\s+') END AS toks
-      FROM s5
-    ),
-    cunits AS (
-      SELECT doc_id, unnest(us) AS unit, generate_subscripts(us, 1) AS upos
-      FROM (SELECT doc_id,
-                   CASE WHEN len(sents) > 0
-                        THEN list_transform(sents, s -> trim(s,
-                          ' '||chr(9)||chr(10)||chr(13)||chr(12)||chr(11)))
-                        ELSE toks END AS us
-            FROM cbase)
-    ),
-    cbucket AS (
-      SELECT doc_id,
-             CAST(floor((sum(length(unit) + 1) OVER (PARTITION BY doc_id
-                    ORDER BY upos ROWS UNBOUNDED PRECEDING) - 1)
-                  / {chunk_chars}.0) AS INT) AS pos
-      FROM cunits
-    ),
     chunkn AS (
-      SELECT count(*) AS c
-      FROM (SELECT doc_id, pos FROM cbucket GROUP BY doc_id, pos)
+      SELECT count(*) AS c FROM ({_sentence_chunks_sql("s5", chunk_chars)})
     ),
     sized AS (
       SELECT doc_id,

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from data_pipeline2_spark.operators import serving_e2e
 from data_pipeline2_spark.registry._core import _cos_sql, _register, _t
+from data_pipeline2_spark.registry.ingest_chunk import _sentence_chunks_sql
 
 
 def _hash_embed_ctes(prefix: str, src: str, dim: int = 64) -> str:
@@ -61,32 +62,9 @@ def _chunk_nb_ctes(chunk_chars: int = 500) -> str:
     """CTE fragment: sentence-chunk `documents` at `chunk_chars` →
     `chunks` (doc_id, pos, chunk_id, content) and `nb` (the embeddable
     subset) — the chunk_sentence replay both r11 compositions share."""
-    return f"""cb AS (
-      SELECT doc_id,
-             regexp_extract_all(text, '[^.!?]+[.!?]+') AS sents,
-             CASE WHEN len(trim(text, ' ')) = 0 THEN []
-                  ELSE regexp_split_to_array(trim(text, ' '), '\\s+')
-             END AS toks
-      FROM documents
-    ), cu AS (
-      SELECT doc_id, unnest(us) AS unit, generate_subscripts(us, 1) AS upos
-      FROM (SELECT doc_id,
-                   CASE WHEN len(sents) > 0
-                        THEN list_transform(sents, s -> trim(s,
-                          ' '||chr(9)||chr(10)||chr(13)||chr(12)||chr(11)))
-                        ELSE toks END AS us
-            FROM cb)
-    ), cbk AS (
-      SELECT doc_id, unit, upos,
-             CAST(floor((sum(length(unit) + 1) OVER (PARTITION BY doc_id
-                    ORDER BY upos ROWS UNBOUNDED PRECEDING) - 1)
-                  / {chunk_chars}.0) AS INT) AS pos
-      FROM cu
-    ), chunks AS MATERIALIZED (
-      SELECT doc_id, pos,
-             doc_id::VARCHAR || '-' || pos::VARCHAR AS chunk_id,
-             string_agg(unit, ' ' ORDER BY upos) AS content
-      FROM cbk GROUP BY doc_id, pos
+    return f"""chunks AS MATERIALIZED (
+      SELECT doc_id, pos, chunk_id, content
+      FROM ({_sentence_chunks_sql("documents", chunk_chars)})
     ), nb AS MATERIALIZED (
       -- embeddable = contains a non-whitespace char (the provider's
       -- python strip() blank test; see the embed_provider oracle)
@@ -276,23 +254,14 @@ def q_streaming_search_e2e(spark, sf_dir):
     from pyspark.sql.window import Window
 
     from data_pipeline2_spark.functions.vectors import cosine_to_query
-    from data_pipeline2_spark.operators import chunking, embedding, similarity
+    from data_pipeline2_spark.operators import embedding, similarity
     from data_pipeline2_spark.registry._core import _run_dir
     from data_pipeline2_spark.streaming import stateful
 
     docs = _t(spark, sf_dir, "documents")
     # batch fit: the frozen codebook over the corpus chunk vectors
-    chunks = chunking.chunk_sentence(docs, 500)
-    vecs = embedding.embed_chunks(
-        chunks, text_col="content", id_col="chunk_id"
-    ).select(
-        F.conv(F.substring(F.md5("chunk_id"), 1, 15), 16, 10)
-        .cast("long")
-        .alias("vec_id"),
-        "embedding",
-    )
     cents, _assign = similarity._kmeans_trajectory(
-        vecs, 8, 2, "vec_id", "embedding"
+        stateful.document_vectors(docs, 500), 8, 2, "vec_id", "embedding"
     )
     tmp = _run_dir("streamsearch")
     feed = os.path.join(tmp, "feed")

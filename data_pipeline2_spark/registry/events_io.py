@@ -24,7 +24,11 @@ from data_pipeline2_spark.registry._core import (
 )
 from data_pipeline2_spark.streaming import events as ev
 
-from data_pipeline2_spark.registry.ingest_chunk import _knn_query_vec  # noqa: F401
+from data_pipeline2_spark.registry.ingest_chunk import (  # noqa: F401
+    _knn_query_vec,
+    _python_units_sql,
+    _slices_sql,
+)
 
 @_register(
     "multimodal_meta",
@@ -697,15 +701,8 @@ def q_embed_retry(spark, sf_dir):
 
 @_register(
     "embed_provider",
-    """
-    WITH chunks AS (
-      SELECT doc_id::VARCHAR || '-' || i::VARCHAR AS chunk_id,
-             substring(text, CAST(i*100+1 AS INT), 100) AS content
-      FROM (SELECT doc_id, text,
-                   unnest(generate_series(0,
-                      greatest(CAST(ceil(length(text)/100.0) AS BIGINT), 1) - 1)) AS i
-            FROM documents WHERE doc_id < 50)
-    )
+    f"""
+    WITH chunks AS ({_slices_sql("documents WHERE doc_id < 50", 100)})
     SELECT chunk_id, 'hash64' AS provider, 64 AS dim, 1.0 AS sq_norm
     -- blank = no non-whitespace char (the embedder's python strip()
     -- semantics) — space-only trim() would keep tab-only chunks
@@ -738,15 +735,8 @@ def q_embed_provider(spark, sf_dir):
 
 @_register(
     "embed_incremental",
-    """
-    WITH chunks AS (
-      SELECT doc_id::VARCHAR || '-' || i::VARCHAR AS chunk_id,
-             substring(text, CAST(i*200+1 AS INT), 200) AS content
-      FROM (SELECT doc_id, text,
-                   unnest(generate_series(0,
-                      greatest(CAST(ceil(length(text)/200.0) AS BIGINT), 1) - 1)) AS i
-            FROM documents WHERE doc_id < 60)
-    )
+    f"""
+    WITH chunks AS ({_slices_sql("documents WHERE doc_id < 60", 200)})
     SELECT chunk_id, 'hash64' AS provider, 64 AS dim
     FROM chunks WHERE regexp_replace(content, '\\s', '', 'g') <> ''
     """,
@@ -766,23 +756,10 @@ def q_embed_incremental(spark, sf_dir):
 
 @_register(
     "chunk_sentence_exact",
-    r"""
+    f"""
     WITH RECURSIVE units AS (
-      SELECT doc_id, u.idx, u.unit, length(u.unit) AS ulen
-      FROM (
-        SELECT doc_id,
-          CASE WHEN len(regexp_extract_all(text, '[^.!?]+[.!?]+')) > 0
-               THEN list_transform(regexp_extract_all(text, '[^.!?]+[.!?]+'),
-                                   s -> trim(s, ' '||chr(9)||chr(10)||chr(13)||chr(12)||chr(11)))
-               WHEN len(list_filter(regexp_split_to_array(coalesce(text, ''),
-                        '\s+'), w -> w <> '')) > 0
-               THEN list_filter(regexp_split_to_array(text, '\s+'),
-                                w -> w <> '')
-               ELSE ['']
-          END AS us
-        FROM documents
-      ), LATERAL (SELECT unnest(us) AS unit,
-                         generate_subscripts(us, 1) AS idx) u
+      SELECT doc_id, idx, unit, length(unit) AS ulen
+      FROM ({_python_units_sql("documents")})
     ), step AS (
       SELECT doc_id, idx, unit, ulen, 0 AS pos, ulen AS cur_len
       FROM units WHERE idx = 1

@@ -92,69 +92,97 @@ def q_mime_detect(spark, sf_dir):
 
 
 # ========================================================= chunking (§2.3)
+# The oracle half of the chunk core (operators/chunking.py): one SQL
+# fragment builder per chunking decision, each a query over a relation
+# `src` that has (doc_id, text).
 
-
-@_register(
-    "chunk_fixed",
-    """
-    SELECT doc_id, CAST(i AS INT) AS pos,
-           doc_id::VARCHAR || '-' || i::VARCHAR AS chunk_id,
-           substring(text, CAST(i*100+1 AS INT), 100) AS content
-    FROM (SELECT doc_id, text,
-                 unnest(generate_series(0,
-                    greatest(CAST(ceil(length(text)/100.0) AS BIGINT), 1) - 1)) AS i
-          FROM documents)
-    """,
+# Python str.strip(ASCII_WS) / Spark btrim(s, ASCII_WS): the 6-char set
+_ASCII_WS_SQL = "' '||chr(9)||chr(10)||chr(13)||chr(12)||chr(11)"
+_SENTS_SQL = (
+    "list_transform(regexp_extract_all(text, '[^.!?]+[.!?]+'), "
+    f"s -> trim(s, {_ASCII_WS_SQL}))"
 )
+
+
+def _slices_sql(src: str, size: int, overlap: int = 0) -> str:
+    """chunking.chunk_overlap_slices → (doc_id, pos, chunk_id, content)."""
+    stride = size - overlap
+    return f"""
+      SELECT doc_id, CAST(i AS INT) AS pos,
+             doc_id::VARCHAR || '-' || i::VARCHAR AS chunk_id,
+             substring(text, CAST(i*{stride}+1 AS INT), {size}) AS content
+      FROM (SELECT doc_id, text,
+                   unnest(generate_series(0, greatest(CAST(
+                     ceil((length(text) - {overlap})/{stride}.0) AS BIGINT), 1) - 1)) AS i
+            FROM {src})"""
+
+
+def _sentence_chunks_sql(src: str, size: int) -> str:
+    """chunking.chunk_sentence → (doc_id, pos, chunk_id, content,
+    n_units): trimmed sentence units, else the words of
+    chunking.tokens; bucket = floor((running sum of len + 1 - 1) / size)."""
+    return f"""
+      SELECT doc_id, pos,
+             doc_id::VARCHAR || '-' || pos::VARCHAR AS chunk_id,
+             string_agg(unit, ' ' ORDER BY upos) AS content,
+             CAST(count(*) AS INT) AS n_units
+      FROM (
+        SELECT doc_id, unit, upos,
+               CAST(floor((sum(length(unit) + 1) OVER (PARTITION BY doc_id
+                      ORDER BY upos ROWS UNBOUNDED PRECEDING) - 1)
+                    / {size}.0) AS INT) AS pos
+        FROM (SELECT doc_id, unnest(us) AS unit,
+                     generate_subscripts(us, 1) AS upos
+              FROM (SELECT doc_id,
+                           CASE WHEN len(sents) > 0 THEN sents
+                                WHEN len(trim(text, ' ')) = 0 THEN []
+                                ELSE regexp_split_to_array(trim(text, ' '), '\\s+')
+                           END AS us
+                    FROM (SELECT doc_id, text, {_SENTS_SQL} AS sents
+                          FROM {src}))))
+      GROUP BY doc_id, pos"""
+
+
+def _python_units_sql(src: str, tail: bool = False) -> str:
+    """chunking._python_units → (doc_id, idx, unit), idx from 1: the
+    trimmed sentences (plus, with `tail`, the trimmed text after the
+    last sentence when non-empty), else the non-empty \\s+ words, else
+    ['']. Every match ends on a terminator run, so greedy '.*[.!?]'
+    (dotall) cuts at the same boundary as the last match."""
+    first, tail_col = "sents", ""
+    if tail:
+        first = ("CASE WHEN len(tail) > 0 THEN list_append(sents, tail) "
+                 "ELSE sents END")
+        tail_col = (", trim(regexp_replace(text, '.*[.!?]', '', 's'), "
+                    f"{_ASCII_WS_SQL}) AS tail")
+    return rf"""
+      SELECT doc_id, u.idx, u.unit
+      FROM (
+        SELECT doc_id,
+          CASE WHEN len(sents) > 0 THEN {first}
+               WHEN len(list_filter(regexp_split_to_array(coalesce(text, ''),
+                        '\s+'), w -> w <> '')) > 0
+               THEN list_filter(regexp_split_to_array(text, '\s+'),
+                                w -> w <> '')
+               ELSE ['']
+          END AS us
+        FROM (SELECT doc_id, text, {_SENTS_SQL} AS sents{tail_col}
+              FROM {src})
+      ), LATERAL (SELECT unnest(us) AS unit,
+                         generate_subscripts(us, 1) AS idx) u"""
+
+
+@_register("chunk_fixed", _slices_sql("documents", 100))
 def q_chunk_fixed(spark, sf_dir):
     return chunking.chunk_fixed(_t(spark, sf_dir, "documents"), 100)
 
 
-@_register(
-    "chunk_overlap",
-    """
-    SELECT doc_id, CAST(i AS INT) AS pos,
-           doc_id::VARCHAR || '-' || i::VARCHAR AS chunk_id,
-           substring(text, CAST(i*450+1 AS INT), 500) AS content
-    FROM (SELECT doc_id, text,
-                 unnest(generate_series(0,
-                    greatest(CAST(ceil((length(text) - 50)/450.0) AS BIGINT), 1) - 1)) AS i
-          FROM documents)
-    """,
-)
+@_register("chunk_overlap", _slices_sql("documents", 500, 50))
 def q_chunk_overlap(spark, sf_dir):
     return chunking.chunk_overlap_slices(_t(spark, sf_dir, "documents"), 500, 50)
 
 
-@_register(
-    "chunk_sentence",
-    """
-    WITH base AS (
-      SELECT doc_id,
-             regexp_extract_all(text, '[^.!?]+[.!?]+') AS sents,
-             CASE WHEN len(trim(text, ' ')) = 0 THEN []
-                  ELSE regexp_split_to_array(trim(text, ' '), '\\s+') END AS toks
-      FROM documents
-    ), units AS (
-      SELECT doc_id, unnest(us) AS unit, generate_subscripts(us, 1) AS upos
-      FROM (SELECT doc_id,
-                   CASE WHEN len(sents) > 0
-                        THEN list_transform(sents, s -> trim(s, ' '||chr(9)||chr(10)||chr(13)||chr(12)||chr(11)))
-                        ELSE toks END AS us
-            FROM base)
-    ), bucketed AS (
-      SELECT doc_id, unit, upos,
-             CAST(floor((sum(length(unit) + 1) OVER (PARTITION BY doc_id
-                    ORDER BY upos ROWS UNBOUNDED PRECEDING) - 1) / 500.0) AS INT) AS pos
-      FROM units
-    )
-    SELECT doc_id, pos,
-           doc_id::VARCHAR || '-' || pos::VARCHAR AS chunk_id,
-           string_agg(unit, ' ' ORDER BY upos) AS content,
-           CAST(count(*) AS INT) AS n_units
-    FROM bucketed GROUP BY doc_id, pos
-    """,
-)
+@_register("chunk_sentence", _sentence_chunks_sql("documents", 500))
 def q_chunk_sentence(spark, sf_dir):
     return chunking.chunk_sentence(_t(spark, sf_dir, "documents"), 500)
 
@@ -186,16 +214,8 @@ def q_chunk_markdown(spark, sf_dir):
 
 @_register(
     "chunk_metadata_enrich",
-    """
-    WITH chunks AS (
-      SELECT doc_id, CAST(i AS INT) AS pos,
-             doc_id::VARCHAR || '-' || i::VARCHAR AS chunk_id,
-             substring(text, CAST(i*100+1 AS INT), 100) AS content
-      FROM (SELECT doc_id, text,
-                   unnest(generate_series(0,
-                      greatest(CAST(ceil(length(text)/100.0) AS BIGINT), 1) - 1)) AS i
-            FROM documents)
-    )
+    f"""
+    WITH chunks AS ({_slices_sql("documents", 100)})
     SELECT doc_id, pos, chunk_id, content,
            CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS INT) AS chunk_number,
            CAST(count(*) OVER (PARTITION BY doc_id) AS INT) AS total_chunks,
@@ -210,18 +230,9 @@ def q_chunk_metadata_enrich(spark, sf_dir):
 
 @_register(
     "chunk_fallback",
-    """
-    WITH chunked AS (
-      SELECT doc_id, CAST(i AS INT) AS pos,
-             doc_id::VARCHAR || '-' || i::VARCHAR AS chunk_id,
-             substring(text, CAST(i*100+1 AS INT), 100) AS content,
-             FALSE AS is_fallback
-      FROM (SELECT doc_id, text,
-                   unnest(generate_series(0,
-                      greatest(CAST(ceil(length(text)/100.0) AS BIGINT), 1) - 1)) AS i
-            FROM documents WHERE doc_id % 5 <> 0)
-    )
-    SELECT * FROM chunked
+    f"""
+    SELECT *, FALSE AS is_fallback
+    FROM ({_slices_sql("documents WHERE doc_id % 5 <> 0", 100)})
     UNION ALL
     SELECT doc_id, 0 AS pos, doc_id::VARCHAR || '-0' AS chunk_id,
            text AS content, TRUE AS is_fallback
@@ -258,30 +269,13 @@ def q_base64_roundtrip(spark, sf_dir):
 
 @_register(
     "chunk_count_by_strategy",
-    """
+    f"""
     SELECT 'fixed' AS strategy,
            CAST(sum(greatest(CAST(ceil(length(text)/100.0) AS BIGINT), 1)) AS BIGINT) AS chunks
     FROM documents
     UNION ALL
-    SELECT 'sentence' AS strategy, CAST(count(*) AS BIGINT) AS chunks FROM (
-      WITH base AS (
-        SELECT doc_id,
-               regexp_extract_all(text, '[^.!?]+[.!?]+') AS sents,
-               CASE WHEN len(trim(text, ' ')) = 0 THEN []
-                    ELSE regexp_split_to_array(trim(text, ' '), '\\s+') END AS toks
-        FROM documents
-      ), units AS (
-        SELECT doc_id, unnest(us) AS unit, generate_subscripts(us, 1) AS upos
-        FROM (SELECT doc_id, CASE WHEN len(sents) > 0
-                                  THEN list_transform(sents, s -> trim(s, ' '||chr(9)||chr(10)||chr(13)||chr(12)||chr(11)))
-                                  ELSE toks END AS us FROM base)
-      )
-      SELECT DISTINCT doc_id, pos FROM (
-        SELECT doc_id,
-               CAST(floor((sum(length(unit) + 1) OVER (PARTITION BY doc_id
-                    ORDER BY upos ROWS UNBOUNDED PRECEDING) - 1) / 500.0) AS INT) AS pos
-        FROM units)
-    )
+    SELECT 'sentence' AS strategy, CAST(count(*) AS BIGINT) AS chunks
+    FROM ({_sentence_chunks_sql("documents", 500)})
     """,
 )
 def q_chunk_count_by_strategy(spark, sf_dir):
@@ -299,13 +293,10 @@ def q_chunk_count_by_strategy(spark, sf_dir):
 
 @_register(
     "chunk_size_histogram",
-    """
-    SELECT CAST(floor(length(substring(text, CAST(i*100+1 AS INT), 100)) / 20.0) AS BIGINT) AS bucket,
+    f"""
+    SELECT CAST(floor(length(content) / 20.0) AS BIGINT) AS bucket,
            count(*) AS cnt
-    FROM (SELECT doc_id, text,
-                 unnest(generate_series(0,
-                    greatest(CAST(ceil(length(text)/100.0) AS BIGINT), 1) - 1)) AS i
-          FROM documents)
+    FROM ({_slices_sql("documents", 100)})
     GROUP BY 1
     """,
 )
@@ -337,47 +328,7 @@ def q_chunk_size_histogram(spark, sf_dir):
     """,
 )
 def q_chunk_token_budget(spark, sf_dir):
-    # tokenizer-aware chunking with a deterministic token estimator
-    # (ceil(len/4) ≈ BPE tokens): pack words into <=64-token chunks.
-    # Same running-sum bucket scheme as chunk_sentence, budgeted in
-    # tokens instead of characters — the LLM-context-window chunker.
-    docs = _t(spark, sf_dir, "documents")
-    from data_pipeline2_spark.functions.text import tokens as toks_f
-    from data_pipeline2_spark.plans.partitioning import ensure_parallelism
-
-    docs = ensure_parallelism(docs, "doc_id")
-    exploded = docs.select(
-        "doc_id", F.posexplode(toks_f(F.col("text"))).alias("i", "w")
-    )
-    est = F.ceil(F.length("w") / 4.0).cast("long")
-    w_cum = (
-        Window.partitionBy("doc_id")
-        .orderBy("i")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    bucketed = exploded.withColumn(
-        "pos", F.floor((F.sum(est).over(w_cum) - 1) / F.lit(64.0)).cast("int")
-    )
-    return (
-        bucketed.groupBy("doc_id", "pos")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "w"))),
-                    lambda s: s["w"],
-                ),
-                " ",
-            ).alias("content"),
-            F.sum(est).alias("est_tokens"),
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.concat_ws("-", "doc_id", "pos").alias("chunk_id"),
-            "content",
-            "est_tokens",
-        )
-    )
+    return chunking.chunk_token_budget(_t(spark, sf_dir, "documents"), 64)
 
 
 @_register(

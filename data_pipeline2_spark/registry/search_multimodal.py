@@ -28,6 +28,7 @@ from data_pipeline2_spark.registry.ingest_chunk import (
     _knn_query_vec,
     _lsh_bands_cand_ctes,
     _minhash_mh_ctes,
+    _python_units_sql,
 )
 
 def _hybrid_oracle_sql(budget: int = 60, overlap: int = 12) -> str:
@@ -36,38 +37,13 @@ def _hybrid_oracle_sql(budget: int = 60, overlap: int = 12) -> str:
     idx, chunk pos, chunk start); the carry start is found by counting
     prefix values below P[idx]-overlap (the longest suffix within the
     overlap budget), dropped when carrying would overflow the next
-    chunk — step-for-step the _greedy_pack_tokens loop."""
+    chunk — step-for-step the chunking._greedy_pack loop."""
     return rf"""
     WITH RECURSIVE units AS MATERIALIZED (
-      SELECT doc_id, u.idx, u.unit,
-             len(regexp_extract_all(lower(u.unit),
+      SELECT doc_id, idx, unit,
+             len(regexp_extract_all(lower(unit),
                  '[a-z]{{1,4}}|[0-9]+|[^a-z0-9\s]')) AS t
-      FROM (
-        SELECT doc_id,
-          CASE WHEN len(sents) > 0 THEN
-                 CASE WHEN len(tail) > 0 THEN list_append(sents, tail)
-                      ELSE sents END
-               WHEN len(list_filter(regexp_split_to_array(coalesce(text, ''),
-                        '\s+'), w -> w <> '')) > 0
-               THEN list_filter(regexp_split_to_array(text, '\s+'),
-                                w -> w <> '')
-               ELSE ['']
-          END AS us
-        FROM (
-          -- tail = text after the LAST sentence match; every match ends
-          -- on a terminator run, so greedy '.*[.!?]' (dotall) lands on
-          -- the same boundary; trim's explicit char set mirrors
-          -- Python str.strip()
-          SELECT doc_id, text,
-                 list_transform(regexp_extract_all(text, '[^.!?]+[.!?]+'),
-                                s -> trim(s, ' '||chr(9)||chr(10)||chr(13)||chr(12)||chr(11))) AS sents,
-                 trim(regexp_replace(text, '.*[.!?]', '', 's'),
-                      ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11)
-                 ) AS tail
-          FROM documents
-        )
-      ), LATERAL (SELECT unnest(us) AS unit,
-                         generate_subscripts(us, 1) AS idx) u
+      FROM ({_python_units_sql("documents", tail=True)})
     ), pref AS MATERIALIZED (
       SELECT doc_id, idx, unit, t,
              sum(t) OVER (PARTITION BY doc_id ORDER BY idx) AS P

@@ -326,11 +326,21 @@ def document_index_frame(
     `.join(vecs, "vec_id")` back-join, which re-executed the
     chunk→embed lineage a second time per micro-batch and added a
     vec_id shuffle the budget gates never saw."""
-    from data_pipeline2_spark.operators import chunking, embedding
     from data_pipeline2_spark.operators.similarity import ivf_cell_assign
 
-    chunks = chunking.chunk_sentence(batch_df, chunk_chars)
-    vecs = embedding.embed_chunks(
+    vecs = document_vectors(batch_df, chunk_chars, dim)
+    return ivf_cell_assign(vecs, cents, keep_cols=("embedding",))
+
+
+def document_vectors(documents, chunk_chars: int = 500, dim: int = 64):
+    """The document index's chunk → vector stage: sentence chunks,
+    hash-embedded, keyed by the chunk id's 60-bit md5 prefix →
+    (vec_id, embedding). The batch codebook fit and every streamed
+    micro-batch read the same vectors through it."""
+    from data_pipeline2_spark.operators import chunking, embedding
+
+    chunks = chunking.chunk_sentence(documents, chunk_chars)
+    return embedding.embed_chunks(
         chunks, text_col="content", id_col="chunk_id", dim=dim
     ).select(
         F.conv(F.substring(F.md5("chunk_id"), 1, 15), 16, 10)
@@ -338,7 +348,6 @@ def document_index_frame(
         .alias("vec_id"),
         "embedding",
     )
-    return ivf_cell_assign(vecs, cents, keep_cols=("embedding",))
 
 
 def ingest_documents_stream(

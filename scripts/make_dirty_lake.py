@@ -10,7 +10,12 @@ zero non-ASCII in every sf* table, measured 2026-08-15):
   Unicode-whitespace-ONLY (NBSP/thin-space/ideographic-space: blank
   under Python str.strip(), NON-blank under JVM/RE2 \\s — the ADVICE
   r8 divergence class; the engine pins blank to ASCII whitespace, so
-  these rows must flow through every text operator as non-blank);
+  these rows must flow through every text operator as non-blank),
+  ~10% given sentence terminators (every other lake text has none,
+  so no other document reaches the sentence-unit path): runs of
+  '.', '!' and '?', a leading terminator run, sentences that start
+  with digits, NBSP on both sides of a terminator, and a tail with
+  no terminator;
 - documents.lang: ~5% NULL;
 - events.value: ~7% NULL (SQL null-skipping aggregate semantics);
 - events.event_type: ~4% NULL (group keys: NULL is its own group in
@@ -94,6 +99,13 @@ def build(out_dir: str) -> None:
                    WHEN doc_id % 19 = 7 THEN
                      replace(replace(text, ' the ', '  the\t'), ' and ',
                              concat(chr(10), 'and  '))
+                   WHEN doc_id % 7 = 4 THEN
+                     '?! ' || array_to_string(list_transform(
+                       string_split(text, ' '), (w, i) -> CASE i % 11
+                         WHEN 0 THEN w || '...'
+                         WHEN 4 THEN w || chr(160) || '!?' || chr(160)
+                         WHEN 7 THEN w || '. ' || (i * 7)::VARCHAR
+                         ELSE w END), ' ') || ' no terminator here'
                    ELSE text
                  END AS text,
                  CASE WHEN doc_id % 23 = 11 THEN NULL ELSE lang END AS lang,
@@ -126,13 +138,15 @@ def build(out_dir: str) -> None:
                    THEN 1 ELSE 0 END),
                sum(CASE WHEN regexp_matches(coalesce(text,''),
                    '[^\\x00-\\x7F]') THEN 1 ELSE 0 END),
-               sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END)
+               sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END),
+               sum(CASE WHEN regexp_matches(coalesce(text, ''), '[.!?]')
+                   THEN 1 ELSE 0 END)
         FROM '{out_dir}/documents.parquet'
         """
     ).fetchone()
     print(
         f"documents dirt: null_text={stats[0]} blank={stats[1]} "
-        f"non_ascii={stats[2]} null_lang={stats[3]}"
+        f"non_ascii={stats[2]} null_lang={stats[3]} terminated={stats[4]}"
     )
 
 

@@ -82,6 +82,22 @@ def test_sentence_exact_greedy_is_maximal(spark, docs):
             assert len(cur) + 1 + len(first_next_unit) > 120
 
 
+@pytest.mark.driver
+def test_sentence_units_trimmed_keep_leading_digits(spark):
+    """Sentence units are the regex sentences stripped of ASCII
+    whitespace only: no leading blank, no digit lost (a unit trimmed by
+    its array index would lose a leading index digit), NBSP kept."""
+    text = "Alpha one. 12 beta two! 1 Gamma three?\xa0 0 delta. tail"
+    docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    units = ["Alpha one.", "12 beta two!", "1 Gamma three?", "\xa0 0 delta."]
+    for size, contents in ((500, [" ".join(units)]), (1, units)):
+        out = chunking.chunk_sentence(docs, size).orderBy("pos").collect()
+        assert [r.content for r in out] == contents
+        assert [r.n_units for r in out] == [len(units) // len(contents)] * len(
+            contents
+        )
+
+
 def test_sentence_bucket_reconstructs_text(spark, docs):
     out = chunking.chunk_sentence(docs.filter(F.col("doc_id") == 4), 100).toPandas()
     joined = " ".join(out.sort_values("pos")["content"])

@@ -18,7 +18,7 @@ from data_pipeline2_spark.functions.text import (
     sentence_end,
     split_sentences,
 )
-from data_pipeline2_spark.operators.chunking import _greedy_pack
+from data_pipeline2_spark.operators.chunking import _bpe_token_count, _greedy_pack
 from data_pipeline2_spark.operators.embedding import hash_embed_one
 
 words = st.lists(
@@ -29,7 +29,13 @@ words = st.lists(
 @given(words, st.integers(min_value=5, max_value=200))
 @settings(max_examples=200, deadline=None)
 def test_greedy_pack_properties(units, chunk_size):
-    out = _greedy_pack(units, chunk_size)
+    # character packing: cost len + 1, budget chunk_size + 1, no overlap
+    out = [
+        (pos, " ".join(chunk), len(chunk))
+        for pos, chunk, _ in _greedy_pack(
+            units, [len(u) + 1 for u in units], chunk_size + 1, 0
+        )
+    ]
     # completeness: every unit appears exactly once, in order
     flat = [w for _, content, _ in out for w in content.split(" ") if w != ""]
     assert flat == [u for u in units if u != ""] or units == flat or flat == units
@@ -142,13 +148,12 @@ def test_greedy_pack_tokens_properties(units, budget):
     """Token packer invariants for any unit list: every chunk within
     budget unless it is a single oversized unit; all units appear in
     order; n_tokens is the exact count of the packed content."""
-    from data_pipeline2_spark.operators.chunking import (
-        _bpe_token_count,
-        _greedy_pack_tokens,
-    )
-
     overlap = budget // 4
-    out = _greedy_pack_tokens(units, budget, overlap)
+    costs = [_bpe_token_count(u) for u in units]
+    out = [
+        (pos, " ".join(chunk), n_tok)
+        for pos, chunk, n_tok in _greedy_pack(units, costs, budget, overlap)
+    ]
     assert out, "at least one chunk"
     assert [p for p, _, _ in out] == list(range(len(out)))
     for _, content, n_tok in out:

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from data_pipeline2_spark.operators import textanalysis
 
 
@@ -266,6 +268,35 @@ def test_readability_flesch_values(spark):
     assert abs(r1.flesch - expected) < 1e-9
     r2 = out[2]
     assert r2.n_sentences == 1  # punctuation-free floor
+
+
+@pytest.mark.driver
+def test_readability_rounds_ties_like_the_oracle(spark):
+    """flesch rounds as round(x * 1e4) / 1e4 in doubles, the oracle's
+    rule, where the multiply lands exactly on a tie; a 4-place round of
+    the double's decimal value gives the other neighbour on both."""
+    import duckdb
+
+    from data_pipeline2_spark import registry
+    from data_pipeline2_spark.operators.textanalysis import readability
+
+    rows = [
+        # 1 word, 4 sentences, 84 syllables: -6899.818749999999
+        (1, ("ba" * 21 + ".") * 4),
+        # 32 words, 2 sentences, 1 syllable: 187.95125 (repr)
+        (2, "b " * 30 + "b. a."),
+    ]
+    got = {r.doc_id: r.flesch for r in readability(_docs(spark, rows)).collect()}
+    assert got == {1: -6899.8188, 2: 187.9512}
+    con = duckdb.connect()
+    con.register("documents_df", _docs(spark, rows).toPandas())
+    con.execute("CREATE VIEW documents AS SELECT * FROM documents_df")
+    oracle = dict(
+        con.execute(
+            f"SELECT doc_id, flesch FROM ({registry.oracle_sql()['readability']})"
+        ).fetchall()
+    )
+    assert got == oracle
 
 
 def test_tfidf_top_terms_builds_its_plan_without_a_spark_job(spark):
